@@ -24,7 +24,7 @@ Algorithm, per merge round, entirely declarative (no driver collect):
 4. Each round eagerly localCheckpoints the small vocabulary relation
    (``materialize=True``): a round references its input twice (pair
    counts + the carried repr), so the un-truncated logical plan doubles
-   per round — the dedup_clusters_star lineage lesson.
+   per round — the same lineage cut dedup_clusters makes per round.
    ``materialize=False`` keeps the full lineage inspectable for plan
    pins.
 

@@ -100,10 +100,6 @@ def shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def distinct_shingles(text: Column, n: int = 3) -> Column:
-    return F.array_distinct(shingles(text, n))
-
-
 def exact_dedup(
     docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
 ) -> DataFrame:
@@ -424,204 +420,111 @@ def dedup_clusters(
     *,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    max_iters: int = 20,
+    max_iters: int = 30,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Cluster resolution: connected components over the candidate-pair
     graph → (doc_id, cluster_id), where cluster_id is the MIN doc id in
     the component — the canonical keeper. This is the step between
     pair generation and dedup decisions: near-dup pairs are transitive
     in practice (A≈B, B≈C ⇒ one boilerplate family), so keep-one-per-
-    cluster needs components, not pairs.
+    cluster needs components, not pairs. Self-pairs add no edge.
 
-    HashMin label propagation: every node repeatedly takes the min label
-    among itself and its neighbors; converges in O(component diameter)
-    rounds (near-dup clusters are shallow — most are stars around one
-    template). Each round is one join + one partial-aggregatable groupBy
-    over the EDGE relation only (never the corpus), and the driver reads
-    one scalar (changed-label count) per round for early stop — no data
-    through the driver. For adversarial long-chain graphs the classic
-    large-star/small-star alternation drops rounds to O(log n) with the
-    same join/groupBy shape.
+    Large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"). Edges are directed child →
+    parent with child > parent. Large-star rewires every node's larger
+    neighbors to its neighborhood min; small-star rewires every node and
+    its smaller neighbors to the min of that set. Both preserve
+    connectivity, and together they contract paths by pointer doubling:
+    O(log n) rounds on any graph, a long chain included, where label
+    propagation needs O(diameter).
 
-    Exact integer semantics — the DuckDB oracle's recursive-CTE
-    transitive closure reproduces cluster ids bit-for-bit."""
-    edges = pairs.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    # Re-partition by src AFTER the distinct, BEFORE the cache (r17):
-    # the distinct leaves the cached edges hash-partitioned on
-    # (src, dst), but every round joins on src alone — so every round
-    # paid a fresh exchange of the (unchanging) edge relation. Cached
-    # hash(src) partitioning satisfies the join requirement once and
-    # for all; only the (shrinking) label relation shuffles per round.
-    edges = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    Stop test: a round's output is a depth-1 star forest — every child
+    has exactly one parent and no parent is a child. Since edges point
+    from larger to smaller ids, each star is then one whole component
+    rooted at its min id, so the test is exact, and the labels are the
+    stars plus the roots labelling themselves. One per-node aggregate
+    over the round's output computes both the test and those labels.
+
+    Raises ``RuntimeError`` if ``max_iters`` rounds do not reach a star
+    forest (at 30, ≈ log₂-safe for 2³⁰-node chains, that means a bug,
+    not a big graph). ``stats``, if given, records ``{"rounds": n}``.
+
+    Each round is a handful of shuffles over the EDGE relation only
+    (never the corpus) and collects one scalar. Exact
+    integer semantics — the DuckDB oracle's recursive-CTE transitive
+    closure reproduces cluster ids bit-for-bit."""
+    # checkpointed too: round 1 reads its input four times, and an uncut
+    # pair-generation plan would run once per read
+    stars = (
+        pairs.select(
+            F.greatest(src_col, dst_col).alias("u"),
+            F.least(src_col, dst_col).alias("v"),
         )
-        .distinct()
-    )
-    edges = spread_by(edges, "src").cache()
-    # localCheckpoint (not cache): each round's plan references labels
-    # twice (join + union), so lineage grows ~3× per round and by the
-    # round cap the ANALYZER, not execution, dominates — checkpointing
-    # keeps every round planning against a leaf relation. (edges is
-    # referenced every round too but its lineage stays flat; cache is
-    # right there.) LAZY checkpoint: the convergence aggregate right
-    # below is the materializing action, so each round costs ONE Spark
-    # job (an eager checkpoint + a separate aggregate was two — at
-    # O(diameter) rounds the per-round job overhead is the loop's wall).
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("label", F.col("doc"))
+        .filter(F.col("u") != F.col("v"))
         .localCheckpoint(eager=False)
     )
-    # Convergence check: labels only ever decrease (min-propagation), so
-    # the label sum strictly decreases iff any node changed — one scalar
-    # aggregate per round instead of a new-vs-old join + count (halves
-    # the per-round job count; exact BIGINT arithmetic).
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    # ONE propagation hop per materialized round — deliberately. The
-    # r17 pass tried fusing TWO HashMin hops per lazily-checkpointed
-    # round (halve the job count, same fixpoint — min-propagation is
-    # monotone with a unique fixpoint, so any schedule agrees) and
-    # measured it SLOWER on interleaved A/B minima:
-    # dedup_cluster_audit +13.0%, pipeline_dedup_apply +2.9%,
-    # mm_frame_dedup +2.5% (dedup_clusters_star, untouched control,
-    # −2.5% = the noise band). Near-dup graphs are shallow stars that
-    # converge in ~1-2 hops, so the fused second hop re-shuffles the
-    # edge relation for nothing on most rounds — per-round job
-    # scheduling is cheaper than a wasted edge join. Reverted.
-    for _ in range(max_iters):
-        prop = edges.join(
-            labels, edges["src"] == labels["doc"]
-        ).select(F.col("dst").alias("doc"), F.col("label"))
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("doc")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    return labels.select(
-        F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+    no_parent = F.lit(None).cast(stars.schema["v"].dataType)
+    by_u = Window.partitionBy("u")
 
-
-def dedup_clusters_star(
-    pairs: DataFrame,
-    *,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iters: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components by large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the adversarial-graph escape hatch for :func:`dedup_clusters`.
-
-    HashMin propagates labels one hop per round: O(component diameter)
-    rounds. Near-dup clusters are shallow stars, so that's usually 2-3 —
-    but a pathological chain (A≈B≈C≈… boilerplate drift) needs
-    diameter rounds and HashMin's ``max_iters`` cap turns that into
-    silently wrong labels. Star alternation contracts paths by pointer
-    doubling instead: each round rewires every node to its current
-    local minimum, halving (at least) the remaining depth ⇒ O(log n)
-    rounds with the SAME per-round shape (one join + one
-    partial-aggregatable groupBy over the edge relation only).
-
-    Same contract as :func:`dedup_clusters`: returns
-    (doc_id, cluster_id = min doc id in the component), exact integer
-    semantics, identical output. Raises if ``max_iters`` rounds don't
-    reach the fixpoint (at 30 ≈ log₂-safe for 2³⁰-node chains, that
-    means a bug, not a big graph). ``stats``, if given, records
-    ``{"rounds": n}`` for convergence tests.
-    """
-    # Directed convention between phases (paper): large-star consumes
-    # symmetric edges and emits (big → its neighborhood min); small-star
-    # consumes big→small edges and rewires each star's members to the
-    # star's min. Fixpoint = small-star output stable = star graphs
-    # child→root.
-    edges = pairs.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).filter(F.col("u") != F.col("v"))
+    def emit(*edges: tuple[Column, Column]) -> Column:
+        # one (u, v) output row per (child, parent) pair of columns
+        return F.explode(
+            F.array(*[F.struct(c.alias("u"), p.alias("v")) for c, p in edges])
+        ).alias("e")
 
     def large_star(e: DataFrame) -> DataFrame:
+        # m = min of u and all its neighbors; every larger neighbor → m
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        m = m.select("u", F.least("u", "mv").alias("m"))
+        m = F.least("u", F.min("v").over(by_u))
         return (
-            sym.join(m, "u")
+            sym.select("u", "v", m.alias("m"))
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
         )
 
     def small_star(e: DataFrame) -> DataFrame:
-        # input edges all have u > v; m = min of u's small neighborhood
-        m = e.groupBy("u").agg(F.min("v").alias("m"))
-        rewired = (
-            e.join(m, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        # every edge has u > v; m = min of u's smaller neighbors. Emit
+        # (v → m) and (u → m); the v == m case is a self-edge, dropped.
+        m = F.min("v").over(by_u)
+        return (
+            e.select("u", "v", m.alias("m"))
+            .select(emit((F.col("v"), F.col("m")), (F.col("u"), F.col("m"))))
+            .select("e.*")
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        rooted = m.select("u", F.col("m").alias("v"))
-        return rewired.union(rooted).distinct()
 
-    # big→small orientation for the first small-star round.
-    # localCheckpoint (not cache) each round: one round references its
-    # input ~12× (unions + self-aggregations on both stars), so the
-    # LOGICAL plan grows ~12× per round — cache truncates execution but
-    # not plan analysis, and by round ~8 the analyzer itself is the
-    # bottleneck (minutes on a 256-node chain). Checkpointing cuts the
-    # lineage so every round plans against a leaf relation. LAZY
-    # checkpoint: the convergence count below materializes it, so each
-    # round is ONE job (eager + count was two per round).
-    stars = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct().localCheckpoint(eager=False)
-
-    # Convergence: the round transform T = small∘large is deterministic,
-    # so set-equality of consecutive outputs is an EXACT fixpoint test
-    # (s = T(s) ⇒ stable forever): count match + empty one-sided
-    # exceptAll. One extra edge-relation job per round, and rounds are
-    # O(log n) — cheaper than risking a false early stop.
-    prev_cnt = stars.count()
-    rounds = 0
+    # localCheckpoint each round: a round references its input several
+    # times, so an uncut logical plan grows geometrically and by round
+    # ~8 the analyzer itself is the bottleneck. LAZY checkpoints: the
+    # stop test's collect is the action that materializes both the
+    # round's stars and its per-node aggregate — one action per round.
     for rounds in range(1, max_iters + 1):
-        new_stars = small_star(large_star(stars)).localCheckpoint(
-            eager=False
+        stars = small_star(large_star(stars)).localCheckpoint(eager=False)
+        # per node: its (min) parent and whether it breaks the forest —
+        # more than one parent, or a child that is also a parent
+        roles = stars.select(
+            emit((F.col("u"), F.col("v")), (F.col("v"), no_parent))
+        ).select("e.*")
+        n_parents = F.count("v")
+        off_star = (n_parents > 1) | ((n_parents == 1) & (F.count("*") > 1))
+        nodes = (
+            roles.groupBy("u")
+            .agg(F.min("v").alias("v"), off_star.alias("off_star"))
+            .localCheckpoint(eager=False)
         )
-        cur_cnt = new_stars.count()
-        converged = (
-            cur_cnt == prev_cnt
-            and new_stars.exceptAll(stars).limit(1).count() == 0
-        )
-        stars = new_stars
-        if converged:
+        if nodes.agg(F.count_if("off_star")).collect()[0][0] == 0:
             break
-        prev_cnt = cur_cnt
     else:
         raise RuntimeError(
             f"star alternation did not converge in {max_iters} rounds"
         )
     if stats is not None:
         stats["rounds"] = rounds
-
-    # stars is child→root; roots label themselves
-    roots = stars.select(F.col("v").alias("u")).distinct().withColumn(
-        "v", F.col("u")
+    return nodes.select(
+        F.col("u").alias("doc_id"), F.coalesce("v", "u").alias("cluster_id")
     )
-    labels = stars.unionByName(roots).groupBy("u").agg(
-        F.min("v").alias("cluster_id")
-    )
-    out = labels.select(F.col("u").alias("doc_id"), "cluster_id")
-    return out
 
 
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")

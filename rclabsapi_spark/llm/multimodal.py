@@ -1086,12 +1086,7 @@ def resize_image(payload: bytes, *, target_w: int, target_h: int) -> bytes:
     return decode_image_stub(b)
 
 
-def phash_clusters(
-    pairs: DataFrame,
-    *,
-    frame_mod: int = 16,
-    max_iters: int = 20,
-) -> DataFrame:
+def phash_clusters(pairs: DataFrame, *, frame_mod: int = 16) -> DataFrame:
     """Perceptual frame clusters: connected components over the
     near-dup pair graph (``phash_near_dup_pairs`` output — image or
     any banded perceptual relation with the doc/frame pair columns),
@@ -1102,23 +1097,20 @@ def phash_clusters(
 
     Units pack into one BIGINT (doc_id · frame_mod + frame_idx;
     ``frame_idx < frame_mod`` is the declared contract, matching the
-    fixture's n_frames) so the shared HashMin machinery
-    (llm.dedup.dedup_clusters — edge-relation joins only, O(diameter)
-    rounds, one scalar per round through the driver) applies
-    unchanged; labels unpack back to (keeper_doc_id,
-    keeper_frame_idx) = the lexicographic MIN unit of the family.
-    Exact integer semantics end-to-end — a SQL oracle's recursive-CTE
-    closure reproduces the labels bit-for-bit (the
-    dedup_clusters_star precedent)."""
+    fixture's n_frames) so the engine's one connected-components
+    operator (llm.dedup.dedup_clusters — edge-relation shuffles only,
+    O(log n) rounds, raises at its round cap) applies unchanged;
+    labels unpack back to (keeper_doc_id, keeper_frame_idx) = the
+    lexicographic MIN unit of the family. Exact integer semantics
+    end-to-end — a SQL oracle's recursive-CTE closure reproduces the
+    labels bit-for-bit, as it does for the dedup_clusters queries."""
     from rclabsapi_spark.llm.dedup import dedup_clusters
 
     packed = pairs.select(
         (F.col("doc_id_a") * frame_mod + F.col("frame_idx_a")).alias("ua"),
         (F.col("doc_id_b") * frame_mod + F.col("frame_idx_b")).alias("ub"),
     )
-    cc = dedup_clusters(
-        packed, src_col="ua", dst_col="ub", max_iters=max_iters
-    )
+    cc = dedup_clusters(packed, src_col="ua", dst_col="ub")
     return cc.select(
         F.floor(F.col("doc_id") / frame_mod).cast("long").alias("doc_id"),
         (F.col("doc_id") % frame_mod).cast("int").alias("frame_idx"),

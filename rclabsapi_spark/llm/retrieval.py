@@ -297,8 +297,8 @@ def mmr_rerank_df(
     derive from bit-identical folds, so every engine picks the same
     sequence (ties break on the key). Each round references the
     remaining relation twice; ``materialize=True`` checkpoints per
-    round to truncate the doubling lineage (the bpe_merges /
-    dedup_clusters_star lesson), ``materialize=False`` keeps the plan
+    round to truncate the doubling lineage (as bpe_merges and
+    dedup_clusters do), ``materialize=False`` keeps the plan
     inspectable."""
     from rclabsapi_spark.llm.similarity import _as_double, cosine
 

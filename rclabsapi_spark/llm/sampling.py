@@ -306,43 +306,6 @@ def temperature_sample(
     return joined.filter(keep).drop("_rate")
 
 
-def cluster_safe_split(
-    df: DataFrame,
-    clusters: DataFrame,
-    *,
-    key_col: str,
-    cluster_col: str = "cluster_id",
-    val_pct: float,
-    test_pct: float,
-    salt: str = "",
-) -> DataFrame:
-    """Near-dup-safe train/val/test assignment: rows are bucketed by
-    their CLUSTER KEEPER id (falling back to their own key when
-    unclustered), so every member of a near-dup cluster lands in the
-    same split — the contamination class plain per-doc splitting can't
-    prevent (train/val "different" docs that are the same boilerplate).
-    Composes dedup_clusters' output with split_assign's thresholds;
-    membership stays a pure function of (salt, keeper id).
-
-    One left equi-join of the (small) cluster relation onto the corpus
-    scan (AQE picks broadcast vs shuffle), then the codegen'd bucket
-    CASE — no extra shuffle beyond the join."""
-    cl = clusters.select(
-        F.col(key_col).alias("__k"), F.col(cluster_col).alias("__c")
-    )
-    joined = df.join(cl, df[key_col] == cl["__k"], "left").drop("__k")
-    eff = F.coalesce(F.col("__c"), F.col(key_col))
-    b = hash_bucket(eff, salt=salt)
-    t_val = pct_threshold(val_pct)
-    t_test = pct_threshold(val_pct + test_pct)
-    split = (
-        F.when(b < F.lit(t_val), F.lit("val"))
-        .when(b < F.lit(t_test), F.lit("test"))
-        .otherwise(F.lit("train"))
-    )
-    return joined.withColumn("split", split).drop("__c")
-
-
 def dsir_logweights(
     docs: DataFrame,
     *,

@@ -1,8 +1,8 @@
 """Graph analytics over relation-derived edge lists: degree-oriented
 triangle counting and fixed-iteration weighted PageRank.
 
-These extend the connected-components family (llm/dedup.py's HashMin and
-large-star/small-star) with the other two staple distributed graph
+These extend connected components (llm/dedup.py's dedup_clusters,
+large-star/small-star alternation) with the other two staple distributed graph
 kernels. Reference parity: the reference stores entity relationships
 relationally (schema.sql FKs) and walks them driver-side; here the
 walks are joins.
@@ -20,7 +20,7 @@ Scale posture:
   MLlib/Pregel pattern with per-iteration cost O(edges). Intended for
   aggregated graphs (type transitions, cluster adjacency); for
   billion-edge graphs swap in localCheckpoint per round exactly as
-  dedup_clusters_star does.
+  dedup_clusters does.
 """
 
 from __future__ import annotations

@@ -270,10 +270,10 @@ FROM reach GROUP BY src
 @query("dedup_clusters", _CLUSTERS_ORACLE)
 def q_dedup_clusters(spark, sf_dir):
     """Cluster resolution: connected components over verified near-dup
-    pairs (jaccard ≥ 0.5), cluster id = min doc id (the keeper). HashMin
-    label propagation — the oracle's recursive transitive closure is the
-    semantic spec; the engine converges in O(diameter) join+groupBy
-    rounds over the edge relation only."""
+    pairs (jaccard ≥ 0.5), cluster id = min doc id (the keeper).
+    Large-star/small-star alternation with an exact star-forest stop,
+    O(log n) rounds over the edge relation only; the oracle's recursive
+    transitive closure is the semantic spec. llm/dedup.py::dedup_clusters."""
     from rclabsapi_spark.llm.dedup import dedup_clusters
 
     pairs = lsh_candidate_pairs(
@@ -287,22 +287,11 @@ def q_dedup_clusters(spark, sf_dir):
 
 @query("dedup_clusters_star", _CLUSTERS_ORACLE, bench=True)
 def q_dedup_clusters_star(spark, sf_dir):
-    """Same cluster resolution as `dedup_clusters`, computed by
-    large-star/small-star alternation (Kiveris et al.) — O(log n)
-    rounds instead of O(diameter), the safe choice when the candidate
-    graph's shape is unknown (HashMin's round cap silently mislabels
-    long chains; the star variant raises instead,
-    tests/test_cc_star.py). Identical oracle: the output contract is
-    the same (doc_id, min-id cluster)."""
-    from rclabsapi_spark.llm.dedup import dedup_clusters_star
-
-    pairs = lsh_candidate_pairs(
-        load_table(spark, sf_dir, "documents"),
-        num_hashes=8,
-        bands=4,
-        max_bucket_size=50,
-    ).filter(F.col("jaccard") >= 0.5)
-    return dedup_clusters_star(pairs)
+    """The `dedup_clusters` resolution kept under its benchmarked name:
+    the same operator (one large-star/small-star implementation, which
+    raises instead of mislabelling at its round cap —
+    tests/test_cc_star.py) and the same oracle."""
+    return q_dedup_clusters(spark, sf_dir)
 
 
 # historical corpus = src0-src9 (their fingerprint store), new batch =

@@ -49,8 +49,14 @@ def run_side(queries: list[str]) -> dict[str, float]:
     return json.loads(last[-1])["all"]
 
 
-def git(*args: str) -> None:
-    subprocess.run(["git", *args], cwd=REPO, check=True, capture_output=True)
+def git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, check=True, capture_output=True, text=True
+    ).stdout
+
+
+def stash_depth() -> int:
+    return len(git("stash", "list").splitlines())
 
 
 def main() -> None:
@@ -66,7 +72,12 @@ def main() -> None:
     for alt in range(args.alts):
         scores.append(cpu_score())
         ta = run_side(args.queries)  # A = working tree (new)
+        # `git stash push` exits 0 without creating an entry when the paths
+        # are unmodified; popping then would apply an unrelated stash
+        depth = stash_depth()
         git("stash", "push", "--", *args.paths)
+        if stash_depth() == depth:
+            sys.exit(f"no changes under {args.paths}: A and B would be the same code")
         try:
             scores.append(cpu_score())
             tb = run_side(args.queries)  # B = stashed (old)

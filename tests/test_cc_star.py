@@ -1,13 +1,17 @@
-"""Large-star/small-star connected components (llm/dedup.py): identical
-labels to HashMin where HashMin converges, logarithmic round count on the
-long-chain graphs where HashMin's O(diameter) rounds hit the max_iters
-cap and silently mislabel — the exact hazard the star variant exists for."""
+"""Connected components (llm/dedup.py::dedup_clusters, large-star/
+small-star alternation): union-find labels on the shallow graphs LSH
+produces and on the long chains, permuted paths and stars where label
+propagation would need O(diameter) rounds; a logarithmic round count;
+and a raise, never a silent mislabel, at the round cap."""
 
 from __future__ import annotations
 
+import math
+import random
+
 import pytest
 
-from rclabsapi_spark.llm.dedup import dedup_clusters, dedup_clusters_star
+from rclabsapi_spark.llm.dedup import dedup_clusters
 
 
 def _labels(df):
@@ -18,47 +22,67 @@ def _pairs(spark, edges):
     return spark.createDataFrame(edges, "doc_a long, doc_b long")
 
 
-def test_star_matches_hashmin_on_shallow_graphs(spark):
+def _union_find(edges):
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _path(order):
+    return [(order[i], order[i + 1]) for i in range(len(order) - 1)]
+
+
+def test_star_labels_shallow_graphs(spark):
     # two near-dup families (a star and a triangle) + one isolated pair —
     # the shape LSH candidate graphs actually have
     edges = [
         (1, 2), (1, 3), (1, 4),          # star rooted at 1
         (10, 11), (11, 12), (10, 12),    # triangle
         (20, 21),                        # pair
-        (2, 2),                          # self-loop must be ignored
+        (2, 2),                          # self-pair adds no edge
     ]
-    pairs = _pairs(spark, edges)
-    star = _labels(dedup_clusters_star(pairs))
-    hashmin = _labels(dedup_clusters(pairs))
-    expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-    assert star == expected
-    # self-loop node 2 still labeled via its real edges
-    assert hashmin == expected
+    got = _labels(dedup_clusters(_pairs(spark, edges)))
+    # node 2 is still labeled via its real edges
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
 def test_star_contracts_long_chain_in_log_rounds(spark):
-    # path 0-1-2-…-255: diameter 255. HashMin moves the min label one
-    # hop per round — at its default 20-round cap the tail is silently
-    # mislabeled. Star alternation halves depth per round.
-    n = 256
-    pairs = _pairs(spark, [(i, i + 1) for i in range(n - 1)])
-
-    stats: dict = {}
-    star = _labels(dedup_clusters_star(pairs, stats=stats))
-    assert star == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 10  # ~log₂(256)=8 + fixpoint-confirm slack
-
-    hashmin = _labels(dedup_clusters(pairs))  # default max_iters=20
-    assert any(v != 0 for v in hashmin.values()), (
-        "HashMin at its round cap should mislabel a 255-diameter chain —"
-        " if this starts passing, the cap semantics changed"
-    )
+    # path 0-1-…-(n-1): diameter n-1, so one-hop label propagation would
+    # need n-1 rounds; star alternation halves the depth per round. The
+    # reversed-id chain puts the min at the far end of the insertion
+    # order; the permuted path scatters ids along the chain; the star
+    # graph bridges two hubs at both ends of the id range leaf to leaf.
+    perm = list(range(300))
+    random.Random(3).shuffle(perm)
+    hubs = [(0, i) for i in range(1, 200)] + [(500, 500 - i) for i in range(1, 200)]
+    for edges in (
+        _path(list(range(256))),
+        _path(list(range(1000))),
+        _path(list(range(255, -1, -1))),
+        _path(perm),
+        hubs + [(199, 301)],
+    ):
+        stats: dict = {}
+        got = _labels(dedup_clusters(_pairs(spark, edges), stats=stats))
+        assert got == _union_find(edges)
+        assert stats["rounds"] <= math.ceil(math.log2(len(got))) + 2
 
 
 def test_star_raises_when_rounds_exhausted(spark):
-    pairs = _pairs(spark, [(i, i + 1) for i in range(63)])
+    pairs = _pairs(spark, _path(list(range(64))))
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters_star(pairs, max_iters=2)
+        dedup_clusters(pairs, max_iters=2)
 
 
 def test_cluster_quality_audit_flags_weak_links(spark):

@@ -569,7 +569,8 @@ def test_phash_clusters_match_union_find_and_chain_transitivity(spark):
     """Perceptual clusters over the real sf0.001 pair set equal a
     brute-force union-find, and a planted retouch CHAIN (original ≈
     re-render ≈ retouch, ends not directly paired) collapses into ONE
-    family under the original as keeper."""
+    family under the original as keeper, as does a planted 256-unit
+    chain."""
     from rclabsapi_spark.llm.multimodal import (
         attach_token_heatmap_frames,
         average_hash_bands,
@@ -635,3 +636,16 @@ def test_phash_clusters_match_union_find_and_chain_transitivity(spark):
         for r in phash_clusters(cpairs).collect()
     }
     assert cl == {0: 0, 1: 0, 2: 0}
+
+    # planted 256-unit chain (two frames per doc, unit k linked to k+1):
+    # diameter 255, so the whole chain must still collapse under (0, 0)
+    units = [(k // 2, k % 2) for k in range(256)]
+    lpairs = spark.createDataFrame(
+        [(*units[k], *units[k + 1]) for k in range(255)],
+        "doc_id_a long, frame_idx_a int, doc_id_b long, frame_idx_b int",
+    )
+    long_chain = {
+        (r["doc_id"], r["frame_idx"]): (r["keeper_doc_id"], r["keeper_frame_idx"])
+        for r in phash_clusters(lpairs).collect()
+    }
+    assert long_chain == {u: (0, 0) for u in units}

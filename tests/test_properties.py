@@ -145,20 +145,27 @@ def test_unknown_rule_type_is_identity(spark):
     assert out.collect()[0]["b"] == "MiXeD"
 
 
-edge_lists = st.lists(
-    st.tuples(st.integers(0, 20), st.integers(0, 20)).filter(
-        lambda e: e[0] != e[1]
+edge_lists = st.one_of(
+    st.lists(
+        st.tuples(st.integers(0, 20), st.integers(0, 20)).filter(
+            lambda e: e[0] != e[1]
+        ),
+        min_size=1,
+        max_size=25,
     ),
-    min_size=1,
-    max_size=25,
+    # a shuffled path of 50-80 nodes: its min id sits at least 24 hops
+    # from some node, so no fixed one-hop-per-round budget of ~20 covers it
+    st.integers(50, 80)
+    .flatmap(lambda n: st.permutations(range(n)))
+    .map(lambda p: list(zip(p, p[1:]))),
 )
 
 
 @SETTINGS
 @given(edge_lists)
 def test_dedup_clusters_matches_union_find(spark, edges):
-    """HashMin label propagation must equal a sequential union-find:
-    every node's cluster id is the min node id of its component."""
+    """Connected components must equal a sequential union-find: every
+    node's cluster id is the min node id of its component."""
     from rclabsapi_spark.llm.dedup import dedup_clusters
 
     # reference model: classic union-find
