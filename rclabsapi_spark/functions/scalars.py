@@ -12,6 +12,7 @@ so parity can be checked.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import Column
@@ -135,6 +136,18 @@ def sql_round_half_up(expr: str, decimals: int = 6) -> str:
     """DuckDB mirror of :func:`round_half_up`."""
     scale = float(10**decimals)
     return f"FLOOR(({expr}) * {scale} + 0.5) / {scale}"
+
+
+def sql_double(x: float) -> str:
+    """Exact Spark SQL double literal: ``repr`` round-trips every finite
+    double; ±inf, which ``repr`` + ``D`` turns into a column name
+    (``infD``), is written ``double('Infinity')``. NaN raises."""
+    x = float(x)
+    if math.isnan(x):
+        raise ValueError("NaN has no SQL double literal here")
+    if math.isinf(x):
+        return "double('Infinity')" if x > 0 else "double('-Infinity')"
+    return f"{x!r}D"
 
 
 def grid_mean(x: Column, decimals: int = 6, grid: float = 1e9) -> Column:

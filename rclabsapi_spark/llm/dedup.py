@@ -5,7 +5,8 @@ Four tiers, all pure DataFrame ops (no UDFs, no driver loops):
 - exact:          hash-groupBy on the normalized text
 - MinHash + LSH:  shingle → md5-minhash signature → banded buckets with
                   in-bucket pair-gen (signatures only through the band
-                  shuffle; shingle sets join back for verification)
+                  shuffle; each pair side joins back its text, and exact
+                  Jaccard is computed in the projection)
 - n-gram Jaccard: exact pairwise Jaccard over an inverted shingle index
                   (explode → bucket pair-gen → count) — verification tier
 - SimHash:        bit-vote fingerprint over token hashes
@@ -176,7 +177,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signatures — (key, mh_0..mh_{num_hashes-1}), no
     shingle payload (signatures are what the band shuffle carries; the
-    shingle sets are joined back only for surviving candidates).
+    texts are joined back only for surviving candidates). Null keys,
+    which no consumer can pair, are dropped first, so a copy of this
+    pass that a key join null-filters reuses the same spread exchange.
 
     One-permutation scheme: each shingle is md5'd ONCE and the 128-bit
     digest is sliced into ``num_hashes`` 16-bit lanes (4 hex chars each);
@@ -195,7 +198,8 @@ def minhash_signatures(
     pre-dedup pass."""
     assert num_hashes <= 8, "md5 has 32 hex chars = 8 four-char lanes"
     posting = shingle_posting(
-        docs, text_col=text_col, key_col=key_col, n=n
+        docs.filter(F.col(key_col).isNotNull()),
+        text_col=text_col, key_col=key_col, n=n,
     ).withColumn("h", F.md5("shingle"))
     return posting.groupBy(key_col).agg(
         *[
@@ -212,14 +216,88 @@ def doc_shingle_sets(
     key_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
-    """(key, shingle_set) — the verification relation for exact Jaccard.
-    Same repartition-by-key posting shape as the signature pass, so the
-    groupBy collect_set adds no extra exchange."""
+    """(key, shingle_set) — the distinct per-doc sets behind
+    ngram_jaccard_pairs' inverted index. Same repartition-by-key posting
+    shape as the signature pass, so the groupBy collect_set adds no
+    extra exchange."""
     return (
         shingle_posting(docs, text_col=text_col, key_col=key_col, n=n)
         .groupBy(key_col)
         .agg(F.collect_set("shingle").alias("shingle_set"))
     )
+
+
+def _band_keys(
+    docs: DataFrame,
+    *,
+    text_col: str,
+    key_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+) -> DataFrame:
+    """(key, band_id, band_key): each doc's signature cut into ``bands``
+    bands of ``num_hashes // bands`` lanes — all the band shuffle
+    carries."""
+    rows = num_hashes // bands
+    mh = minhash_signatures(
+        docs, text_col=text_col, key_col=key_col, n=n, num_hashes=num_hashes
+    )
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.concat_ws(
+                "|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
+            ).alias("band_key"),
+        )
+        for b in range(bands)
+    ]
+    return mh.select(
+        key_col, F.explode(F.array(*band_cols)).alias("band")
+    ).select(key_col, "band.band_id", "band.band_key")
+
+
+def _verified_pairs(
+    pairs: DataFrame,
+    docs_a: DataFrame,
+    docs_b: DataFrame,
+    a: str,
+    b: str,
+    *,
+    text_col: str,
+    key_col: str,
+    n: int,
+) -> DataFrame:
+    """(a, b, jaccard): exact shingle Jaccard of each deduplicated
+    candidate pair. Two key joins fetch the texts (``a`` from
+    ``docs_a``, ``b`` from ``docs_b``) and the projection shingles them:
+    no cache, no second shingle posting, no per-pair regroup — at small
+    and mid scale verification costs Spark jobs and generated code, not
+    data. Keys must be unique on each side; a duplicate emits one row
+    per copy.
+
+    Scale trade: a pair side carries its text (smaller than its 3-word
+    shingle set) and shingles it once per pair, so shingling CPU grows
+    with the mean candidate degree 2·|pairs| / |candidate docs|, which
+    the band cap bounds by bands × (max_bucket_size − 1)."""
+
+    def text(docs: DataFrame, key: str) -> DataFrame:
+        return docs.select(
+            F.col(key_col).alias(key), F.col(text_col).alias(f"__t_{key}")
+        )
+
+    sides = pairs.join(text(docs_a, a), a).join(text(docs_b, b), b).select(
+        a,
+        b,
+        shingles(F.col(f"__t_{a}"), n).alias("__sa"),
+        shingles(F.col(f"__t_{b}"), n).alias("__sb"),
+    )
+    # each shingle array is read twice below, so Catalyst keeps the
+    # projection above instead of inlining (and re-running) the shingling;
+    # array_intersect/array_union yield distinct elements
+    sa, sb = F.col("__sa"), F.col("__sb")
+    jaccard = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
+    return sides.select(a, b, round_half_up(jaccard, 6).alias("jaccard"))
 
 
 def lsh_candidate_pairs(
@@ -235,39 +313,25 @@ def lsh_candidate_pairs(
     """Banded LSH: docs sharing any band of the signature become a
     candidate pair; exact Jaccard on the shingle sets verifies.
 
-    Physical shape (verify-by-join-back): the band shuffle carries ONLY
-    (doc_id, band key) — ~32 B/row; at 10¹⁰ docs the alternative of riding
-    each doc's ~KB shingle set through every band bucket is ~TBs × bands
-    through the exchange. Pair generation is per-bucket array combinatorics
-    (``collect_list`` + indexed ``transform``/``slice``; no self-join), then
-    the surviving candidate docs — typically a tiny fraction of the corpus —
-    are semi-joined back against the shingle-set relation and each pair
-    fetches its two sets through one join + one 2-row-per-pair regroup.
-    The shingling runs twice (signatures, verification sets); that's
-    embarrassingly-parallel CPU, the cheap currency at scale, traded
-    against shuffle bytes, the expensive one.
+    Physical shape: the band shuffle carries ONLY (doc_id, band key) —
+    ~32 B/row; at 10¹⁰ docs the alternative of riding each doc's ~KB
+    shingle set through every band bucket is ~TBs × bands through the
+    exchange. Pair generation is per-bucket array combinatorics
+    (``collect_list`` + indexed ``transform``/``slice``; no self-join).
+    The deduplicated pairs then join the corpus's (key, text) once per
+    side and Jaccard is computed in the projection (``_verified_pairs``
+    states the scale trade: text per pair side, shingling CPU × the mean
+    candidate degree ≤ bands × (``max_bucket_size`` − 1)). Keys must be
+    unique: a duplicated key emits one verified row per copy.
 
     ``max_bucket_size`` (default 50) drops degenerate hot buckets
     (boilerplate near-dups) the way web-scale dedup pipelines do — a
     bucket of B docs yields B²/2 pairs, so one 10⁶-doc bucket would
     dominate the job. Pass ``None`` to disable."""
-    rows = num_hashes // bands
-    mh = minhash_signatures(
-        docs, text_col=text_col, key_col=key_col, n=n, num_hashes=num_hashes
+    banded = _band_keys(
+        docs, text_col=text_col, key_col=key_col, n=n,
+        num_hashes=num_hashes, bands=bands,
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    banded = mh.select(
-        key_col, F.explode(F.array(*band_cols)).alias("band")
-    ).select(key_col, "band.band_id", "band.band_key")
-
     buckets = (
         banded.groupBy("band_id", "band_key")
         .agg(F.array_sort(F.collect_list(F.col(key_col))).alias("members"))
@@ -287,46 +351,14 @@ def lsh_candidate_pairs(
             ),
         )
     )
-    # candidate pairs are a tiny fraction of the corpus; cache them —
-    # they feed two consumers (the verification join and the candidate
-    # semi-join) and must not re-derive the banding pipeline per use
     pairs = (
         buckets.select(F.explode(pair_structs).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
-        .cache()
     )
-
-    # Verification join-back: sets only for docs that survived banding.
-    sides = pairs.select(
-        "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias(key_col)
-    )
-    cand_docs = sides.select(key_col).distinct()
-    sets = doc_shingle_sets(
-        docs.join(cand_docs, key_col, "leftsemi"),
-        text_col=text_col,
-        key_col=key_col,
-        n=n,
-    )
-    # one join, then a 2-row regroup per pair; doc_a < doc_b, so after
-    # array_sort the first struct is doc_a's set, the second doc_b's.
-    per_pair = (
-        sides.join(sets, key_col)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(key_col), F.col("shingle_set")))
-            ).alias("ss")
-        )
-    )
-    set_a = F.col("ss")[0]["shingle_set"]
-    set_b = F.col("ss")[1]["shingle_set"]
-    inter = F.size(F.array_intersect(set_a, set_b))
-    union = F.size(set_a) + F.size(set_b) - inter
-    return per_pair.select(
-        "doc_a",
-        "doc_b",
-        round_half_up(inter / union, 6).alias("jaccard"),
+    return _verified_pairs(
+        pairs, docs, docs, "doc_a", "doc_b",
+        text_col=text_col, key_col=key_col, n=n,
     )
 
 
@@ -803,48 +835,32 @@ def incremental_lsh_pairs(
     STORE-side band keys join (never store × store — the store was
     already deduped when it was ingested); the store side is the
     (key, band_id, band_key) signature relation, ~32 B/doc/band and
-    append-only, so each daily batch shuffles the batch's signatures
-    plus reads the store's — never the corpus text. Hot band keys are
+    append-only, so the band join shuffles the batch's signatures plus
+    reads the store's — never the corpus text. Hot band keys are
     capped by their COMBINED bucket size (``max_bucket_size``), the
     same boilerplate guard as lsh_candidate_pairs. Verification
-    join-back computes exact Jaccard for the surviving pairs only.
+    computes exact Jaccard for the surviving pairs only: ``new_doc``
+    joins ``new_docs`` and ``corpus_doc`` joins ``corpus_docs`` for
+    their text, which the projection shingles (``_verified_pairs``
+    states the scale trade). Keys must be unique within each input (true
+    of any ingest split of one corpus): a duplicated key would emit one
+    verified row per copy.
 
-    The candidate-pair relation is cached (three consumers: the two
-    semi-join prunes and the verification spine); ``materialize=True``
-    eagerly checkpoints the verified result and releases that cache —
-    the triangle_count/pagerank hygiene pattern — while
-    ``materialize=False`` keeps the plan inspectable for pins and the
-    plan audit. Reference parity: extends the incremental-ingest batch
-    loop contract (etl_job_manager.cpp:371-407) from exact fingerprints
-    to near-dup signatures. Keys must be unique ACROSS the two inputs
-    (true of any ingest split of one corpus): the verification shingles
-    both sides through one combined pass keyed on ``key_col``."""
-    rows = num_hashes // bands
+    Nothing is cached. ``materialize=True`` eagerly checkpoints the
+    verified result — the triangle_count/pagerank hygiene pattern —
+    while ``materialize=False`` keeps the plan inspectable for pins and
+    the plan audit. Reference parity: extends the incremental-ingest
+    batch loop contract (etl_job_manager.cpp:371-407) from exact
+    fingerprints to near-dup signatures."""
 
-    def banded(docs: DataFrame) -> DataFrame:
-        mh = minhash_signatures(
+    def banded(docs: DataFrame, key: str) -> DataFrame:
+        return _band_keys(
             docs, text_col=text_col, key_col=key_col, n=n,
-            num_hashes=num_hashes,
-        )
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-        return mh.select(
-            key_col, F.explode(F.array(*band_cols)).alias("band")
-        ).select(key_col, "band.band_id", "band.band_key")
+            num_hashes=num_hashes, bands=bands,
+        ).withColumnRenamed(key_col, key)
 
-    nb = banded(new_docs).select(
-        F.col(key_col).alias("new_doc"), "band_id", "band_key"
-    )
-    sb = banded(corpus_docs).select(
-        F.col(key_col).alias("corpus_doc"), "band_id", "band_key"
-    )
+    nb = banded(new_docs, "new_doc")
+    sb = banded(corpus_docs, "corpus_doc")
     if max_bucket_size is not None:
         sizes = (
             nb.select("band_id", "band_key")
@@ -859,50 +875,15 @@ def incremental_lsh_pairs(
         nb.join(sb, ["band_id", "band_key"])
         .select("new_doc", "corpus_doc")
         .dropDuplicates(["new_doc", "corpus_doc"])
-        .cache()
     )
-    # ONE shingle pass for both sides: new/corpus partition the doc
-    # space, so the union of surviving pair endpoints prunes a single
-    # combined relation — one semi-join + one spread/shingle stage
-    # instead of two of each (same rows shingled either way; the two
-    # verification joins then read the same set relation).
-    cand_keys = pairs.select(
-        F.explode(
-            F.array(F.col("new_doc"), F.col("corpus_doc"))
-        ).alias(key_col)
-    ).distinct()
-    both = new_docs.select(
-        key_col, text_col
-    ).unionByName(corpus_docs.select(key_col, text_col))
-    # cached: the set relation feeds BOTH verification joins below — an
-    # uncached plan would run the shingle pass once per join
-    sets = doc_shingle_sets(
-        both.join(cand_keys, key_col, "leftsemi"),
-        text_col=text_col,
-        key_col=key_col,
-        n=n,
-    ).cache()
-    new_sets = sets.select(
-        F.col(key_col).alias("new_doc"), F.col("shingle_set").alias("sa")
+    out = _verified_pairs(
+        pairs, new_docs, corpus_docs, "new_doc", "corpus_doc",
+        text_col=text_col, key_col=key_col, n=n,
     )
-    corpus_sets = sets.select(
-        F.col(key_col).alias("corpus_doc"), F.col("shingle_set").alias("sb")
-    )
-    joined = pairs.join(new_sets, "new_doc").join(corpus_sets, "corpus_doc")
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    union = F.size("sa") + F.size("sb") - inter
-    out = joined.select(
-        "new_doc",
-        "corpus_doc",
-        round_half_up(inter / union, 6).alias("jaccard"),
-    )
-    # pair-sized result: materialize eagerly, then release the candidate
-    # and set caches so repeated daily-batch calls don't accumulate
-    # storage.
+    # pair-sized result: materialize eagerly so repeated daily-batch
+    # calls read a checkpoint, not the banding lineage
     if materialize:
         out = out.localCheckpoint(eager=True)
-        pairs.unpersist()
-        sets.unpersist()
     return out
 
 

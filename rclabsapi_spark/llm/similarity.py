@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.functions.scalars import sql_double
 from rclabsapi_spark.layout import spread_by
 
 
@@ -138,10 +139,10 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs — the fifth dedup tier
     (alongside exact / MinHash-LSH / SimHash / n-gram Jaccard).
 
-    Physical shape mirrors llm.dedup.lsh_candidate_pairs: one shuffle on
+    Pair generation mirrors llm.dedup.lsh_candidate_pairs: one shuffle on
     the sign-LSH bucket, per-bucket pair generation via array
-    combinatorics (no self-join → the embedding scan runs once), exact
-    cosine only within buckets. ``num_bits`` trades recall vs bucket
+    combinatorics (no self-join → the embedding scan runs once); the
+    vectors ride along, so exact cosine needs no join back. ``num_bits`` trades recall vs bucket
     size; ``max_bucket_size`` guards the B² blowup of degenerate buckets
     at corpus scale."""
     v = _as_double(F.col(vec_col))
@@ -790,9 +791,8 @@ def pq_encode(
     # round trip PER OPERATOR — measured 1.4-1.5 s of pure driver-side
     # Python↔JVM chatter per sim_pq_adc run (vs 0.14 s of actual
     # analysis). The parsed tree is operator-identical: `a + b * c`
-    # parses as a + (b·c), the chain stays left-associative, `1.5D` is
-    # a double literal (repr(float) round-trips IEEE exactly), and the
-    # CAST mirrors _as_double.
+    # parses as a + (b·c), the chain stays left-associative, sql_double
+    # writes exact double literals, and the CAST mirrors _as_double.
     v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     for m, book in enumerate(codebooks):
         scores = []
@@ -802,9 +802,9 @@ def pq_encode(
             for j, c in enumerate(cent):
                 acc = (
                     f"{acc} + element_at({v}, {m * sub + j + 1})"
-                    f" * {float(c)!r}D"
+                    f" * {sql_double(c)}"
                 )
-            scores.append(f"{acc} - {half_norm!r}D")
+            scores.append(f"{acc} - {sql_double(half_norm)}")
         arr = "array(" + ", ".join(scores) + ")"
         code = f"CAST(array_position({arr}, array_max({arr})) - 1 AS INT)"
         cols.append(F.expr(code).alias(f"code_{m}"))

@@ -248,8 +248,8 @@ def bigram_score(
     # recompute measured CHEAPER at sf0.1 than materializing either a
     # doc-level (doc, w1, w2, tf) index (+107%, interleaved A/B) or the
     # model aggregate itself (+56%) — codegen explode+partial-aggregate
-    # is the cheap currency, cache writes are not (the
-    # lsh_candidate_pairs shingling-twice lesson at the LM tier)
+    # is the cheap currency, cache writes are not (lsh_candidate_pairs
+    # re-shingles each pair side rather than cache its sets)
     c12 = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("double").alias("cnt12")
     )

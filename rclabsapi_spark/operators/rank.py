@@ -54,6 +54,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.functions.scalars import sql_double
+
 _BKT = "__rank_bkt"
 _KEY = "__rank_key"
 _LRN = "__rank_lrn"
@@ -95,14 +97,15 @@ def _bucket_sql(key_col: str, uniq: list[float]) -> Column:
     thousands on a real cluster where shuffle.partitions is sized for
     the data) the Column-by-Column build dominates DRIVER time the same
     way pq_encode's chains did. The parsed tree is the same codegen
-    CASE chain, left-associative, `1.5D` double literals via repr
-    round-trip — bit-identical bucket ids (and any monotone bucketing
-    yields identical final ranks regardless — rank.py module
-    docstring)."""
+    CASE chain, left-associative, exact double literals
+    (``sql_double``, which also writes a ±inf cut from an infinite key)
+    — bit-identical bucket ids (and any monotone bucketing yields
+    identical final ranks regardless — rank.py module docstring)."""
     if not uniq:
         return F.lit(0)
     chain = " + ".join(
-        f"(CASE WHEN `{key_col}` > {c!r}D THEN 1 ELSE 0 END)" for c in uniq
+        f"(CASE WHEN `{key_col}` > {sql_double(c)} THEN 1 ELSE 0 END)"
+        for c in uniq
     )
     return F.expr(chain)
 

@@ -205,7 +205,8 @@ JOIN sigs sb ON sb.doc_id = p.doc_b
 def q_minhash(spark, sf_dir):
     """MinHash (8 md5 lanes) + 4-band LSH bucket pair-gen (signatures only
     through the band shuffle, hot buckets > 50 dropped) + exact-Jaccard
-    verification via shingle-set join-back."""
+    verification: each pair side joins the corpus for its text, and the
+    projection shingles both and intersects the sets."""
     return lsh_candidate_pairs(
         load_table(spark, sf_dir, "documents"),
         num_hashes=8,
@@ -1996,11 +1997,10 @@ def q_cluster_audit(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     # The verified pair relation feeds TWO consumers (the CC edge build
-    # and the audit spine); without a checkpoint each re-runs the exact-
-    # Jaccard verification join-back — the expensive half of the LSH
-    # chain. Pair-sized, so an eager localCheckpoint is cheap and both
-    # consumers read the materialized relation (the pagerank hygiene
-    # pattern).
+    # and the audit spine); without a checkpoint each re-runs the whole
+    # LSH chain, banding and the per-pair text joins and shingling.
+    # Pair-sized, so an eager localCheckpoint is cheap and both
+    # consumers read the materialized relation (the pagerank pattern).
     pairs = (
         lsh_candidate_pairs(docs, num_hashes=8, bands=4, max_bucket_size=50)
         .filter(F.col("jaccard") >= 0.5)

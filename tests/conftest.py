@@ -24,7 +24,19 @@ SF_CORRECT = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("rclabsapi-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    # The session's default heap (24g) can exceed the box: on 16 GB with
+    # no swap the suite's JVM grew to 15 GB resident and was OOM-killed
+    # mid-run. Unless the heap is set explicitly, give the test JVM half
+    # of physical memory; cached blocks then spill to disk instead.
+    extra = {}
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        extra["spark.driver.memory"] = f"{max(2, min(24, phys // 2**31))}g"
+    s = get_spark(
+        "rclabsapi-tests",
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
+        extra_conf=extra,
+    )
     yield s
 
 

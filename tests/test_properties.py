@@ -573,3 +573,108 @@ def test_floor_grid_term_parity_domain(spark, ys):
         for y in ys
     ]
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH verification against the DuckDB oracles
+# ---------------------------------------------------------------------------
+
+_LSH_VOCAB = ["a", "b", "c", "d", "e", "f"]
+_HUB_VOCAB = ["h0", "h1", "h2", "h3", "h4", "h5", "h6"]
+
+
+def _drive_contract_hash():
+    """``scripts/drive_contract.py``'s order-insensitive value hash."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "drive_contract.py",
+    )
+    spec = importlib.util.spec_from_file_location("drive_contract", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.value_hash
+
+
+@st.composite
+def lsh_corpora(draw):
+    """Small corpora over a few-word vocabulary: docs under 3 tokens,
+    docs that repeat their shingles, near-dup families (a base doc and
+    one-token edits), and one hub doc plus ~30 extensions of it that
+    keep its minimum in most lanes, so the hub shares a band with about
+    30 others (one bucket of ~31, under the cap of 50)."""
+    word = st.sampled_from(_LSH_VOCAB)
+    texts = [" ".join(draw(st.lists(word, max_size=2)))
+             for _ in range(draw(st.integers(1, 3)))]
+    for _ in range(draw(st.integers(1, 3))):
+        cycle = draw(st.lists(word, min_size=2, max_size=3))
+        texts.append(" ".join(cycle * draw(st.integers(3, 6))))
+    for _ in range(draw(st.integers(1, 3))):
+        base = draw(st.lists(word, min_size=6, max_size=16))
+        texts.append(" ".join(base))
+        for _ in range(draw(st.integers(1, 4))):
+            edit = list(base)
+            edit[draw(st.integers(0, len(base) - 1))] = draw(word)
+            texts.append(" ".join(edit))
+    hub = draw(st.lists(st.sampled_from(_HUB_VOCAB), min_size=20, max_size=24))
+    texts.append(" ".join(hub))
+    for _ in range(30):
+        tail = draw(st.lists(st.sampled_from(_HUB_VOCAB), min_size=1, max_size=2))
+        texts.append(" ".join(hub + tail))
+    ids = draw(st.permutations(range(len(texts))))
+    sources = draw(
+        st.lists(st.integers(0, 19), min_size=len(texts), max_size=len(texts))
+    )
+    return [(i, t, f"src{s}") for i, t, s in zip(ids, texts, sources)]
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(lsh_corpora())
+def test_lsh_verification_matches_oracles(spark, docs):
+    """``dedup_minhash_lsh`` and ``dedup_incremental_lsh`` (exact Jaccard
+    on banded MinHash candidates) must match their DuckDB oracles on row
+    count, columns and the contract's value hash — on short docs, docs
+    with repeated shingles, near-dup families and a hub candidate of
+    degree ~30."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.suites.llm import _INCR_LSH_ORACLE, _MINHASH_ORACLE
+
+    value_hash = _drive_contract_hash()
+    reg = get_registry()
+    with tempfile.TemporaryDirectory() as sf_dir:
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array([d[0] for d in docs], pa.int64()),
+                "text": [d[1] for d in docs],
+                "source": [d[2] for d in docs],
+            }),
+            f"{sf_dir}/documents.parquet",
+        )
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        )
+        for name, oracle in (
+            ("dedup_minhash_lsh", _MINHASH_ORACLE),
+            ("dedup_incremental_lsh", _INCR_LSH_ORACLE),
+        ):
+            sdf = reg[name].fn(spark, sf_dir)
+            srows = [tuple(r) for r in sdf.collect()]
+            rel = con.execute(oracle)
+            ocols = [d[0] for d in rel.description]
+            orows = rel.fetchall()
+            assert sorted(sdf.columns) == sorted(ocols), name
+            assert len(srows) == len(orows), name
+            assert value_hash(sdf.columns, srows) == value_hash(ocols, orows), name
+            if name == "dedup_minhash_lsh":
+                assert len(srows) >= 30  # the hub's bucket alone
+        con.close()

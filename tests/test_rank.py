@@ -101,6 +101,38 @@ def test_heavy_tie_block_stays_exact(spark):
     assert [r["rn"] for r in rows] == list(range(1, 501))
 
 
+def test_infinite_bucket_keys_rank_exactly(spark):
+    """A bucket key holding ±inf yields ±inf quantile cuts; each must be
+    written as a real double literal (not ``infD``, which parses as a
+    column name) and the ranks must equal the naive window's."""
+    inf = float("inf")
+    vals = [-inf] * 200 + [-2.5, 0.0, 1e-05, 7.0, 1.5e300] * 20 + [inf] * 200
+    df = spark.createDataFrame(
+        [(v, k) for k, v in enumerate(vals)], "v double, k long"
+    )
+    naive = df.select(
+        "k", F.row_number().over(Window.orderBy("v", "k")).alias("rn")
+    )
+    two = global_row_number(df, ["v", "k"], out_col="rn2", num_buckets=8)
+    j = naive.join(two.select("k", "rn2"), "k")
+    assert j.count() == len(vals)
+    assert j.filter(F.col("rn") != F.col("rn2")).count() == 0
+
+
+def test_sql_double_literals_are_exact_and_finite_checked(spark):
+    """Every finite double round-trips through its literal; NaN is
+    rejected instead of reaching the SQL string."""
+    from rclabsapi_spark.functions.scalars import sql_double
+
+    xs = [1e-05, -2.5, 1.5e300, 0.1, -0.0, float("inf"), -float("inf")]
+    row = spark.range(1).select(
+        *[F.expr(sql_double(x)).alias(f"x{i}") for i, x in enumerate(xs)]
+    ).first()
+    assert list(row) == xs
+    with pytest.raises(ValueError):
+        sql_double(float("nan"))
+
+
 def test_no_full_data_single_partition_sort(spark, orders):
     """The whole point: the full-relation window is partitioned by the
     threshold bucket; the only SinglePartition exchange is the ≤B-row
@@ -150,8 +182,9 @@ def test_shuffle_shards_even_and_deterministic(spark, orders):
 def test_incremental_lsh_finds_planted_near_dup(spark):
     """A re-crawled page (one-token edit) in the new batch must pair
     with its corpus original at high Jaccard; unrelated docs must not.
-    Cache hygiene: the candidate cache is released after the eager
-    checkpoint (materialize=True default)."""
+    Storage hygiene: verification caches nothing, so the only stored
+    RDD a call leaves is the eager checkpoint of its result
+    (materialize=True default)."""
     from rclabsapi_spark.llm.dedup import incremental_lsh_pairs
 
     base = (
@@ -177,8 +210,8 @@ def test_incremental_lsh_finds_planted_near_dup(spark):
     assert (10, 1) in rows and rows[(10, 1)] > 0.6
     assert all(k == (10, 1) for k in rows)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    # the candidate cache is released; only the (pair-sized) eager
-    # checkpoint of the held result lingers — the graph-kernel pattern
+    # only the (pair-sized) eager checkpoint of the held result
+    # lingers — the graph-kernel pattern
     assert after - before <= 1, (before, after)
 
 
