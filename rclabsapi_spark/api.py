@@ -7,6 +7,12 @@ endpoint is a method that validates its params the same way, runs the
 DataFrame pipeline, and returns JSON strings via ``to_json`` (F22) — the
 engine stays declarative; the façade is control plane.
 
+``monitor_jobs``, ``get_job``, ``health`` and ``metrics`` read the job
+manager's rows as an Arrow-backed local relation (``jobs_df``): a
+``LocalTableScan`` that starts no Python worker, so a request's cost is
+planning, job launch and collect, not a Python round trip per partition.
+Timestamps in and out are UTC (naive ``now`` values included).
+
 HTTP/WebSocket/JWT plumbing is out of scope (SURVEY §7.4): this class is
 what such a server would call.
 """
@@ -21,6 +27,7 @@ from pyspark.sql import functions as F
 
 from rclabsapi_spark.cache import TTLCache
 from rclabsapi_spark.etl.runner import ETLJobManager
+from rclabsapi_spark.functions.scalars import ts_lit
 from rclabsapi_spark.functions.validation import clamp_limit
 from rclabsapi_spark.plans.log_query import LogQueryParams, search_logs
 from rclabsapi_spark.plans.monitor_jobs import monitor_jobs
@@ -159,7 +166,7 @@ class EngineAPI:
             else dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         )
         cutoff = now_ts - TIME_RANGES[time_range]
-        jobs = self.manager.jobs_df().filter(F.col("created_at") >= F.lit(cutoff))
+        jobs = self.manager.jobs_df().filter(F.col("created_at") >= ts_lit(cutoff))
         if metric_type == "jobs":
             agg = jobs.groupBy("status").agg(F.count(F.lit(1)).alias("cnt"))
             return "[" + ",".join(_to_json_rows(agg)) + "]"

@@ -17,7 +17,14 @@ broadcast-sized dims); here they are single parquet files per SF dir.
 
 from __future__ import annotations
 
+import datetime as dt
+from collections.abc import Iterable, Sequence
+from typing import Any
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 TABLES = (
     "region",
@@ -53,6 +60,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _naive_utc(v: dt.datetime | None) -> dt.datetime | None:
+    if v is None or v.tzinfo is None:
+        return v
+    return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+
+def local_df(
+    spark: SparkSession, rows: Iterable[Sequence[Any]], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over rows the driver holds (tuples in the field order
+    of ``schema``, a ``StructType`` or a DDL string), built from an Arrow
+    table so it plans as a ``LocalTableScan``: no RDD, no Python worker,
+    no Spark job to read it. ``createDataFrame`` over a Python list
+    would instead ship pickled rows through Python workers on every
+    action.
+
+    Timestamps go through ``timestamp[us, tz=UTC]``, so a naive
+    ``datetime`` is read as UTC wall-clock time (the engine's naive-UTC
+    convention, see ``session``) whatever the process time zone is. An
+    aware one in a top-level timestamp field is converted to UTC first:
+    pyarrow would keep its wall-clock time and drop the offset."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    cols = [
+        [_naive_utc(v) for v in c] if isinstance(f.dataType, TimestampType) else c
+        for c, f in zip(cols, schema.fields)
+    ]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_catalog(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -37,6 +37,7 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.catalog import local_df
 from rclabsapi_spark.etl.models import (
     ETL_JOBS_SCHEMA,
     ETLJob,
@@ -117,9 +118,14 @@ class ETLJobManager:
 
     def jobs_df(self) -> DataFrame:
         """The etl_jobs fact table as a DataFrame — every repository query
-        (S2/P3-P6/A1…) and the monitor pipeline run against this."""
-        rows = [tuple(asdict(j).values()) for j in self._jobs.values()]
-        return self.spark.createDataFrame(rows, ETL_JOBS_SCHEMA)
+        (S2/P3-P6/A1…) and the monitor pipeline run against this.
+
+        A snapshot of the rows the driver holds, built as an Arrow-backed
+        ``LocalTableScan`` (``catalog.local_df``): reading it starts no
+        Python worker, and the naive-UTC timestamps are read as UTC."""
+        with self._lock:
+            rows = [tuple(asdict(j).values()) for j in self._jobs.values()]
+        return local_df(self.spark, rows, ETL_JOBS_SCHEMA)
 
     def add_progress_listener(self, cb: ProgressCallback) -> None:
         self._listeners.append(cb)

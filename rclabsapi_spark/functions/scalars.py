@@ -12,6 +12,7 @@ so parity can be checked.
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 from collections.abc import Callable
 
@@ -317,6 +318,16 @@ def parse_iso8601(c: Column) -> Column:
     return F.coalesce(
         F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss"), F.current_timestamp()
     )
+
+
+def ts_lit(value: dt.datetime | str) -> Column:
+    """A timestamp literal that reads a naive ``datetime`` as UTC, the
+    engine's naive-UTC convention (see ``session``). ``F.lit`` alone
+    reads a naive ``datetime`` in the process time zone; a string is
+    cast in the session time zone, which is UTC, so it passes as is."""
+    if isinstance(value, dt.datetime) and value.tzinfo is None:
+        value = value.replace(tzinfo=dt.timezone.utc)
+    return F.lit(value)
 
 
 def execution_time_ms(started: Column, completed: Column, now: Column, status: Column) -> Column:

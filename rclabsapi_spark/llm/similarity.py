@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.catalog import local_df
 from rclabsapi_spark.functions.scalars import sql_double
 from rclabsapi_spark.layout import spread_by
 
@@ -256,6 +257,9 @@ def ivf_assign(
     return _assign_base(base, cents, key_col)
 
 
+_CENTROIDS_SCHEMA = "centroid_id int, cvec array<double>"
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     *,
@@ -278,7 +282,10 @@ def kmeans_centroids(
     iteration on. Per-iteration centroids are collected to the
     driver (K × dim doubles — the MLlib pattern) so iteration i+1's plan
     reads a literal centroid table instead of re-deriving iterations
-    1..i; the corpus relation is cached across iterations.
+    1..i; that table is an Arrow-backed ``LocalTableScan``
+    (``catalog.local_df``), so it costs no Python-worker task, and the
+    doubles round-trip exactly. The corpus relation is cached across
+    iterations.
 
     Empty clusters keep their previous centroid (classic k-means fallback)."""
     v = _as_double(F.col(vec_col))
@@ -289,10 +296,7 @@ def kmeans_centroids(
     )
     cent_rows = {r["centroid_id"]: list(r["cvec"]) for r in cents.collect()}
     for _ in range(iters):
-        cents_df = spark.createDataFrame(
-            [(cid, vec) for cid, vec in sorted(cent_rows.items())],
-            "centroid_id int, cvec array<double>",
-        )
+        cents_df = local_df(spark, sorted(cent_rows.items()), _CENTROIDS_SCHEMA)
         assigned = _assign_base(base, cents_df, key_col)
         means = (
             assigned.select(
@@ -323,10 +327,7 @@ def kmeans_centroids(
         for r in means.collect():
             cent_rows[r["centroid_id"]] = list(r["cvec"])
     base.unpersist()
-    return spark.createDataFrame(
-        [(cid, vec) for cid, vec in sorted(cent_rows.items())],
-        "centroid_id int, cvec array<double>",
-    )
+    return local_df(spark, sorted(cent_rows.items()), _CENTROIDS_SCHEMA)
 
 
 def ivf_topk(

@@ -16,6 +16,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.functions.scalars import ts_lit
+
 
 def monitor_jobs(
     jobs: DataFrame,
@@ -37,7 +39,9 @@ def monitor_jobs(
 
     Missing params mean "no filter" (request_handler.cpp:1226-1249 treats
     absent bounds as ±∞). The limit is made deterministic by sorting on
-    (created DESC, key) — newest-N semantics (O1+O2).
+    (created DESC, key) — newest-N semantics (O1+O2). A naive
+    ``datetime`` bound or ``now`` is UTC; a string is cast in the session
+    time zone (UTC).
     """
     out = jobs
     if status is not None:
@@ -45,16 +49,16 @@ def monitor_jobs(
     if job_type is not None:
         out = out.filter(F.col(type_col) == job_type)
     if from_ts is not None:
-        out = out.filter(F.col(created_col) >= F.lit(from_ts))
+        out = out.filter(F.col(created_col) >= ts_lit(from_ts))
     if to_ts is not None:
-        out = out.filter(F.col(created_col) <= F.lit(to_ts))
+        out = out.filter(F.col(created_col) <= ts_lit(to_ts))
     if limit is not None:
         out = out.orderBy(F.col(created_col).desc(), F.col(key_col)).limit(limit)
 
     # F17: execution time vs a frozen "now" (RUNNING jobs have no
     # completed_at; the fixture analog uses `now` for all rows when no
     # completed column exists).
-    now_lit = F.lit(now).cast("timestamp") if now is not None else None
+    now_lit = ts_lit(now).cast("timestamp") if now is not None else None
     if completed_col in jobs.columns:
         end = F.col(completed_col) if now_lit is None else F.coalesce(F.col(completed_col), now_lit)
     else:

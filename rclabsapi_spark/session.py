@@ -5,6 +5,13 @@ configuration is what we would ship to a 1000-executor cluster — AQE owns
 runtime re-planning (partition coalescing, skew-join splitting, dynamic
 broadcast), and shuffle partitioning is sized by config rather than
 hard-coded per operator.
+
+Time convention: the session time zone is UTC, and a naive ``datetime``
+anywhere in the engine is UTC wall-clock time (the job manager's clock,
+job rows, API ``now``/range arguments). Driver rows become DataFrames
+through ``catalog.local_df`` and datetime literals through
+``functions.scalars.ts_lit``, which both read naive values as UTC, so no
+result depends on the driver process's ``TZ``.
 """
 
 from __future__ import annotations

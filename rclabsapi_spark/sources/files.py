@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.catalog import local_df
+
 #: `%Y-%m-%d %H:%M:%S LEVEL component message...` — the reference's line
 #: format (F15 timestamp + level + component).
 _LINE_RE = r"^(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) (\w+) (\S+) (.*)$"
@@ -79,12 +81,12 @@ def list_log_files(
             (
                 name,
                 stat.st_size,
-                dt.datetime.fromtimestamp(stat.st_mtime),
+                dt.datetime.fromtimestamp(stat.st_mtime, dt.timezone.utc),
                 os.path.splitext(name)[1].lstrip("."),
             )
         )
-    df = spark.createDataFrame(
-        rows, "name string, size_bytes long, modified_at timestamp, extension string"
+    df = local_df(
+        spark, rows, "name string, size_bytes long, modified_at timestamp, extension string"
     )
     col = F.col(_SORT_COLS[sort_by])
     return df.orderBy(col.asc() if ascending else col.desc(), F.col("name"))

@@ -37,6 +37,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.catalog import local_df
 from rclabsapi_spark.functions.scalars import round_half_up
 from rclabsapi_spark.llm.dedup import incremental_dedup
 from rclabsapi_spark.llm.text import token_count
@@ -79,7 +80,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
         if "PATH_NOT_FOUND" in str(cond or "") or "PATH_NOT_FOUND" in str(
             exc
         ):
-            return spark.createDataFrame([], schema)
+            return local_df(spark, [], schema)
         raise
 
 

@@ -36,10 +36,6 @@ RATE_RULES: list[tuple[str, int]] = [
 ]
 
 
-def rules_df(spark, rules: list[tuple[str, int]]) -> DataFrame:
-    return spark.createDataFrame(rules, "prefix string, per_minute_limit int")
-
-
 def compile_rule_match(
     endpoint: Column, rules: list[tuple[str, int]]
 ) -> tuple[Column, Column]:

@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from rclabsapi_spark.catalog import local_df
+
 # Fixture subscription set (FIXTURES.md §8): includes empty lists
 # (match-all) and each filter dimension. Mirrored in suites/events.py SQL.
 DEFAULT_SUBSCRIPTIONS = [
@@ -43,7 +45,7 @@ _SUBS_SCHEMA = StructType(
 
 
 def subscriptions_df(spark: SparkSession, subs=None) -> DataFrame:
-    return spark.createDataFrame(subs or DEFAULT_SUBSCRIPTIONS, _SUBS_SCHEMA)
+    return local_df(spark, subs or DEFAULT_SUBSCRIPTIONS, _SUBS_SCHEMA)
 
 
 def _match(filter_col: str, value_col: str):

@@ -4,10 +4,11 @@ sentence. Run after adding queries: python scripts/gen_catalog.py"""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rclabsapi_spark.registry import get_registry
 

@@ -19,7 +19,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rclabsapi_spark.registry import get_registry
 from rclabsapi_spark.session import get_spark

@@ -17,9 +17,10 @@ from __future__ import annotations
 
 import inspect
 import json
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rclabsapi_spark.planaudit import audit  # noqa: E402
 from rclabsapi_spark.registry import get_registry  # noqa: E402
