@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from rclabsapi_spark.registry import get_registry  # noqa: E402
+from rclabsapi_spark.registry import get_registry, registered  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -28,8 +28,7 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the /api/monitor/jobs
     pipeline (SURVEY §3.1) — filter/range/limit + computed metric columns."""
-    reg = get_registry()
-    return reg["monitor_jobs_pipeline"].fn(spark, SF0001)
+    return registered()["monitor_jobs_pipeline"].fn(spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -13,6 +13,10 @@ manager's rows as an Arrow-backed local relation (``jobs_df``): a
 planning, job launch and collect, not a Python round trip per partition.
 Timestamps in and out are UTC (naive ``now`` values included).
 
+``list_queries`` and ``run_query`` resolve names with a plain registry
+lookup (``registry.registered``); neither pays for the driver's
+verification order, which hashes the sources of every query.
+
 HTTP/WebSocket/JWT plumbing is out of scope (SURVEY §7.4): this class is
 what such a server would call.
 """
@@ -198,24 +202,26 @@ class EngineAPI:
     def list_queries(self) -> list[str]:
         """Names of every registered analytics query — the catalog
         endpoint a UI populates its query picker from."""
-        from rclabsapi_spark.registry import get_registry
+        from rclabsapi_spark.registry import registered
 
-        return sorted(get_registry())
+        return sorted(registered())
 
     def run_query(
         self, name: str, *, sf_dir: str, limit: int = 100
     ) -> list[str]:
         """Run a registry query by name and return JSON rows — the same
-        whitelist-then-execute shape as the metrics endpoints: unknown
-        names are a ValidationError (maps to HTTP 400), never an
-        arbitrary-code path, and the result is limit-clamped before
-        serialization (O6)."""
-        from rclabsapi_spark.registry import get_registry
+        whitelist-then-execute shape as the metrics endpoints: the name
+        is looked up in the registry (``registered()``, a dict access,
+        not the driver's verification order), unknown names are a
+        ValidationError (maps to HTTP 400), never an arbitrary-code
+        path, and the result is limit-clamped before serialization
+        (O6)."""
+        from rclabsapi_spark.registry import registered
 
-        reg = get_registry()
-        if name not in reg:
+        spec = registered().get(name)
+        if spec is None:
             raise ValidationError(f"unknown query {name!r}")
-        df = reg[name].fn(self.spark, sf_dir)
+        df = spec.fn(self.spark, sf_dir)
         return _to_json_rows(df.limit(clamp_limit(limit)))
 
 

@@ -60,12 +60,6 @@ ProgressCallback = Callable[[str, int], None]
 MILESTONES = {"extracted": 10, "transformed": 50, "loading": 80, "done": 100}
 
 
-def generate_job_id(clock: Clock) -> str:
-    """job_<epoch>_<rand> (etl_job_manager.cpp:701-710)."""
-    epoch = int(clock().replace(tzinfo=dt.timezone.utc).timestamp())
-    return f"job_{epoch}_{1000 + uuid.uuid4().int % 9000}"
-
-
 class ETLJobManager:
     """Control-plane job registry + executor (etl_job_manager.hpp analog).
 

@@ -2,9 +2,9 @@
 
 Every function is a Column→Column helper built from pyspark.sql.functions
 builtins — JVM-side, whole-stage-codegen friendly. No Python UDFs here:
-the reference's scalar surface (string case/trim ops, guarded numeric
-arithmetic, timestamp format/parse, JSON field extraction) maps 1:1 onto
-Catalyst expressions.
+the reference's scalar surface (string case/trim ops, numeric formatting
+and rounding, timestamp literals and durations) maps 1:1 onto Catalyst
+expressions.
 
 Reference citations (file:line into /root/reference) are given per function
 so parity can be checked.
@@ -54,26 +54,6 @@ def lowercase(c: Column) -> Column:
 def trim_ws(c: Column) -> Column:
     """F3 — trim " \\t\\n\\r" both ends (data_transformer.cpp:130-140)."""
     return F.trim(F.translate(c, "\t\n\r", "   "))
-
-
-def iequals(a: Column, b: Column) -> Column:
-    """F4 — string_utils.hpp:53-55."""
-    return F.lower(a) == F.lower(b)
-
-
-def istarts_with(a: Column, prefix: Column) -> Column:
-    """F4 — string_utils.hpp:57-58."""
-    return F.lower(a).startswith(F.lower(prefix))
-
-
-def iends_with(a: Column, suffix: Column) -> Column:
-    """F4 — string_utils.hpp:60-62."""
-    return F.lower(a).endswith(F.lower(suffix))
-
-
-def sanitize_string(c: Column) -> Column:
-    """F7 — quote/newline/tab → safe chars (input_validator.cpp:577-587)."""
-    return F.translate(c, '"\n\r\t', "'   ")
 
 
 # --------------------------------------------------------------------------
@@ -294,31 +274,9 @@ def grid_term(x: Column, grid: float = 1e9) -> Column:
     return F.when(guard.isNull(), F.floor(scaled)).cast("decimal(38,0)")
 
 
-def guarded_div(num: Column, den: Column, default: float = 0.0) -> Column:
-    """Division with the reference's divide-by-zero guard (A11,
-    job_monitoring_models.cpp:160-209): ``den > 0 ? num/den : default``."""
-    return F.when(den > 0, num / den).otherwise(F.lit(default))
-
-
 # --------------------------------------------------------------------------
 # Date/time (request_handler.cpp:1455-1487, rate_limiter.cpp:206-214)
 # --------------------------------------------------------------------------
-
-TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def format_ts(c: Column) -> Column:
-    """F15 — `%Y-%m-%d %H:%M:%S` UTC (request_handler.cpp:1455-1467)."""
-    return F.date_format(c, TS_FMT)
-
-
-def parse_iso8601(c: Column) -> Column:
-    """F16 — parse `YYYY-MM-DDTHH:MM:SS`; failure ⇒ now
-    (request_handler.cpp:1469-1487)."""
-    return F.coalesce(
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss"), F.current_timestamp()
-    )
-
 
 def ts_lit(value: dt.datetime | str) -> Column:
     """A timestamp literal that reads a naive ``datetime`` as UTC, the
@@ -336,34 +294,3 @@ def execution_time_ms(started: Column, completed: Column, now: Column, status: C
     end = F.when(status == "RUNNING", now).otherwise(completed)
     return (F.unix_millis(end) - F.unix_millis(started)).cast("long")
 
-
-def epoch_minute(c: Column) -> Column:
-    """F18 — epoch-minute window id (rate_limiter.cpp:206-209)."""
-    return F.date_trunc("minute", c)
-
-
-def epoch_hour(c: Column) -> Column:
-    """F18 — epoch-hour window id (rate_limiter.cpp:211-214)."""
-    return F.date_trunc("hour", c)
-
-
-# --------------------------------------------------------------------------
-# JSON / array / map (user_repository.cpp:32-33, job_monitoring_models.cpp
-# :646-670, etl_job_manager.cpp:308-311)
-# --------------------------------------------------------------------------
-
-
-def json_get(c: Column, field: str) -> Column:
-    """F21 — JSON field extraction (WebSocketMessage::fromJson,
-    job_monitoring_models.cpp:646-670)."""
-    return F.get_json_object(c, f"$.{field}")
-
-
-def roles_to_string(c: Column) -> Column:
-    """F20 — TEXT[] serialize (user_repository.cpp:32)."""
-    return F.array_join(c, ",")
-
-
-def string_to_roles(c: Column) -> Column:
-    """F20 — TEXT[] parse (user_repository.cpp:33)."""
-    return F.split(c, ",")

@@ -11,17 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# input_validator.cpp:152-158 emailPattern
-EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
-# input_validator.cpp:167-171 jobIdPattern
-JOB_ID_RE = r"^[A-Za-z0-9_-]{1,64}$"
-# input_validator.cpp:173-177 userIdPattern
-USER_ID_RE = r"^[A-Za-z0-9_-]{1,32}$"
-
-
-def is_valid_email(c: Column) -> Column:
-    return c.rlike(EMAIL_RE)
-
 
 def is_valid_password(c: Column) -> Column:
     """len 8-128 + upper + lower + digit (input_validator.cpp:160-165)."""
@@ -33,32 +22,11 @@ def is_valid_password(c: Column) -> Column:
     )
 
 
-def is_valid_job_id(c: Column) -> Column:
-    return c.rlike(JOB_ID_RE)
-
-
-def is_valid_user_id(c: Column) -> Column:
-    return c.rlike(USER_ID_RE)
-
-
 def contains_sql_injection(c: Column) -> Column:
     """F10 heuristic blocklist (input_validator.cpp:125, decl)."""
     return F.lower(c).rlike(
         r"('|--|;|\b(union|select|insert|update|delete|drop|exec)\b)"
     )
-
-
-def contains_xss(c: Column) -> Column:
-    return F.lower(c).rlike(r"(<script|javascript:|onerror\s*=|onload\s*=)")
-
-
-VALID_JOB_STATUSES = ("PENDING", "RUNNING", "COMPLETED", "FAILED", "CANCELLED")
-VALID_JOB_TYPES = ("EXTRACT", "TRANSFORM", "LOAD", "FULL_ETL")
-
-
-def is_valid_status(c: Column) -> Column:
-    """Case-insensitive status whitelist (input_validator.cpp:320-333)."""
-    return F.upper(c).isin(*VALID_JOB_STATUSES)
 
 
 def clamp_limit(n: int, lo: int = 1, hi: int = 1000) -> int:

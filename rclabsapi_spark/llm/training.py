@@ -131,17 +131,6 @@ def corpus_words(
     ).filter(F.col("word") != "")
 
 
-def unigram_logprobs(words: DataFrame) -> DataFrame:
-    """Train a unigram LM from the word relation: (word, cnt, total).
-    The vocab aggregate partial-combines map-side; the corpus total
-    re-aggregates the already-reduced vocab relation (cheap)."""
-    vocab = words.groupBy("word").agg(
-        F.count(F.lit(1)).cast("double").alias("cnt")
-    )
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    return vocab.join(F.broadcast(total))
-
-
 def unigram_score(
     docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
 ) -> DataFrame:

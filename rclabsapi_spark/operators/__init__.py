@@ -1,3 +1,3 @@
-from rclabsapi_spark.operators import aggregates, joins, relational, setops, windows
+from rclabsapi_spark.operators import aggregates, joins, relational, windows
 
-__all__ = ["aggregates", "joins", "relational", "setops", "windows"]
+__all__ = ["aggregates", "joins", "relational", "windows"]

@@ -115,13 +115,6 @@ def efficiency_score(
     return F.when(n > 0, total / n).otherwise(F.lit(0.0))
 
 
-def exact_percentile(df: DataFrame, col: str, p: float) -> DataFrame:
-    """A16 — exact interpolated percentile (performance_monitor.hpp:239-255).
-    ``percentile`` is exact (matches the reference's sort-and-index) —
-    ``percentile_approx`` is the 100TB-scale variant, one config away."""
-    return df.agg(F.expr(f"percentile({col}, {p})").alias("pctl"))
-
-
 def table_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Column-level data profile in ONE global aggregate: per column the
     row count, null count, distinct count, and (for numeric columns)

@@ -17,11 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def project(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P2 — explicit SELECT list (etl_job_repository.cpp:99-112)."""
-    return df.select(*cols)
-
-
 def filter_eq(df: DataFrame, col: str, value: Any) -> DataFrame:
     """P3/P4/P5 — equality filter (etl_job_repository.cpp:112, 177-190)."""
     return df.filter(F.col(col) == F.lit(value))
@@ -43,14 +38,6 @@ def filter_range(
     if hi is not None:
         df = df.filter(c <= F.lit(hi))
     return df
-
-
-def filter_expired(df: DataFrame, expires_col: str, now: Any, valid_col: str | None = None) -> DataFrame:
-    """P8 — valid rows = not expired (AND flag) (session_repository.cpp:189)."""
-    cond = F.col(expires_col) >= F.lit(now)
-    if valid_col is not None:
-        cond = cond & F.col(valid_col)
-    return df.filter(cond)
 
 
 def search_substring(df: DataFrame, col: str, needle: str) -> DataFrame:

@@ -25,15 +25,6 @@ def running_peak(df: DataFrame, key: str, order: str, metric: str, out: str) -> 
     return df.withColumn(out, F.max(metric).over(w))
 
 
-def time_to_first_event(
-    df: DataFrame, key: str, pred: Column, ts: str, out: str
-) -> DataFrame:
-    """W2 — first matching event's time, set once per entity
-    (job_monitoring_models.cpp:211-220)."""
-    w = Window.partitionBy(key)
-    return df.withColumn(out, F.min(F.when(pred, F.col(ts))).over(w))
-
-
 def keep_last_n(df: DataFrame, key: str, order_desc: str, n: int, *tiebreak: str) -> DataFrame:
     """W3/W4 — ring-buffer retention: last N rows per entity
     (job_monitor_service.hpp:156-166). The row_number plan shuffles once on

@@ -94,22 +94,3 @@ def search_logs(
     if params.offset:
         out = out.offset(params.offset)
     return out.limit(params.max_results)
-
-
-def log_statistics(
-    logs: DataFrame,
-    start: dt.datetime | str | None = None,
-    end: dt.datetime | str | None = None,
-    *,
-    ts_col: str = "timestamp",
-    component_col: str = "component",
-    level_col: str = "level",
-) -> DataFrame:
-    """A2 — getLogStatistics (log_file_manager.cpp:1547-1586): per
-    component × level counts over a time range, one shuffle."""
-    out = logs
-    if start is not None:
-        out = out.filter(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        out = out.filter(F.col(ts_col) <= F.lit(end))
-    return out.groupBy(component_col, level_col).agg(F.count(F.lit(1)).alias("cnt"))

@@ -5,6 +5,16 @@ a Spark callable ``(spark, sf_dir) -> DataFrame`` plus (where
 SQL-expressible) an equivalent DuckDB oracle SQL string over the fixture
 views. ``__spark_entry__.py`` re-exports this registry to the driver.
 
+Two readers of the registry:
+
+- ``registered()`` — the live name -> ``QuerySpec`` mapping. Use it for
+  every lookup by name (``EngineAPI.run_query`` / ``list_queries``,
+  ``entry``, tests, probes): it costs a dict access.
+- ``get_registry()`` — the same specs ordered for the driver's
+  verification window, which hashes every query's transitive sources
+  against ``verified.json``. Use it only where that order matters
+  (``queries()`` / ``oracle_sql()``, ``bench.py``, the ledger scripts).
+
 Cross-engine determinism rules used throughout the suites:
 
 - column names are aliased identically on both sides (the driver's compare
@@ -240,16 +250,11 @@ def _load_verified() -> dict[str, dict]:
         return {}
 
 
-def get_registry() -> dict[str, QuerySpec]:
-    """Import all suites (idempotent) and return the full registry,
-    ordered for the driver's 50-queries-per-round verification window:
-
-    1. queries with NO valid green row first — never verified, or source/
-       oracle edited since the green row (digest mismatch);
-    2. then verified queries, oldest green round first, so stale evidence
-       rotates back through the window (~every 2 rounds at 126 queries);
-    3. name as the deterministic tie-break.
-    """
+def registered() -> dict[str, QuerySpec]:
+    """Import all suites (idempotent) and return the live registry,
+    name -> ``QuerySpec``, in registration order. It reads no file and
+    hashes no source. The mapping returned is the registry itself: an
+    entry replaced in it is the one later lookups see."""
     from rclabsapi_spark.suites import (  # noqa: F401
         analytics,
         approx,
@@ -270,6 +275,22 @@ def get_registry() -> dict[str, QuerySpec]:
         transform,
     )
 
+    return _REGISTRY
+
+
+def get_registry() -> dict[str, QuerySpec]:
+    """The full registry (``registered()``), ordered for the driver's
+    50-queries-per-round verification window:
+
+    1. queries with NO valid green row first — never verified, or source/
+       oracle edited since the green row (digest mismatch);
+    2. then verified queries, oldest green round first, so stale evidence
+       rotates back through the window (~every 2 rounds at 126 queries);
+    3. name as the deterministic tie-break.
+
+    The order costs a ``spec_digest`` of every query: a transitive source
+    walk and a sha256 each, 0.5–1 s of CPU in all.
+    """
     verified = _load_verified()
 
     def order(s: QuerySpec) -> tuple:
@@ -278,5 +299,5 @@ def get_registry() -> dict[str, QuerySpec]:
             return (0, 0, s.name)
         return (1, rec["round"], s.name)
 
-    ordered = sorted(_REGISTRY.values(), key=order)
+    ordered = sorted(registered().values(), key=order)
     return {s.name: s for s in ordered}

@@ -40,7 +40,7 @@ def main() -> None:
         phash_near_dup_pairs,
         wav_energy_hash_bands,
     )
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.session import get_spark
     from rclabsapi_spark.streaming.frames import (
         frame_phash_sink,
@@ -117,7 +117,7 @@ def main() -> None:
                 key_cols=key_cols,
             )
         else:
-            batch_pairs = get_registry()["mm_frame_phash_neardup"].fn(
+            batch_pairs = registered()["mm_frame_phash_neardup"].fn(
                 spark, sf_dir
             )
         want = sorted(tuple(r) for r in batch_pairs.collect())

@@ -89,9 +89,9 @@ def build_query_df(spark, name: str):
     import inspect
 
     if name not in _QDF_CACHE:
-        from rclabsapi_spark.registry import get_registry
+        from rclabsapi_spark.registry import registered
 
-        spec = get_registry()[name]
+        spec = registered()[name]
         kw = {}
         if "materialize" in inspect.signature(spec.fn).parameters:
             kw["materialize"] = False

@@ -84,9 +84,9 @@ def test_registered_bound_queries_all_true(spark):
     """The registry's within_bound / rank_ok flags must be uniformly true
     at every fixture SF the driver might use (the oracle asserts literal
     true, so a false anywhere is a parity break, not just a loose bound)."""
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
 
-    reg = get_registry()
+    reg = registered()
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         sf_dir = f"/root/testdata/{sf}"
         d = reg["approx_distinct_bound"].fn(spark, sf_dir)

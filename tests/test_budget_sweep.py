@@ -51,10 +51,10 @@ def test_crawl_budget_known_answer(spark):
 
 
 def test_threshold_sweep_monotone_full_spine(spark):
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
 
     rows = (
-        get_registry()["dedup_cosine_threshold_sweep"]
+        registered()["dedup_cosine_threshold_sweep"]
         .fn(spark, SF)
         .orderBy("threshold")
         .collect()
@@ -72,9 +72,9 @@ def test_threshold_sweep_monotone_full_spine(spark):
 
 
 def test_score_agreement_bounds(spark):
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
 
-    row = get_registry()["retr_score_agreement"].fn(spark, SF).collect()[0]
+    row = registered()["retr_score_agreement"].fn(spark, SF).collect()[0]
     assert -1.0 <= row["pearson_r"] <= 1.0
     assert 0 <= row["top15_overlap"] <= 15
     assert row["n_docs"] > 15

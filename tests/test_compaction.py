@@ -31,7 +31,7 @@ def test_token_savings_parity_through_compaction(spark, tmp_path):
     compacted fingerprints), the folded partitions must be gone, a
     replay of a compacted batch must be refused, and a replay of a
     live batch stays idempotent."""
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.accounting import (
         _DELTA_COLS,
         token_savings_sink,
@@ -91,7 +91,7 @@ def test_token_savings_parity_through_compaction(spark, tmp_path):
     sink(parts[3], 3)
     want = {
         r["source"]: r.asDict()
-        for r in get_registry()["dedup_token_savings"].fn(spark, SF).collect()
+        for r in registered()["dedup_token_savings"].fn(spark, SF).collect()
     }
     got = {
         r["source"]: r.asDict()

@@ -6,13 +6,13 @@ get the mathematics right."""
 
 from __future__ import annotations
 
-from rclabsapi_spark.registry import get_registry
+from rclabsapi_spark.registry import registered
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_tier_agreement_matrix_monotonicity(spark):
-    rows = get_registry()["dedup_tier_agreement"].fn(spark, SF).collect()
+    rows = registered()["dedup_tier_agreement"].fn(spark, SF).collect()
     cells = {(r["j_threshold"], r["max_hamming"]): r for r in rows}
     js = sorted({j for j, _ in cells})
     hs = sorted({h for _, h in cells})
@@ -37,7 +37,7 @@ def test_tier_agreement_matrix_monotonicity(spark):
 
 
 def test_incremental_card_deltas_consistent(spark):
-    reg = get_registry()
+    reg = registered()
     card = {r["source"]: r for r in reg["train_incremental_card"].fn(spark, SF).collect()}
     diff = {r["source"]: r for r in reg["dq_snapshot_diff"].fn(spark, SF).collect()}
     assert card, "no sources in the fixture card"
@@ -59,7 +59,7 @@ def test_token_savings_reconciles_with_dedup_exact(spark):
     their totals must reconcile: Σ(n_docs - n_dup_docs) over sources =
     |dedup_exact groups|, Σ n_docs = corpus size, and per row the token
     partition and the rate's definition hold exactly."""
-    reg = get_registry()
+    reg = registered()
     rows = reg["dedup_token_savings"].fn(spark, SF).collect()
     groups = reg["dedup_exact"].fn(spark, SF).collect()
     assert rows, "no sources in the fixture"

@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import pytest
 
-from rclabsapi_spark.registry import get_registry
+from rclabsapi_spark.registry import registered
 
 from .conftest import assert_oracle_match
 
-_REG = get_registry()
+_REG = registered()
 _WITH_ORACLE = [name for name, spec in sorted(_REG.items()) if spec.oracle]
 _ROWS_ONLY = [name for name, spec in sorted(_REG.items()) if not spec.oracle]
 

@@ -10,11 +10,11 @@ from collections import Counter
 
 import pytest
 
-from rclabsapi_spark.registry import get_registry
+from rclabsapi_spark.registry import registered
 
 from .conftest import SF_CORRECT, build_query_df
 
-_REG = get_registry()
+_REG = registered()
 
 
 def _fn(spark, name: str):

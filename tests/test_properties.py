@@ -644,11 +644,11 @@ def test_lsh_verification_matches_oracles(spark, docs):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.suites.llm import _INCR_LSH_ORACLE, _MINHASH_ORACLE
 
     value_hash = _drive_contract_hash()
-    reg = get_registry()
+    reg = registered()
     with tempfile.TemporaryDirectory() as sf_dir:
         pq.write_table(
             pa.table({

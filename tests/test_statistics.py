@@ -18,13 +18,13 @@ from rclabsapi_spark.operators.analytics import (
     entropy_by_group,
     equidepth_histogram,
 )
-from rclabsapi_spark.registry import get_registry
+from rclabsapi_spark.registry import registered
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_ks_matches_python_bruteforce(spark):
-    q = get_registry()["stat_ks_value_drift"].fn
+    q = registered()["stat_ks_value_drift"].fn
     got = {r["event_type"]: r for r in q(spark, SF_DIR).collect()}
 
     rows = (

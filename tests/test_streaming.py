@@ -501,10 +501,10 @@ def test_streaming_sessionization_matches_batch(spark, events_dir, tmp_path):
     }
     assert got == expected
     # conservation vs the oracle-verified gaps-and-islands query
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
 
     total_batch = sum(t[3] for t in expected)
-    gi = get_registry()["w_sessionization"].fn(spark, SF_SMOKE)
+    gi = registered()["w_sessionization"].fn(spark, SF_SMOKE)
     assert total_batch == sum(r["n_events"] for r in gi.collect())
 
 
@@ -1007,7 +1007,7 @@ def test_streaming_ivf_churn_matches_batch_query(spark, tmp_path):
     import os
 
     from rclabsapi_spark.llm.similarity import _as_double, ivf_assign
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.ann import churn_delta_sink, churn_report
 
     sf = "/root/testdata/sf0.001"
@@ -1068,7 +1068,7 @@ def test_streaming_ivf_churn_matches_batch_query(spark, tmp_path):
     got = report()
     want = {
         r["centroid_id"]: r.asDict()
-        for r in get_registry()["sim_ivf_incremental_churn"]
+        for r in registered()["sim_ivf_incremental_churn"]
         .fn(spark, sf)
         .collect()
     }
@@ -1768,7 +1768,7 @@ def test_token_savings_stream_matches_batch_report(spark, tmp_path):
     at-least-once foreachBatch contract) must not change the totals."""
     import os
 
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.accounting import (
         token_savings_sink,
         token_savings_totals,
@@ -1815,7 +1815,7 @@ def test_token_savings_stream_matches_batch_report(spark, tmp_path):
     got = snap()
     want = {
         r["source"]: r.asDict()
-        for r in get_registry()["dedup_token_savings"].fn(spark, sf).collect()
+        for r in registered()["dedup_token_savings"].fn(spark, sf).collect()
     }
     assert got == want
 
@@ -2102,7 +2102,7 @@ def test_policy_savings_stream_matches_batch_card(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.accounting import (
         policy_savings_report,
         token_savings_sink,
@@ -2111,7 +2111,7 @@ def test_policy_savings_stream_matches_batch_card(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
 
-    card = get_registry()["dedup_policy_savings"].fn(spark, sf).cache()
+    card = registered()["dedup_policy_savings"].fn(spark, sf).cache()
     frozen_extras = card.select(
         "source",
         (F.col("tokens_saved_neardup") - F.col("tokens_saved_exact"))
@@ -2189,7 +2189,7 @@ def test_crawl_budget_stream_matches_batch_allocation(spark, tmp_path):
         canonicalize_url,
         url_registrable_domain,
     )
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.budget import (
         crawl_budget_report,
         domain_count_sink,
@@ -2248,7 +2248,7 @@ def test_crawl_budget_stream_matches_batch_allocation(spark, tmp_path):
 
     want = {
         r["domain"]: r.asDict()
-        for r in get_registry()["clean_crawl_budget"].fn(spark, sf).collect()
+        for r in registered()["clean_crawl_budget"].fn(spark, sf).collect()
     }
     got = snap()
     assert got == want
@@ -2396,7 +2396,7 @@ def test_incremental_card_stream_matches_batch_card(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from rclabsapi_spark.llm.text import bpe_ish_count, quality_features
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.cards import (
         incremental_card_report,
         snapshot_ingest_sink,
@@ -2482,7 +2482,7 @@ def test_incremental_card_stream_matches_batch_card(spark, tmp_path):
 
     want = {
         r["source"]: r.asDict()
-        for r in get_registry()["train_incremental_card"]
+        for r in registered()["train_incremental_card"]
         .fn(spark, sf)
         .collect()
     }

@@ -40,7 +40,7 @@ def test_phash_twin_exact_parity_and_replay(spark, tmp_path):
     folded pair report equals the registered batch query row-for-row
     (integer hashes, no tolerance); cross-batch pairs are genuinely
     exercised; a verbatim replay of a live batch changes nothing."""
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.frames import (
         frame_phash_sink,
         phash_pairs_report,
@@ -70,7 +70,7 @@ def test_phash_twin_exact_parity_and_replay(spark, tmp_path):
     q.awaitTermination(180)
 
     want = _rows(
-        get_registry()["mm_frame_phash_neardup"].fn(spark, SF)
+        registered()["mm_frame_phash_neardup"].fn(spark, SF)
     )
     got = _rows(phash_pairs_report(spark, pair_dir))
     assert got == want and len(got) > 0
@@ -104,7 +104,7 @@ def test_phash_twin_order_independent(spark, tmp_path):
     (reversed classes, direct handler calls) folds to the same pair
     set — discovery order moves between in-batch and cross paths, the
     answer does not."""
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.frames import (
         frame_phash_sink,
         phash_pairs_report,
@@ -117,7 +117,7 @@ def test_phash_twin_order_independent(spark, tmp_path):
     for bid, cls in enumerate([2, 0, 1]):
         sink(frames.filter(F.col("doc_id") % 3 == cls), bid)
 
-    want = _rows(get_registry()["mm_frame_phash_neardup"].fn(spark, SF))
+    want = _rows(registered()["mm_frame_phash_neardup"].fn(spark, SF))
     assert _rows(phash_pairs_report(spark, pair_dir)) == want
     frames.unpersist()
 
@@ -249,7 +249,7 @@ def test_phash_twin_through_hadoop_scheme_paths(spark, tmp_path):
         TwinStoreSpec,
         compact_twin_stores,
     )
-    from rclabsapi_spark.registry import get_registry
+    from rclabsapi_spark.registry import registered
     from rclabsapi_spark.streaming.frames import (
         PAIR_SCHEMA,
         frame_phash_sink,
@@ -264,7 +264,7 @@ def test_phash_twin_through_hadoop_scheme_paths(spark, tmp_path):
     for bid in range(2):
         sink(frames.filter(F.col("doc_id") % 2 == bid), bid)
 
-    want = _rows(get_registry()["mm_frame_phash_neardup"].fn(spark, SF))
+    want = _rows(registered()["mm_frame_phash_neardup"].fn(spark, SF))
     assert _rows(phash_pairs_report(spark, pair_dir)) == want
 
     compact_twin_stores(
