@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rclabsapi_spark.layout import spread_by
-
 from rclabsapi_spark.functions.scalars import round_half_up
+from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.operators.linkage import block_pairs
 
 
 def tokens(text: Column) -> Column:
@@ -196,7 +196,8 @@ def minhash_signatures(
     by key so the groupBy adds no second shuffle. min over the
     duplicate-bearing posting equals min over the distinct set, so no
     pre-dedup pass."""
-    assert num_hashes <= 8, "md5 has 32 hex chars = 8 four-char lanes"
+    if num_hashes > 8:
+        raise ValueError("md5 has 32 hex chars = 8 four-char lanes")
     posting = shingle_posting(
         docs.filter(F.col(key_col).isNotNull()),
         text_col=text_col, key_col=key_col, n=n,
@@ -239,6 +240,8 @@ def _band_keys(
     """(key, band_id, band_key): each doc's signature cut into ``bands``
     bands of ``num_hashes // bands`` lanes — all the band shuffle
     carries."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
     rows = num_hashes // bands
     mh = minhash_signatures(
         docs, text_col=text_col, key_col=key_col, n=n, num_hashes=num_hashes
@@ -316,8 +319,7 @@ def lsh_candidate_pairs(
     Physical shape: the band shuffle carries ONLY (doc_id, band key) —
     ~32 B/row; at 10¹⁰ docs the alternative of riding each doc's ~KB
     shingle set through every band bucket is ~TBs × bands through the
-    exchange. Pair generation is per-bucket array combinatorics
-    (``collect_list`` + indexed ``transform``/``slice``; no self-join).
+    exchange. Pairs come from ``block_pairs`` over the band buckets.
     The deduplicated pairs then join the corpus's (key, text) once per
     side and Jaccard is computed in the projection (``_verified_pairs``
     states the scale trade: text per pair side, shingling CPU × the mean
@@ -332,27 +334,14 @@ def lsh_candidate_pairs(
         docs, text_col=text_col, key_col=key_col, n=n,
         num_hashes=num_hashes, bands=bands,
     )
-    buckets = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.array_sort(F.collect_list(F.col(key_col))).alias("members"))
-        .filter(F.size("members") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("members") <= max_bucket_size)
-
-    m = F.col("members")
-    # members are sorted → doc_a < doc_b within each generated pair.
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     pairs = (
-        buckets.select(F.explode(pair_structs).alias("p"))
+        block_pairs(
+            banded,
+            ["band_id", "band_key"],
+            F.col(key_col),
+            max_bucket_size,
+            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+        )
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -383,52 +372,30 @@ def ngram_jaccard_pairs(
     Physical shape: the distinct posting comes from one
     groupBy(key).collect_set over the shingle stream — the groupBy
     reuses the posting's key partitioning (no exchange), dedupes, and
-    yields the per-doc set size for free (``size(set)``), replacing the
-    previous dropDuplicates-(key,shingle)-shuffle + count-window pair
-    with zero extra exchanges. The inverted index is then one
-    groupBy(shingle) with in-bucket pair generation via array
-    combinatorics (the LSH pair-gen shape) instead of a posting
-    self-join. The shingle pipeline is computed ONCE — a self-join's two
-    sides each recompute it — and the hot-shingle guard becomes a plain
-    bucket-size filter (a shingle's bucket size IS its document
-    frequency). Pair counts per hot shingle are identical either way
-    (a B-doc bucket yields B²/2 pairs, same as the join), so this is
-    strictly fewer exchanges for the same output."""
+    yields the per-doc set size for free (``size(set)``). The inverted
+    index is ``block_pairs`` over the shingle buckets, so the shingle
+    pipeline is computed once and the hot-shingle guard is its block
+    cap (a shingle's bucket size IS its document frequency)."""
     sets = doc_shingle_sets(docs, text_col=text_col, key_col=key_col, n=n)
     posting = sets.select(
         F.col(key_col),
         F.size("shingle_set").alias("sh_size"),
         F.explode("shingle_set").alias("shingle"),
     )
-    buckets = (
-        posting.groupBy("shingle")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(key_col), F.col("sh_size")))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
-    if max_shingle_df is not None:
-        buckets = buckets.filter(F.size("members") <= max_shingle_df)
-    m = F.col("members")
     # members sorted by key (first struct field) → doc_a < doc_b.
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                lambda y: F.struct(
-                    x[key_col].alias("doc_a"),
-                    y[key_col].alias("doc_b"),
-                    x["sh_size"].alias("size_a"),
-                    y["sh_size"].alias("size_b"),
-                ),
+    common = (
+        block_pairs(
+            posting,
+            ["shingle"],
+            F.struct(F.col(key_col), F.col("sh_size")),
+            max_shingle_df,
+            lambda x, y: F.struct(
+                x[key_col].alias("doc_a"),
+                y[key_col].alias("doc_b"),
+                x["sh_size"].alias("size_a"),
+                y["sh_size"].alias("size_b"),
             ),
         )
-    )
-    common = (
-        buckets.select(F.explode(pair_structs).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(
             F.count(F.lit(1)).alias("common"),
@@ -633,7 +600,8 @@ def simhash_bits(
     uses spread_by (explicit partition count): a count-less repartition
     is an AQE coalescing target and collapses to ONE partition at bench
     scale, serializing the whole vote stage."""
-    assert bits <= 60, "fingerprint must fit a signed 64-bit int"
+    if bits > 60:
+        raise ValueError("fingerprint must fit a signed 64-bit int")
     tok = (
         spread_by(docs, key_col)
         .select(
@@ -683,9 +651,8 @@ def simhash_near_dup_pairs(
     ``max_hamming + 1`` bit-bands — any pair within the distance shares
     at least one exact band, so banding finds ALL qualifying pairs (100%
     recall) while only comparing within buckets. Exact Hamming
-    (``bit_count(a XOR b)``) verifies candidates. Same physical shape as
-    the MinHash path: one shuffle on the band key, in-bucket pair
-    generation, no self-join.
+    (``bit_count(a XOR b)``) verifies candidates. Candidates come from
+    ``block_pairs`` over the band buckets, as in the MinHash path.
 
     ``bits`` matters for blocking quality: with 16-bit fingerprints the
     bands are 5-6 bits (≤64 distinct values), so every band bucket holds
@@ -713,34 +680,19 @@ def simhash_near_dup_pairs(
         key_col, "simhash", F.explode(F.array(*band_cols)).alias("band")
     ).select(key_col, "simhash", "band.band_id", "band.band_key")
 
-    buckets = (
-        banded.groupBy("band_id", "band_key")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(key_col), F.col("simhash")))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("members") <= max_bucket_size)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                lambda y: F.struct(
-                    x[key_col].alias("doc_a"),
-                    y[key_col].alias("doc_b"),
-                    x["simhash"].alias("fp_a"),
-                    y["simhash"].alias("fp_b"),
-                ),
+    pairs = (
+        block_pairs(
+            banded,
+            ["band_id", "band_key"],
+            F.struct(F.col(key_col), F.col("simhash")),
+            max_bucket_size,
+            lambda x, y: F.struct(
+                x[key_col].alias("doc_a"),
+                y[key_col].alias("doc_b"),
+                x["simhash"].alias("fp_a"),
+                y["simhash"].alias("fp_b"),
             ),
         )
-    )
-    pairs = (
-        buckets.select(F.explode(pair_structs).alias("p"))
         .select("p.doc_a", "p.doc_b", "p.fp_a", "p.fp_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )

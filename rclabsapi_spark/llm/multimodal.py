@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.operators.linkage import block_pairs
 
 
 def attach_binary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -558,9 +559,11 @@ def average_hash_bands(
     import numpy as np
 
     n_cells = grid * grid
-    assert n_cells % n_bands == 0, "bands must divide the bit count"
+    if n_cells % n_bands:
+        raise ValueError("bands must divide the bit count")
     w_band = n_cells // n_bands
-    assert w_band <= 31, "band must fit a signed int"
+    if w_band > 31:
+        raise ValueError("band must fit a signed int")
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -624,18 +627,19 @@ def phash_near_dup_pairs(
     """Perceptual near-dup pairs: units whose average-hashes are within
     ``max_hamming`` bits. Pigeonhole blocking on the band columns
     (``n_bands`` must exceed ``max_hamming`` for 100% recall: a pair
-    within k bit flips cannot differ in all k+1 bands), in-bucket pair
-    generation from a sorted members array (the simhash_near_dup_pairs
-    shape — one shuffle on the band key, no self-join), exact Hamming
-    over all bands verifying candidates. ``max_bucket_size`` caps
-    pathological buckets at scale (a cap is a recall trade the caller
-    opts into; the registered query leaves it off so the oracle's
-    O(n²) spec matches exactly)."""
-    assert n_bands > max_hamming, "pigeonhole needs max_hamming < n_bands"
+    within k bit flips cannot differ in all k+1 bands), candidates from
+    ``block_pairs`` over the band buckets, and exact Hamming over all
+    bands verifying them inside the pair comprehension (its ``keep``).
+    ``max_bucket_size`` caps pathological buckets at scale (a cap is a
+    recall trade the caller opts into; the registered query leaves it
+    off so the oracle's O(n²) spec matches exactly)."""
+    if n_bands <= max_hamming:
+        raise ValueError("pigeonhole needs max_hamming < n_bands")
     # the packed probe below allocates 16 bits per band in one 64-bit
     # long; a 5th band would shift past bit 63 and silently corrupt
     # every Hamming distance — fail loudly instead
-    assert n_bands <= 4, "band packing holds at most 4 16-bit bands"
+    if n_bands > 4:
+        raise ValueError("band packing holds at most 4 16-bit bands")
     band_names = [f"b{b}" for b in range(n_bands)]
     # Pack the band columns into ONE 64-bit word (band b at bits
     # [16b, 16b+16)): bands are bit-disjoint, so the pair Hamming
@@ -669,15 +673,6 @@ def phash_near_dup_pairs(
         ).alias("band"),
     ).select(member.alias("m"), "band.band_id", "band.band_key")
 
-    buckets = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.array_sort(F.collect_list("m")).alias("members"))
-        .filter(F.size("members") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("members") <= max_bucket_size)
-    m = F.col("members")
-
     # Verify Hamming INSIDE the in-bucket comprehension, before any pair
     # struct is materialized: perceptual hashes of one corpus concentrate
     # on few band keys (measured at sf0.1: top bucket 1,420 members ⇒
@@ -689,18 +684,14 @@ def phash_near_dup_pairs(
     # output-sized; the O(B²) probes still run, but each is one
     # xor+bit_count with no struct allocation behind it. The cross-band
     # dropDuplicates then sees ≤ n_bands copies per TRUE pair.
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.filter(
-                    F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                    lambda y: F.bit_count(x["fp"].bitwiseXOR(y["fp"]))
-                    <= F.lit(max_hamming),
-                ),
-                lambda y: F.struct(x.alias("ua"), y.alias("ub")),
-            ),
-        )
+    candidates = block_pairs(
+        banded,
+        ["band_id", "band_key"],
+        "m",
+        max_bucket_size,
+        lambda x, y: F.struct(x.alias("ua"), y.alias("ub")),
+        keep=lambda x, y: F.bit_count(x["fp"].bitwiseXOR(y["fp"]))
+        <= F.lit(max_hamming),
     )
     a_cols = [
         F.col("p.ua")[k].alias(f"{k}_a") for k in key_cols
@@ -710,8 +701,7 @@ def phash_near_dup_pairs(
     ] + [F.col("p.ub")["fp"].alias("fpb")]
     hamming = F.bit_count(F.col("fpa").bitwiseXOR(F.col("fpb")))
     pairs = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select(*a_cols, *b_cols)
+        candidates.select(*a_cols, *b_cols)
         .withColumn("hamming", hamming.cast("int"))
         .dropDuplicates(
             [f"{k}_a" for k in key_cols] + [f"{k}_b" for k in key_cols]
@@ -763,9 +753,11 @@ def wav_energy_hash_bands(
     first."""
     import numpy as np
 
-    assert n_seg % n_bands == 0, "bands must divide the bit count"
+    if n_seg % n_bands:
+        raise ValueError("bands must divide the bit count")
     w_band = n_seg // n_bands
-    assert w_band <= 31, "band must fit a signed int"
+    if w_band > 31:
+        raise ValueError("band must fit a signed int")
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from rclabsapi_spark.catalog import local_df
 from rclabsapi_spark.functions.scalars import sql_double
 from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.operators.linkage import block_pairs
 
 
 def _as_double(vec: Column) -> Column:
@@ -140,12 +141,11 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs — the fifth dedup tier
     (alongside exact / MinHash-LSH / SimHash / n-gram Jaccard).
 
-    Pair generation mirrors llm.dedup.lsh_candidate_pairs: one shuffle on
-    the sign-LSH bucket, per-bucket pair generation via array
-    combinatorics (no self-join → the embedding scan runs once); the
-    vectors ride along, so exact cosine needs no join back. ``num_bits`` trades recall vs bucket
-    size; ``max_bucket_size`` guards the B² blowup of degenerate buckets
-    at corpus scale."""
+    Candidates come from ``block_pairs`` over the sign-LSH buckets (the
+    embedding scan runs once); the vectors ride along, so exact cosine
+    needs no join back. ``num_bits`` trades recall vs bucket size;
+    ``max_bucket_size`` guards the B² blowup of degenerate buckets at
+    corpus scale."""
     v = _as_double(F.col(vec_col))
     bucketed = spread_by(embeddings, key_col).select(
         F.col(key_col),
@@ -157,41 +157,20 @@ def embedding_near_dup_pairs(
         norm(v).alias("nrm"),
         sign_bucket(v, num_bits).alias("bucket"),
     )
-    buckets = (
-        bucketed.groupBy("bucket")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(key_col), F.col("v"), F.col("nrm"))
-                )
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("members") <= max_bucket_size)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                lambda y: F.struct(
-                    x[key_col].alias("id_a"),
-                    y[key_col].alias("id_b"),
-                    x["v"].alias("va"),
-                    y["v"].alias("vb"),
-                    x["nrm"].alias("na"),
-                    y["nrm"].alias("nb"),
-                ),
-            ),
-        )
-    )
-    pairs = buckets.select(
-        F.col("bucket"), F.explode(pair_structs).alias("p")
-    ).select(
-        "bucket", "p.id_a", "p.id_b", "p.va", "p.vb", "p.na", "p.nb"
-    )
+    pairs = block_pairs(
+        bucketed,
+        ["bucket"],
+        F.struct(F.col(key_col), F.col("v"), F.col("nrm")),
+        max_bucket_size,
+        lambda x, y: F.struct(
+            x[key_col].alias("id_a"),
+            y[key_col].alias("id_b"),
+            x["v"].alias("va"),
+            y["v"].alias("vb"),
+            x["nrm"].alias("na"),
+            y["nrm"].alias("nb"),
+        ),
+    ).select("bucket", "p.id_a", "p.id_b", "p.va", "p.vb", "p.na", "p.nb")
     out = pairs.select(
         "bucket",
         "id_a",
@@ -425,9 +404,8 @@ def semantic_dedup(
 
     Scale shape: k-means is K×dim driver pulls per iteration (the MLlib
     pattern, see kmeans_centroids); assignment is one broadcast-join
-    scan; in-cluster pair generation reuses the sorted-members array
-    combinatorics of embedding_near_dup_pairs (one shuffle on
-    centroid_id, no self-join). Cluster sizes are corpus/k in
+    scan; in-cluster pairs come from ``block_pairs`` blocked on
+    centroid_id. Cluster sizes are corpus/k in
     expectation — grow ``k`` with the corpus to bound the B² in-cluster
     work (the paper runs K≈10⁵ for web-scale corpora); degenerate
     clusters are dropped via ``max_cluster_size`` (cap documented, same
@@ -438,29 +416,18 @@ def semantic_dedup(
     assigned = ivf_assign(
         embeddings, vec_col=vec_col, key_col=key_col, centroids=cents
     )
-    clusters = assigned.groupBy("centroid_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(key_col), F.col("v")))
-        ).alias("members")
-    )
-    if max_cluster_size is not None:
-        clusters = clusters.filter(F.size("members") <= max_cluster_size)
-    m = F.col("members")
     # pair (x, y) with x.key < y.key — y is the drop candidate
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m) - i - F.lit(1)),
-                lambda y: F.struct(
-                    y[key_col].alias("dup_key"),
-                    F.round(cosine(x["v"], y["v"]), 9).alias("sim"),
-                ),
+    dropped = (
+        block_pairs(
+            assigned,
+            ["centroid_id"],
+            F.struct(F.col(key_col), F.col("v")),
+            max_cluster_size,
+            lambda x, y: F.struct(
+                y[key_col].alias("dup_key"),
+                F.round(cosine(x["v"], y["v"]), 9).alias("sim"),
             ),
         )
-    )
-    dropped = (
-        clusters.select(F.explode(pair_structs).alias("p"))
         .filter(F.col("p.sim") >= threshold)
         .select(F.col("p.dup_key").alias(key_col))
         .distinct()

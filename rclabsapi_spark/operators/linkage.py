@@ -23,13 +23,17 @@ Scale posture:
   sub-block under at least one salt) rather than collapsing to zero
   when a head block ("J. Smith") crosses the cap. Edit distance runs
   JVM-side (``levenshtein``) on candidates only.
-- Basket pair-gen is the same shape: self-join within basket id, basket
-  size capped, support counts partial-aggregate before the pair shuffle.
+- Basket pair-gen and every near-dup tier share one blocked-pair
+  primitive (``block_pairs`` / ``sorted_pairs``): group by the block
+  key, collect a sorted member array, drop blocks over the cap, and
+  emit each in-block pair once from the array, with no self-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rclabsapi_spark.functions.scalars import round_half_up
@@ -186,6 +190,61 @@ def blocked_fuzzy_pairs(
     return first.unionByName(second)
 
 
+def sorted_pairs(
+    members: Column,
+    pair: Callable[[Column, Column], Column],
+    keep: Callable[[Column, Column], Column] | None = None,
+) -> Column:
+    """``pair(x, y)`` for every element ``x`` of the array ``members``
+    and every ``y`` after it: with sorted, distinct members that is each
+    unordered pair once, ``x < y``. ``keep(x, y)``, when given, filters
+    the later elements inside the comprehension, so a rejected pair is
+    never built. The one place the in-block pair comprehension is
+    written."""
+
+    def later(x: Column, i: Column) -> Column:
+        rest = F.slice(members, i + F.lit(2), F.size(members) - i - F.lit(1))
+        return rest if keep is None else F.filter(rest, lambda y: keep(x, y))
+
+    return F.flatten(
+        F.transform(
+            members,
+            lambda x, i: F.transform(later(x, i), lambda y: pair(x, y)),
+        )
+    )
+
+
+def block_pairs(
+    df: DataFrame,
+    by: Sequence[str],
+    member: Column | str,
+    cap: int | None,
+    pair: Callable[[Column, Column], Column],
+    keep: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
+    """(*by, p): the in-block pairs of ``df`` blocked on ``by``, one row
+    per pair, ``p = pair(x, y)`` with ``x < y`` in ``member`` order.
+
+    One exchange on the block key collects each block's sorted member
+    array; blocks of one member and blocks over ``cap`` members (when
+    ``cap`` is not None) are dropped, and ``sorted_pairs`` emits the
+    pairs from the array (no self-join). A B-member block yields B²/2
+    pairs, so ``cap`` is the quadratic guard; it is checked on the built
+    array, so the largest block is still collected whole once. Equal
+    members pair with each other, so callers block unique members (a
+    key column, or a struct that leads with one)."""
+    blocks = (
+        df.groupBy(*by)
+        .agg(F.array_sort(F.collect_list(member)).alias("members"))
+        .filter(F.size("members") >= 2)
+    )
+    if cap is not None:
+        blocks = blocks.filter(F.size("members") <= cap)
+    return blocks.select(
+        *by, F.explode(sorted_pairs(F.col("members"), pair, keep)).alias("p")
+    )
+
+
 def basket_pair_support(
     items: DataFrame,
     *,
@@ -219,10 +278,10 @@ def basket_pair_support(
     surviving baskets reach the array build; everything — the
     (basket, item) dedup, the window count, the collect, the pair
     explode — rides ONE spread exchange on the basket id (every
-    reduction clusters on a superset of the key). Pairs come from in-bucket array combinatorics
-    over the sorted item set (the LSH pair-gen shape — no self-join,
-    and a basket is ≤ ``max_basket`` items by construction, so the
-    per-row array is bounded). Item supports and N re-derive from the
+    reduction clusters on a superset of the key). Pairs come from
+    ``sorted_pairs`` over the sorted item set (a basket is
+    ≤ ``max_basket`` items by construction, so the per-row array is
+    bounded). Item supports and N re-derive from the
     cached basket-array relation (three consumers); lift is per-row
     arithmetic on exact counts.
     Deterministic top-k: support desc, then item pair lexicographic."""
@@ -249,15 +308,8 @@ def basket_pair_support(
         .agg(F.array_sort(F.collect_list("item")).alias("its"))
         .cache()
     )
-    it = F.col("its")
-    pair_structs = F.flatten(
-        F.transform(
-            it,
-            lambda x, i: F.transform(
-                F.slice(it, i + F.lit(2), F.size(it) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
-            ),
-        )
+    pair_structs = sorted_pairs(
+        F.col("its"), lambda x, y: F.struct(x.alias("item_a"), y.alias("item_b"))
     )
     pairs = (
         baskets.select(F.explode(pair_structs).alias("p"))

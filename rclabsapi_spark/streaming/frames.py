@@ -170,7 +170,8 @@ def frame_phash_sink(
     audio column (the gain-invariant energy-envelope hash): the
     blocking, exactly-once, and compaction semantics are hash-
     agnostic."""
-    assert n_bands > max_hamming, "pigeonhole needs max_hamming < n_bands"
+    if n_bands <= max_hamming:
+        raise ValueError("pigeonhole needs max_hamming < n_bands")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         from rclabsapi_spark.llm.multimodal import (

@@ -18,6 +18,7 @@ from rclabsapi_spark.catalog import load_table
 from rclabsapi_spark.functions.scalars import sql_round_half_up
 from rclabsapi_spark.layout import spread_by
 from rclabsapi_spark.operators.graph import pagerank, triangle_count
+from rclabsapi_spark.operators.linkage import sorted_pairs
 from rclabsapi_spark.registry import query
 
 # Baskets with more distinct items than this take the self-join pair
@@ -85,8 +86,8 @@ def q_triangles(spark, sf_dir, *, materialize=True):
     co-occurrence graph. Degree-oriented wedge generation keeps
     per-vertex fan-out O(√m); two equi-joins, no cartesian anything.
 
-    Edge derivation (r16): ONE collect_set per basket + in-bucket array
-    pair-gen (the basket_pair_support shape) — the fact's dedup, and
+    Edge derivation (r16): ONE collect_set per basket + ``sorted_pairs``
+    over the sorted item set — the fact's dedup, and
     the pair generation, ride a single exchange on the basket id; the
     previous distinct + basket-keyed self-join spent three exchanges on
     the same 1.2M pairs.
@@ -140,15 +141,8 @@ def q_triangles(spark, sf_dir, *, materialize=True):
     baskets = small.groupBy("basket").agg(
         F.array_sort(F.collect_set("item")).alias("its")
     )
-    it = F.col("its")
-    pair_structs = F.flatten(
-        F.transform(
-            it,
-            lambda x, i: F.transform(
-                F.slice(it, i + F.lit(2), F.size(it) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
+    pair_structs = sorted_pairs(
+        F.col("its"), lambda x, y: F.struct(x.alias("src"), y.alias("dst"))
     )
     small_pairs = baskets.select(F.explode(pair_structs).alias("p")).select(
         F.col("p.src").alias("src"), F.col("p.dst").alias("dst")

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Interleaved A/B timing for a set of bench queries between the working
-tree (A) and the working tree with chosen paths stashed (B) — the r16
-measurement discipline: alternate sides in ONE process environment,
-min-of-N per side, cpu fingerprint bracketing every block so a steal
-episode is visible in the record.
+tree (A) and the working tree with chosen paths stashed (B): alternate
+sides in ONE process environment, with the side that runs first
+swapping on every alt (so neither side always runs on the warmer or
+the quieter box), min-of-N per side, and a cpu fingerprint before every
+block so a steal episode is visible in the record.
 
     python scripts/ab_compare.py --paths f1.py f2.py --alts 2 -- q1 q2
 
@@ -17,20 +18,12 @@ import argparse
 import json
 import subprocess
 import sys
-import time
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
-
-def cpu_score(seconds: float = 0.5) -> int:
-    t0 = time.perf_counter()
-    n = 0
-    x = 0
-    while time.perf_counter() - t0 < seconds:
-        for _ in range(10_000):
-            x = (x * 1103515245 + 12345) % 2147483648
-        n += 1
-    return int(round(n * 2.0 / seconds))
+from bench import _cpu_score  # noqa: E402
 
 
 def run_side(queries: list[str]) -> dict[str, float]:
@@ -66,12 +59,7 @@ def main() -> None:
     p.add_argument("queries", nargs="+")
     args = p.parse_args()
 
-    a_times: dict[str, list[float]] = {q: [] for q in args.queries}
-    b_times: dict[str, list[float]] = {q: [] for q in args.queries}
-    scores: list[int] = []
-    for alt in range(args.alts):
-        scores.append(cpu_score())
-        ta = run_side(args.queries)  # A = working tree (new)
+    def run_stashed() -> dict[str, float]:  # B = paths stashed (old)
         # `git stash push` exits 0 without creating an entry when the paths
         # are unmodified; popping then would apply an unrelated stash
         depth = stash_depth()
@@ -79,17 +67,26 @@ def main() -> None:
         if stash_depth() == depth:
             sys.exit(f"no changes under {args.paths}: A and B would be the same code")
         try:
-            scores.append(cpu_score())
-            tb = run_side(args.queries)  # B = stashed (old)
+            return run_side(args.queries)
         finally:
             git("stash", "pop")
+
+    a_times: dict[str, list[float]] = {q: [] for q in args.queries}
+    b_times: dict[str, list[float]] = {q: [] for q in args.queries}
+    scores: list[int] = []
+    for alt in range(args.alts):
+        order = "AB" if alt % 2 == 0 else "BA"
+        times, cpu = {}, {}
+        for side in order:
+            cpu[side] = _cpu_score(0.5)
+            scores.append(cpu[side])
+            # A = working tree (new)
+            times[side] = run_side(args.queries) if side == "A" else run_stashed()
         for q in args.queries:
-            a_times[q].append(ta[q])
-            b_times[q].append(tb[q])
-        print(
-            json.dumps({"alt": alt, "cpu": scores[-2:], "A": ta, "B": tb}),
-            flush=True,
-        )
+            a_times[q].append(times["A"][q])
+            b_times[q].append(times["B"][q])
+        record = {"alt": alt, "order": order, "cpu": cpu, **times}
+        print(json.dumps(record), flush=True)
     summary = {
         q: {
             "A_min": min(a_times[q]),
