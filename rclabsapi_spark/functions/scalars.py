@@ -131,6 +131,13 @@ def sql_double(x: float) -> str:
     return f"{x!r}D"
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier: backtick-quoted, any
+    backtick inside it doubled, so a name holding a space, a dot or a
+    backtick reads as exactly that one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def grid_mean(x: Column, decimals: int = 6, grid: float = 1e9) -> Column:
     """Accumulation-order-independent mean of per-row doubles that are
     bit-identical across engines (same parquet inputs, same per-row

@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rclabsapi_spark.functions.scalars import round_half_up
+from rclabsapi_spark.functions.scalars import (
+    round_half_up,
+    sql_double,
+    sql_ident,
+)
 from rclabsapi_spark.layout import spread_by
 from rclabsapi_spark.operators.linkage import block_pairs
 
@@ -49,55 +53,58 @@ def shingle_posting(
     """Flat (key, shingle) posting rows — the engine's shingle generator.
 
     Physical shape: repartition by key (fixture parquet = 1 file = 1 task
-    otherwise), ``posexplode(split(text))`` to flat token rows, then window
-    ``lead`` to stitch n-grams. All whole-stage-codegen expressions: the
-    array-lambda alternative (``transform`` + ``element_at``) falls back to
-    interpreted eval and re-evaluates ``split(text)`` per element, which
-    measured ~40s single-task on 5k docs vs ~1s for this shape. The window
-    partitions by doc (docs are small), so no skew; at 100 TB the
-    repartition spreads shingling across every executor."""
-    posting = spread_by(docs, key_col).select(
-        F.col(key_col),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
+    otherwise), ``posexplode(split(text, ' ', -1)) AS (pos, tok)`` to flat
+    token rows, then ``lead(tok, j) OVER (PARTITION BY key ORDER BY pos)``
+    for j < n stitches the n-grams and a ``_full`` filter (the last lead
+    is not null) drops the short tails. All whole-stage-codegen
+    expressions: the array-lambda alternative (``transform`` +
+    ``element_at``) falls back to interpreted eval and re-evaluates
+    ``split(text)`` per element, which measured ~40s single-task on 5k
+    docs vs ~1s for this shape. The window partitions by doc (docs are
+    small), so no skew; at 100 TB the repartition spreads shingling
+    across every executor. Each projection is one SQL string, so building
+    it costs one py4j round trip per projection, not one per operator."""
+    key = sql_ident(key_col)
+    posting = spread_by(docs, key).selectExpr(
+        key, f"posexplode(split({sql_ident(text_col)}, ' ', -1)) AS (pos, tok)"
     )
-    w = Window.partitionBy(key_col).orderBy("pos")
-    leads = [F.lead("tok", j).over(w) for j in range(1, n)]
+    leads = [
+        f"lead(tok, {j}) OVER (PARTITION BY {key} ORDER BY pos)"
+        for j in range(1, n)
+    ]
     return (
-        posting.select(
-            F.col(key_col),
-            F.concat_ws(" ", F.col("tok"), *leads).alias("shingle"),
-            leads[-1].isNotNull().alias("_full"),
+        posting.selectExpr(
+            key,
+            f"concat_ws(' ', {', '.join(['tok', *leads])}) AS shingle",
+            f"{leads[-1]} IS NOT NULL AS _full",
         )
-        .filter(F.col("_full"))
+        .filter("_full")
         .drop("_full")
     )
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles; safe empty result for short docs. Mirrors the
-    DuckDB expression in suites/llm.py exactly.
+def shingles(text: str, n: int = 3) -> str:
+    """Word n-gram shingles of the SQL expression ``text``, as one SQL
+    expression; safe empty result for short docs. Mirrors the DuckDB
+    expression in suites/llm.py exactly.
 
-    The token array is bound ONCE per row via ``let`` (a lambda variable),
-    so each ``element_at`` inside the transform lambda reads a cheap leaf
-    reference. The previous shape passed the raw ``tokens(text)`` Column
-    into the lambda, which textually embedded the split+filter subtree
+    The token array is bound ONCE per row by the ``let`` shape
+    (``functions.scalars.let``) written in SQL:
+    ``element_at(transform(array(split(text, ' ', -1)), t -> CASE WHEN
+    size(t) >= n THEN transform(sequence(1, size(t) - (n-1)), i ->
+    concat_ws(' ', element_at(t, i + 0), …)) ELSE CAST(array() AS
+    array<string>) END), 1)``, so each ``element_at`` inside the inner
+    lambda reads the lambda variable ``t``, a cheap leaf reference.
+    Passing the raw split into the lambda would embed the split subtree
     n× per shingle — HOF lambdas are interpreted with no common-
-    subexpression elimination, i.e. O(len²) string work per document
-    (the same class fixed for doc_bigrams in r10, commit b83c22b).
+    subexpression elimination, i.e. O(len²) string work per document.
     Per-doc cost only — but measured ~20% of dedup_ngram_jaccard."""
-    from rclabsapi_spark.functions.scalars import let
-
-    return let(
-        tokens(text),
-        lambda t: F.when(
-            F.size(t) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(t, i + j) for j in range(n)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
+    words = ", ".join(f"element_at(t, i + {j})" for j in range(n))
+    return (
+        f"element_at(transform(array(split({text}, ' ', -1)), t -> "
+        f"CASE WHEN size(t) >= {n} THEN transform(sequence(1, size(t) - "
+        f"{n - 1}), i -> concat_ws(' ', {words})) "
+        "ELSE CAST(array() AS array<string>) END), 1)"
     )
 
 
@@ -198,13 +205,16 @@ def minhash_signatures(
     pre-dedup pass."""
     if num_hashes > 8:
         raise ValueError("md5 has 32 hex chars = 8 four-char lanes")
+    key = sql_ident(key_col)
     posting = shingle_posting(
-        docs.filter(F.col(key_col).isNotNull()),
+        docs.filter(f"{key} IS NOT NULL"),
         text_col=text_col, key_col=key_col, n=n,
-    ).withColumn("h", F.md5("shingle"))
-    return posting.groupBy(key_col).agg(
+    ).withColumn("h", F.expr("md5(shingle)"))
+    return posting.groupBy(key).agg(
         *[
-            F.min(F.substring("h", 4 * i + 1, 4)).alias(f"mh_{i}")
+            F.expr(
+                f"min(substring(h, {4 * i + 1}, 4)) AS {sql_ident(f'mh_{i}')}"
+            )
             for i in range(num_hashes)
         ],
     )
@@ -246,18 +256,16 @@ def _band_keys(
     mh = minhash_signatures(
         docs, text_col=text_col, key_col=key_col, n=n, num_hashes=num_hashes
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-            ).alias("band_key"),
-        )
+    band_structs = ", ".join(
+        f"struct({b} AS band_id, concat_ws('|', "
+        + ", ".join(sql_ident(f"mh_{b * rows + r}") for r in range(rows))
+        + ") AS band_key)"
         for b in range(bands)
-    ]
-    return mh.select(
-        key_col, F.explode(F.array(*band_cols)).alias("band")
-    ).select(key_col, "band.band_id", "band.band_key")
+    )
+    key = sql_ident(key_col)
+    return mh.selectExpr(
+        key, f"explode(array({band_structs})) AS band"
+    ).selectExpr(key, "band.band_id", "band.band_key")
 
 
 def _verified_pairs(
@@ -285,22 +293,27 @@ def _verified_pairs(
     the band cap bounds by bands × (max_bucket_size − 1)."""
 
     def text(docs: DataFrame, key: str) -> DataFrame:
-        return docs.select(
-            F.col(key_col).alias(key), F.col(text_col).alias(f"__t_{key}")
+        return docs.selectExpr(
+            f"{sql_ident(key_col)} AS {sql_ident(key)}",
+            f"{sql_ident(text_col)} AS {sql_ident(f'__t_{key}')}",
         )
 
-    sides = pairs.join(text(docs_a, a), a).join(text(docs_b, b), b).select(
-        a,
-        b,
-        shingles(F.col(f"__t_{a}"), n).alias("__sa"),
-        shingles(F.col(f"__t_{b}"), n).alias("__sb"),
+    qa, qb = sql_ident(a), sql_ident(b)
+    sides = pairs.join(text(docs_a, a), a).join(
+        text(docs_b, b), b
+    ).selectExpr(
+        qa,
+        qb,
+        f"{shingles(sql_ident(f'__t_{a}'), n)} AS __sa",
+        f"{shingles(sql_ident(f'__t_{b}'), n)} AS __sb",
     )
     # each shingle array is read twice below, so Catalyst keeps the
     # projection above instead of inlining (and re-running) the shingling;
     # array_intersect/array_union yield distinct elements
-    sa, sb = F.col("__sa"), F.col("__sb")
-    jaccard = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
-    return sides.select(a, b, round_half_up(jaccard, 6).alias("jaccard"))
+    jaccard = F.expr(
+        "size(array_intersect(__sa, __sb)) / size(array_union(__sa, __sb))"
+    )
+    return sides.select(qa, qb, round_half_up(jaccard, 6).alias("jaccard"))
 
 
 def lsh_candidate_pairs(
@@ -338,7 +351,7 @@ def lsh_candidate_pairs(
         block_pairs(
             banded,
             ["band_id", "band_key"],
-            F.col(key_col),
+            F.col(sql_ident(key_col)),
             max_bucket_size,
             lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
         )
@@ -452,45 +465,49 @@ def dedup_clusters(
     Each round is a handful of shuffles over the EDGE relation only
     (never the corpus) and collects one scalar. Exact
     integer semantics — the DuckDB oracle's recursive-CTE transitive
-    closure reproduces cluster ids bit-for-bit."""
+    closure reproduces cluster ids bit-for-bit.
+
+    Every projection, window, aggregate and filter is one SQL string:
+    ``greatest``/``least`` normalise the edges, ``min(v) OVER (PARTITION
+    BY u)`` is the star minimum, ``explode(array(struct(c AS u, p AS v),
+    …))`` emits the rewired edges, and ``count(v)``/``count(*)`` per node
+    give the stop test. A round's construction is then one py4j round
+    trip per DataFrame step, not one per Column operator."""
     # checkpointed too: round 1 reads its input four times, and an uncut
     # pair-generation plan would run once per read
+    src, dst = sql_ident(src_col), sql_ident(dst_col)
     stars = (
-        pairs.select(
-            F.greatest(src_col, dst_col).alias("u"),
-            F.least(src_col, dst_col).alias("v"),
+        pairs.selectExpr(
+            f"greatest({src}, {dst}) AS u", f"least({src}, {dst}) AS v"
         )
-        .filter(F.col("u") != F.col("v"))
+        .filter("u != v")
         .localCheckpoint(eager=False)
     )
-    no_parent = F.lit(None).cast(stars.schema["v"].dataType)
-    by_u = Window.partitionBy("u")
+    no_parent = f"CAST(NULL AS {stars.schema['v'].dataType.simpleString()})"
+    m = "min(v) OVER (PARTITION BY u)"
 
-    def emit(*edges: tuple[Column, Column]) -> Column:
+    def emit(*edges: tuple[str, str]) -> str:
         # one (u, v) output row per (child, parent) pair of columns
-        return F.explode(
-            F.array(*[F.struct(c.alias("u"), p.alias("v")) for c, p in edges])
-        ).alias("e")
+        structs = ", ".join(f"struct({c} AS u, {p} AS v)" for c, p in edges)
+        return f"explode(array({structs})) AS e"
 
     def large_star(e: DataFrame) -> DataFrame:
         # m = min of u and all its neighbors; every larger neighbor → m
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = F.least("u", F.min("v").over(by_u))
+        sym = e.union(e.selectExpr("v AS u", "u AS v"))
         return (
-            sym.select("u", "v", m.alias("m"))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            sym.selectExpr("u", "v", f"least(u, {m}) AS m")
+            .filter("v > u")
+            .selectExpr("v AS u", "m AS v")
         )
 
     def small_star(e: DataFrame) -> DataFrame:
         # every edge has u > v; m = min of u's smaller neighbors. Emit
         # (v → m) and (u → m); the v == m case is a self-edge, dropped.
-        m = F.min("v").over(by_u)
         return (
-            e.select("u", "v", m.alias("m"))
-            .select(emit((F.col("v"), F.col("m")), (F.col("u"), F.col("m"))))
-            .select("e.*")
-            .filter(F.col("u") != F.col("v"))
+            e.selectExpr("u", "v", f"{m} AS m")
+            .selectExpr(emit(("v", "m"), ("u", "m")))
+            .selectExpr("e.*")
+            .filter("u != v")
             .distinct()
         )
 
@@ -503,17 +520,21 @@ def dedup_clusters(
         stars = small_star(large_star(stars)).localCheckpoint(eager=False)
         # per node: its (min) parent and whether it breaks the forest —
         # more than one parent, or a child that is also a parent
-        roles = stars.select(
-            emit((F.col("u"), F.col("v")), (F.col("v"), no_parent))
-        ).select("e.*")
-        n_parents = F.count("v")
-        off_star = (n_parents > 1) | ((n_parents == 1) & (F.count("*") > 1))
+        roles = stars.selectExpr(
+            emit(("u", "v"), ("v", no_parent))
+        ).selectExpr("e.*")
         nodes = (
             roles.groupBy("u")
-            .agg(F.min("v").alias("v"), off_star.alias("off_star"))
+            .agg(
+                F.expr("min(v) AS v"),
+                F.expr(
+                    "count(v) > 1 OR (count(v) = 1 AND count(*) > 1)"
+                    " AS off_star"
+                ),
+            )
             .localCheckpoint(eager=False)
         )
-        if nodes.agg(F.count_if("off_star")).collect()[0][0] == 0:
+        if nodes.agg(F.expr("count_if(off_star)")).collect()[0][0] == 0:
             break
     else:
         raise RuntimeError(
@@ -521,9 +542,7 @@ def dedup_clusters(
         )
     if stats is not None:
         stats["rounds"] = rounds
-    return nodes.select(
-        F.col("u").alias("doc_id"), F.coalesce("v", "u").alias("cluster_id")
-    )
+    return nodes.selectExpr("u AS doc_id", "coalesce(v, u) AS cluster_id")
 
 
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
@@ -724,40 +743,34 @@ def cluster_quality_audit(
     near-dup docs). Aggregates run per cluster. Cross-cluster pairs
     (evidence the clustering REJECTED) are reported under
     cluster_id = NULL so reviewers see both sides."""
-    ca = clusters.select(
-        F.col(key_col).alias("doc_a"), F.col(cluster_col).alias("__ca")
+    key, cluster, sim = (
+        sql_ident(key_col), sql_ident(cluster_col), sql_ident(sim_col)
     )
-    cb = clusters.select(
-        F.col(key_col).alias("doc_b"), F.col(cluster_col).alias("__cb")
-    )
+    ca = clusters.selectExpr(f"{key} AS doc_a", f"{cluster} AS __ca")
+    cb = clusters.selectExpr(f"{key} AS doc_b", f"{cluster} AS __cb")
     tagged = (
         pairs.join(ca, "doc_a")
         .join(cb, "doc_b")
-        .withColumn(
-            "__cluster",
-            F.when(F.col("__ca") == F.col("__cb"), F.col("__ca")),
-        )
+        .withColumn("__cluster", F.expr("CASE WHEN __ca = __cb THEN __ca END"))
     )
     # mean over the 9dp integer grid: per-pair similarities are
     # bit-identical across engines, raw-AVG accumulation order is not
-    sim_nano = F.floor(
-        F.col(sim_col) * 1000000000.0 + F.lit(0.5)
-    ).cast("decimal(38,0)")
-    pair_stats = tagged.groupBy(F.col("__cluster").alias(cluster_col)).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
+    grid = sql_double(1e9)
+    sim_nano = (
+        f"CAST(floor({sim} * {grid} + {sql_double(0.5)}) AS DECIMAL(38,0))"
+    )
+    pair_stats = tagged.groupBy(F.expr(f"__cluster AS {cluster}")).agg(
+        F.expr("count(1) AS n_pairs"),
         round_half_up(
-            F.sum(sim_nano).cast("double")
-            / (F.count(F.lit(1)) * 1000000000.0),
+            F.expr(f"CAST(sum({sim_nano}) AS DOUBLE) / (count(1) * {grid})"),
             6,
         ).alias("mean_sim"),
-        round_half_up(F.min(F.col(sim_col)), 6).alias("weakest_link"),
+        round_half_up(F.expr(f"min({sim})"), 6).alias("weakest_link"),
     )
-    sizes = clusters.groupBy(cluster_col).agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    return pair_stats.join(sizes, cluster_col, "left").select(
-        cluster_col,
-        F.coalesce("n_members", F.lit(0)).alias("n_members"),
+    sizes = clusters.groupBy(cluster).agg(F.expr("count(1) AS n_members"))
+    return pair_stats.join(sizes, cluster_col, "left").selectExpr(
+        cluster,
+        "coalesce(n_members, 0) AS n_members",
         "n_pairs",
         "mean_sim",
         "weakest_link",

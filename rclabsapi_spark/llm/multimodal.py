@@ -207,7 +207,8 @@ def resize_meta(
 
 def encode_ppm(width: int, height: int, rgb: "bytes") -> bytes:
     """Serialize raw RGB bytes (len = w·h·3) as a netpbm P6 payload."""
-    assert len(rgb) == width * height * 3
+    if len(rgb) != width * height * 3:
+        raise ValueError("rgb must hold width * height * 3 bytes")
     return b"P6\n%d %d\n255\n" % (width, height) + rgb
 
 

@@ -624,7 +624,8 @@ def pq_train(
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
     sub = dim // n_subspaces
-    assert sub * n_subspaces == dim, "dim must divide n_subspaces"
+    if sub * n_subspaces != dim:
+        raise ValueError("dim must divide n_subspaces")
     v = _as_double(F.col(vec_col))
     slices = F.array(
         *[
@@ -721,10 +722,11 @@ def pq_train(
     missing = sorted(set(range(codebook_size)) - seeded)
     # explicit seeding contract (the oracle mirror seeds the same way);
     # a silent shorter codebook would shift every code id after the gap
-    assert not missing, (
-        f"pq_train seeds centroids from {key_col} in [0, {codebook_size});"
-        f" no input rows for ids {missing}"
-    )
+    if missing:
+        raise ValueError(
+            f"pq_train seeds centroids from {key_col} in [0, {codebook_size});"
+            f" no input rows for ids {missing}"
+        )
     return [
         [cent_rows[(m, c)] for c in range(codebook_size)]
         for m in range(n_subspaces)

@@ -55,7 +55,8 @@ def compile_rule_match(
         else:
             prefix_expr = F.when(cond, F.lit(prefix)).otherwise(prefix_expr)
             limit_expr = F.when(cond, F.lit(limit)).otherwise(limit_expr)
-    assert prefix_expr is not None and limit_expr is not None
+    if prefix_expr is None or limit_expr is None:
+        raise ValueError("rules must hold at least one (prefix, limit) rule")
     return prefix_expr, limit_expr
 
 

@@ -1,4 +1,4 @@
-"""Streaming sources/sinks (SURVEY §2.1 S3-S7, §2.9 ST4/ST8/ST10).
+"""Streaming sources/sinks (SURVEY §2.1 S3-S7, §2.9 ST4/ST10).
 
 The reference tails log directories, buffers writes with rotation, and
 ships batches to external destinations with retries. Spark-first:
@@ -8,7 +8,6 @@ ships batches to external destinations with retries. Spark-first:
                    rotated files; lifecycle = partition expiry)
 - S6/ST4 ship    → ``foreachBatch`` with bounded retry
 - S7 index name  → ``date_format(ts, 'yyyy.MM.dd')`` partition column
-- ST8 sampling   → rate source at a fixed rows/sec
 - ST10 buffering → micro-batch trigger (processingTime)
 """
 
@@ -30,15 +29,6 @@ def stream_events_dir(
     """S4 — micro-batch tail of a growing directory
     (log_file_manager.cpp:649-670)."""
     return spark.readStream.format(fmt).schema(schema).load(path)
-
-
-def rate_source(spark: SparkSession, rows_per_second: int = 1) -> DataFrame:
-    """ST8 — fixed-interval sampling loop (system_metrics.hpp:62)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
 
 
 def with_index_partition(df: DataFrame, ts_col: str = "ts") -> DataFrame:

@@ -192,7 +192,7 @@ def test_shingle_lambda_mirror_matches_codegen_path(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     via_lambda = (
         docs.select(
-            "doc_id", F.explode(shingles(F.col("text"), 5)).alias("shingle")
+            "doc_id", F.explode(F.expr(shingles("text", 5))).alias("shingle")
         )
         .groupBy("doc_id", "shingle")
         .count()

@@ -124,11 +124,6 @@ def test_function_local_imports_are_captured():
     assert "rclabsapi_spark.llm.dedup:duplicate_spans" in deps
 
 
-# Unreferenced but claimed in COVERAGE.md; ROADMAP item 5 registers such
-# definitions with an oracle instead of deleting them.
-_CLAIMED_UNREFERENCED = {"rclabsapi_spark/streaming/sources.py:rate_source"}
-
-
 def test_no_unreferenced_top_level_definitions():
     """Every undecorated top-level function or class in the package is
     named somewhere besides its own ``def`` in the package, the tests,
@@ -157,4 +152,4 @@ def test_no_unreferenced_top_level_definitions():
                 and words[node.name] < 2
             ):
                 dead.append(f"{p.relative_to(root)}:{node.name}")
-    assert sorted(set(dead) - _CLAIMED_UNREFERENCED) == []
+    assert dead == []
