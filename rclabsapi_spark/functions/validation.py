@@ -29,9 +29,9 @@ def contains_sql_injection(c: Column) -> Column:
     )
 
 
-def clamp_limit(n: int, lo: int = 1, hi: int = 1000) -> int:
+def clamp_limit(n: int) -> int:
     """limit bound 1-1000 (input_validator.cpp:335-345)."""
-    return max(lo, min(hi, n))
+    return max(1, min(1000, n))
 
 
 def check_constraints(df, constraints: dict):

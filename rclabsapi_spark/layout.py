@@ -61,14 +61,13 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 16,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist as a bucketed (and optionally sorted) managed table.
 
     Joins/aggregations between tables bucketed the same way on the same
     key run exchange-free (verified by tests/test_layout.py asserting the
     join plan has no Exchange)."""
-    writer = df.write.format("parquet").mode(mode).bucketBy(
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(
         num_buckets, *bucket_cols
     )
     if sort_cols:
@@ -76,29 +75,22 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    *,
-    sort_cols: list[str],
-    partition_cols: list[str] | None = None,
-) -> None:
+def write_sorted(df: DataFrame, path: str, *, sort_cols: list[str]) -> None:
     """Sort-within-partitions then write: row-group min/max stats on
     ``sort_cols`` let predicate scans skip row groups."""
-    out = df.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
+    df.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
+
+
+_Z_BITS = 12
 
 
 def zorder_key(
-    cols: list[Column], bounds: list[tuple[float, float]], *, bits: int = 12
+    cols: list[Column], bounds: list[tuple[float, float]]
 ) -> Column:
     """Morton curve key: each column is min/max-normalized to a
-    ``bits``-bit integer rank, and bit j of column i lands at interleaved
-    position j·k+i. Pure Column bit math (whole-stage codegen); k·bits
-    must fit a signed long (k·bits ≤ 62).
+    ``_Z_BITS``-bit integer rank, and bit j of column i lands at
+    interleaved position j·k+i. Pure Column bit math (whole-stage
+    codegen); k·_Z_BITS must fit a signed long (k·_Z_BITS ≤ 62).
 
     ``bounds`` are the per-column (min, max) used for normalization —
     computed once by the caller (a tiny driver-side aggregate, the same
@@ -107,10 +99,10 @@ def zorder_key(
     whole interleaved key and strand the row in one unclustered
     partition)."""
     k = len(cols)
-    if k * bits > 62:
+    if k * _Z_BITS > 62:
         raise ValueError("k*bits must be <= 62")
     z = F.lit(0).cast("long")
-    max_rank = (1 << bits) - 1
+    max_rank = (1 << _Z_BITS) - 1
     for i, (c, (lo, hi)) in enumerate(zip(cols, bounds)):
         span = float(hi - lo) if hi > lo else 1.0
         rank = F.floor(
@@ -119,7 +111,7 @@ def zorder_key(
             * float(max_rank)
         ).cast("long")
         rank = F.greatest(F.lit(0), F.least(F.lit(max_rank), rank))
-        for j in range(bits):
+        for j in range(_Z_BITS):
             bit = F.shiftright(rank, j).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, j * k + i))
     return z
@@ -131,7 +123,6 @@ def write_zordered(
     *,
     zorder_cols: list[str],
     num_files: int = 16,
-    bits: int = 12,
 ) -> None:
     """Write ``df`` laid out along the Morton curve of ``zorder_cols``
     (numeric/timestamp): range-partition by the curve key into
@@ -152,7 +143,7 @@ def write_zordered(
         # degrade to a plain identity write instead of a TypeError.
         df.coalesce(num_files).write.mode("overwrite").parquet(path)
         return
-    keyed = df.withColumn("__z", zorder_key(cols, bounds, bits=bits))
+    keyed = df.withColumn("__z", zorder_key(cols, bounds))
     (
         keyed.repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")

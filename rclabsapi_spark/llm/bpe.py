@@ -76,7 +76,6 @@ def apply_merge(syms: Column, left: Column, right: Column) -> Column:
 def bpe_merges(
     docs: DataFrame,
     *,
-    text_col: str = "text",
     n_merges: int = 5,
     materialize: bool = True,
 ) -> DataFrame:
@@ -85,7 +84,7 @@ def bpe_merges(
     rank 1 = most frequent pair. Deterministic: ties break
     lexicographically on (left, right) in both engines."""
     words = docs.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("w")
+        F.explode(F.split(F.col("text"), " ")).alias("w")
     ).filter(F.col("w") != "")
     wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     vocab = wc.select(
@@ -165,13 +164,7 @@ def bpe_merges(
     return out
 
 
-def bpe_segment(
-    docs: DataFrame,
-    merges: DataFrame,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def bpe_segment(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Apply a learned merge table to the corpus: returns
     (key, n_tokens_char, n_tokens_bpe) — the compression audit that
     says what the learned merges buy. The merge table is collected
@@ -189,19 +182,19 @@ def bpe_segment(
         key=lambda r: r["merge_rank"],
     )
     per_word = docs.select(
-        F.col(key_col),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"),
+        F.col("doc_id"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"),
     ).filter(F.col("w") != "")
     seg = F.expr("regexp_extract_all(w, '.', 0)")
     for r in ordered:
         seg = apply_merge(seg, F.lit(r["left"]), F.lit(r["right"]))
     return (
         per_word.select(
-            F.col(key_col),
+            F.col("doc_id"),
             F.length("w").alias("n_char"),
             F.size(seg).alias("n_bpe"),
         )
-        .groupBy(key_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_char").alias("n_tokens_char"),
             F.sum("n_bpe").alias("n_tokens_bpe"),

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rclabsapi_spark.llm.dedup import shingle_posting, tokens
+from rclabsapi_spark.llm.dedup import shingle_posting
+from rclabsapi_spark.llm.text import tokens
 
 # PII patterns, deliberately RE2-compatible (no lookaround, no backrefs) so
 # the DuckDB oracles run the *same* pattern text. Order matters for
@@ -60,15 +61,13 @@ def pii_redact(text: Column) -> Column:
     return out
 
 
-def pii_scrub(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """(key, n_email, n_ipv4, n_phone, n_ssn, clean_text): detection counts
     plus the redacted text. Single narrow Project — no shuffle."""
-    text = F.col(text_col)
+    text = F.col("text")
     counts = pii_counts(text)
     return docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         *[c.alias(name) for name, c in counts.items()],
         pii_redact(text).alias("clean_text"),
     )
@@ -80,8 +79,6 @@ def decontaminate(
     *,
     n: int = 3,
     min_overlap: int = 5,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination: flag training docs sharing ≥ ``min_overlap``
     distinct word ``n``-grams with the eval/benchmark corpus.
@@ -96,7 +93,7 @@ def decontaminate(
     per-doc groupBy partial-aggregates map-side.
     """
     eval_grams = (
-        shingle_posting(eval_docs, text_col=text_col, key_col=key_col, n=n)
+        shingle_posting(eval_docs, n=n)
         .select("shingle")
         .distinct()
     )
@@ -105,27 +102,25 @@ def decontaminate(
     # repartition survives the broadcast join), so BOTH groupBys below are
     # satisfied by the existing partitioning — per-doc dedup + counts add
     # zero exchanges on the corpus side.
-    hits = shingle_posting(
-        train, text_col=text_col, key_col=key_col, n=n
-    ).join(
+    hits = shingle_posting(train, n=n).join(
         F.broadcast(eval_grams.withColumn("hit", F.lit(True))),
         "shingle",
         "left",
     )
     per_doc = (
-        hits.groupBy(key_col, "shingle")
+        hits.groupBy("doc_id", "shingle")
         .agg(F.max("hit").alias("hit"))
-        .groupBy(key_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("total_ngrams"),
             F.count(F.when(F.col("hit"), True)).alias("overlap_ngrams"),
         )
     )
     return (
-        train.select(key_col)
-        .join(per_doc, key_col, "left")
+        train.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            F.col(key_col),
+            F.col("doc_id"),
             F.coalesce("total_ngrams", F.lit(0)).alias("total_ngrams"),
             F.coalesce("overlap_ngrams", F.lit(0)).alias("overlap_ngrams"),
             F.round(
@@ -180,9 +175,7 @@ def _bigram_stats(
     )
 
 
-def repetition_metrics(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition features:
 
     (key, n_words, distinct_word_ratio, top_bigram, top_bigram_count,
@@ -191,20 +184,20 @@ def repetition_metrics(
     Word-level ratios are per-row array math (no shuffle); the bigram
     stats cost one doc-partitioned window + one groupBy.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     t = tokens(text)
     word_stats = docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.size(t).alias("n_words"),
         F.round(F.size(F.array_distinct(t)) / F.size(t), 6).alias(
             "distinct_word_ratio"
         ),
     )
-    per_doc = _bigram_stats(docs, text_col=text_col, key_col=key_col)
+    per_doc = _bigram_stats(docs, text_col="text", key_col="doc_id")
     return (
-        word_stats.join(per_doc, key_col, "left")
+        word_stats.join(per_doc, "doc_id", "left")
         .select(
-            F.col(key_col),
+            F.col("doc_id"),
             "n_words",
             "distinct_word_ratio",
             F.coalesce("top_bigram", F.lit("")).alias("top_bigram"),
@@ -232,12 +225,9 @@ def repetition_metrics(
 def corpus_filter(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     min_chars: int = 100,
     max_chars: int = 500,
     min_distinct_word_ratio: float = 0.45,
-    max_top_bigram_frac: float = 0.12,
 ) -> DataFrame:
     """C4/Gopher-style keep/drop decision per doc: length bounds plus
     repetition caps. Returns ``docs`` columns + boolean ``keep`` +
@@ -247,15 +237,15 @@ def corpus_filter(
     Word-level stats are computed inline on the doc scan (not via
     ``repetition_metrics``) so the plan reads ``docs`` twice (doc scan +
     bigram posting), not three times."""
-    text = F.col(text_col)
+    text = F.col("text")
     t = tokens(text)
-    per_doc = _bigram_stats(docs, text_col=text_col, key_col=key_col)
+    per_doc = _bigram_stats(docs, text_col="text", key_col="doc_id")
     joined = (
         docs.withColumn(
             "distinct_word_ratio",
             F.round(F.size(F.array_distinct(t)) / F.size(t), 6),
         )
-        .join(per_doc, key_col, "left")
+        .join(per_doc, "doc_id", "left")
         .withColumn(
             "top_bigram_frac",
             F.round(
@@ -282,7 +272,7 @@ def corpus_filter(
         )
         .drop("total_bigrams", "distinct_bigrams")
     )
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length(F.col("text"))
     reason = (
         F.when(n_chars < min_chars, "too_short")
         .when(n_chars > max_chars, "too_long")
@@ -291,7 +281,7 @@ def corpus_filter(
             "low_lexical_diversity",
         )
         .when(
-            F.col("top_bigram_frac") > max_top_bigram_frac,
+            F.col("top_bigram_frac") > 0.12,
             "repeated_bigram",
         )
         .otherwise("")
@@ -304,8 +294,6 @@ def corpus_filter(
 def boilerplate_ngrams(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     n: int = 5,
     min_docs: int = 2,
     k: int = 20,
@@ -325,8 +313,8 @@ def boilerplate_ngrams(
     from rclabsapi_spark.llm.dedup import shingle_posting
 
     posting = shingle_posting(
-        docs, text_col=text_col, key_col=key_col, n=n
-    ).select(F.col(key_col).alias("doc"), F.col("shingle").alias("gram"))
+        docs, n=n
+    ).select(F.col("doc_id").alias("doc"), F.col("shingle").alias("gram"))
     # two-level grouped counts instead of COUNT(DISTINCT doc): the
     # (gram, doc) pre-aggregate rides the posting's doc-key exchange
     # (superset clustering → zero new shuffle), and the gram rollup

@@ -27,7 +27,7 @@ bucket-size filters mirrored in the DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rclabsapi_spark.functions.scalars import (
@@ -36,11 +36,8 @@ from rclabsapi_spark.functions.scalars import (
     sql_ident,
 )
 from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.llm.text import tokens
 from rclabsapi_spark.operators.linkage import block_pairs
-
-
-def tokens(text: Column) -> Column:
-    return F.split(text, " ")
 
 
 def shingle_posting(
@@ -108,16 +105,14 @@ def shingles(text: str, n: int = 3) -> str:
     )
 
 
-def exact_dedup(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup: one group per distinct text, keeper = min key.
     Group key is md5(text) — at 100 TB you shuffle 32-byte digests, not
     document bodies."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(
-            F.min(key_col).alias("keeper_doc_id"),
+            F.min("doc_id").alias("keeper_doc_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
@@ -127,8 +122,6 @@ def incremental_dedup(
     new_docs: DataFrame,
     seen_fps: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     fp_col: str = "text_hash",
 ) -> DataFrame:
     """Incremental exact dedup: a NEW batch against the fingerprint store
@@ -154,7 +147,7 @@ def incremental_dedup(
     than 32 B/row).
     """
     batch = new_docs.select(
-        F.col(key_col), F.md5(F.col(text_col)).alias("text_hash")
+        F.col("doc_id"), F.md5(F.col("text")).alias("text_hash")
     )
     if fp_col not in seen_fps.columns:
         raise ValueError(
@@ -165,13 +158,13 @@ def incremental_dedup(
         F.col(fp_col).alias("text_hash")
     ).distinct().withColumn("_seen", F.lit(1))
     marked = batch.join(seen, "text_hash", "left")
-    keeper = F.min(key_col).over(Window.partitionBy("text_hash"))
+    keeper = F.min("doc_id").over(Window.partitionBy("text_hash"))
     status = (
         F.when(F.col("_seen") == 1, F.lit("seen_before"))
-        .when(F.col(key_col) != keeper, F.lit("dup_in_batch"))
+        .when(F.col("doc_id") != keeper, F.lit("dup_in_batch"))
         .otherwise(F.lit("kept"))
     )
-    return marked.select(key_col, "text_hash", status.alias("status"))
+    return marked.select("doc_id", "text_hash", status.alias("status"))
 
 
 def minhash_signatures(
@@ -220,20 +213,14 @@ def minhash_signatures(
     )
 
 
-def doc_shingle_sets(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     """(key, shingle_set) — the distinct per-doc sets behind
     ngram_jaccard_pairs' inverted index. Same repartition-by-key posting
     shape as the signature pass, so the groupBy collect_set adds no
     extra exchange."""
     return (
-        shingle_posting(docs, text_col=text_col, key_col=key_col, n=n)
-        .groupBy(key_col)
+        shingle_posting(docs)
+        .groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("shingle_set"))
     )
 
@@ -321,7 +308,6 @@ def lsh_candidate_pairs(
     *,
     text_col: str = "text",
     key_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = 50,
@@ -344,7 +330,7 @@ def lsh_candidate_pairs(
     bucket of B docs yields B²/2 pairs, so one 10⁶-doc bucket would
     dominate the job. Pass ``None`` to disable."""
     banded = _band_keys(
-        docs, text_col=text_col, key_col=key_col, n=n,
+        docs, text_col=text_col, key_col=key_col, n=3,
         num_hashes=num_hashes, bands=bands,
     )
     pairs = (
@@ -360,16 +346,13 @@ def lsh_candidate_pairs(
     )
     return _verified_pairs(
         pairs, docs, docs, "doc_a", "doc_b",
-        text_col=text_col, key_col=key_col, n=n,
+        text_col=text_col, key_col=key_col, n=3,
     )
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.2,
     max_shingle_df: int | None = 100,
 ) -> DataFrame:
@@ -389,9 +372,9 @@ def ngram_jaccard_pairs(
     index is ``block_pairs`` over the shingle buckets, so the shingle
     pipeline is computed once and the hot-shingle guard is its block
     cap (a shingle's bucket size IS its document frequency)."""
-    sets = doc_shingle_sets(docs, text_col=text_col, key_col=key_col, n=n)
+    sets = doc_shingle_sets(docs)
     posting = sets.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.size("shingle_set").alias("sh_size"),
         F.explode("shingle_set").alias("shingle"),
     )
@@ -400,11 +383,11 @@ def ngram_jaccard_pairs(
         block_pairs(
             posting,
             ["shingle"],
-            F.struct(F.col(key_col), F.col("sh_size")),
+            F.struct(F.col("doc_id"), F.col("sh_size")),
             max_shingle_df,
             lambda x, y: F.struct(
-                x[key_col].alias("doc_a"),
-                y[key_col].alias("doc_b"),
+                x["doc_id"].alias("doc_a"),
+                y["doc_id"].alias("doc_b"),
                 x["sh_size"].alias("size_a"),
                 y["sh_size"].alias("size_b"),
             ),
@@ -548,7 +531,7 @@ def dedup_clusters(
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash16(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash: bit j of each token's md5 = high bit of hex char j;
     tokens vote ±1 per bit; fingerprint bit = (vote sum > 0).
 
@@ -565,11 +548,11 @@ def simhash16(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id
     once per DISTINCT token per doc (measured ~2.3× repetition on the
     fixture corpus), with each vote weighted by the count."""
     tok = (
-        spread_by(docs, key_col)
+        spread_by(docs, "doc_id")
         .select(
-            F.col(key_col), F.explode(tokens(F.col(text_col))).alias("tok")
+            F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
         )
-        .groupBy(key_col, "tok")
+        .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("h", F.md5("tok"))
     )
@@ -581,21 +564,15 @@ def simhash16(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id
         ).alias(f"v{j}")
         for j in range(16)
     ]
-    agg = tok.groupBy(key_col).agg(*votes)
+    agg = tok.groupBy("doc_id").agg(*votes)
     fp = None
     for j in range(16):
         bit = F.when(F.col(f"v{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
-    return agg.select(key_col, fp.cast("long").alias("simhash"))
+    return agg.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-def simhash_bits(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    bits: int = 60,
-) -> DataFrame:
+def simhash_bits(docs: DataFrame, *, bits: int = 60) -> DataFrame:
     """Generalized SimHash: bit j of each token's md5 = bit (j mod 4) of
     hex digit (j div 4); tokens vote ±1 per bit; fingerprint bit =
     (vote > 0). ``bits ≤ 60`` keeps the fingerprint positive in a signed
@@ -622,11 +599,11 @@ def simhash_bits(
     if bits > 60:
         raise ValueError("fingerprint must fit a signed 64-bit int")
     tok = (
-        spread_by(docs, key_col)
+        spread_by(docs, "doc_id")
         .select(
-            F.col(key_col), F.explode(tokens(F.col(text_col))).alias("tok")
+            F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
         )
-        .groupBy(key_col, "tok")
+        .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tok_cnt"))
         .withColumn(
             "t", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
@@ -645,24 +622,19 @@ def simhash_bits(
         ).alias(f"o{j}")
         for j in range(bits)
     ]
-    agg = tok.groupBy(key_col).agg(F.sum("tok_cnt").alias("cnt"), *ones)
+    agg = tok.groupBy("doc_id").agg(F.sum("tok_cnt").alias("cnt"), *ones)
     fp_chain = " + ".join(
         f"(CASE WHEN `o{j}` * 2 > `cnt` THEN {2**j}L ELSE 0L END)"
         for j in range(bits)
     )
-    return agg.select(
-        key_col, F.expr(fp_chain).cast("long").alias("simhash")
-    )
+    return agg.select("doc_id", F.expr(fp_chain).cast("long").alias("simhash"))
 
 
 def simhash_near_dup_pairs(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     max_hamming: int = 2,
     bits: int = 60,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: fingerprints within ``max_hamming`` bits.
 
@@ -677,11 +649,11 @@ def simhash_near_dup_pairs(
     bands are 5-6 bits (≤64 distinct values), so every band bucket holds
     ~N/64 of the corpus and pair generation degenerates toward O(N²) —
     measured 8s at 5k docs. At 60 bits the bands are 20 bits wide and
-    buckets stay tiny."""
+    buckets stay tiny, so no bucket cap is applied."""
     n_bands = max_hamming + 1
     # near-even band widths, e.g. 60/3 → 20,20,20
     widths = [bits // n_bands + (1 if i < bits % n_bands else 0) for i in range(n_bands)]
-    fp = simhash_bits(docs, text_col=text_col, key_col=key_col, bits=bits)
+    fp = simhash_bits(docs, bits=bits)
 
     band_cols = []
     shift = 0
@@ -696,18 +668,18 @@ def simhash_near_dup_pairs(
         )
         shift += w
     banded = fp.select(
-        key_col, "simhash", F.explode(F.array(*band_cols)).alias("band")
-    ).select(key_col, "simhash", "band.band_id", "band.band_key")
+        "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("band")
+    ).select("doc_id", "simhash", "band.band_id", "band.band_key")
 
     pairs = (
         block_pairs(
             banded,
             ["band_id", "band_key"],
-            F.struct(F.col(key_col), F.col("simhash")),
-            max_bucket_size,
+            F.struct(F.col("doc_id"), F.col("simhash")),
+            None,
             lambda x, y: F.struct(
-                x[key_col].alias("doc_a"),
-                y[key_col].alias("doc_b"),
+                x["doc_id"].alias("doc_a"),
+                y["doc_id"].alias("doc_b"),
                 x["simhash"].alias("fp_a"),
                 y["simhash"].alias("fp_b"),
             ),
@@ -781,9 +753,6 @@ def incremental_lsh_pairs(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = 50,
@@ -820,9 +789,9 @@ def incremental_lsh_pairs(
 
     def banded(docs: DataFrame, key: str) -> DataFrame:
         return _band_keys(
-            docs, text_col=text_col, key_col=key_col, n=n,
+            docs, text_col="text", key_col="doc_id", n=3,
             num_hashes=num_hashes, bands=bands,
-        ).withColumnRenamed(key_col, key)
+        ).withColumnRenamed("doc_id", key)
 
     nb = banded(new_docs, "new_doc")
     sb = banded(corpus_docs, "corpus_doc")
@@ -843,7 +812,7 @@ def incremental_lsh_pairs(
     )
     out = _verified_pairs(
         pairs, new_docs, corpus_docs, "new_doc", "corpus_doc",
-        text_col=text_col, key_col=key_col, n=n,
+        text_col="text", key_col="doc_id", n=3,
     )
     # pair-sized result: materialize eagerly so repeated daily-batch
     # calls read a checkpoint, not the banding lineage
@@ -852,13 +821,7 @@ def incremental_lsh_pairs(
     return out
 
 
-def span_posting(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    span_len: int = 40,
-) -> DataFrame:
+def span_posting(docs: DataFrame, *, span_len: int = 40) -> DataFrame:
     """(key, span) posting of every ``span_len``-char span anchored at
     a word start — ONE regex pass per document: the pattern matches
     zero-width at each word start (start-of-text or after a space) and
@@ -873,10 +836,10 @@ def span_posting(
     # repartition the whole span extraction runs serially — the
     # shingle_posting pattern (equal keys stay co-located, downstream
     # doc-keyed aggregates reuse the exchange)
-    return spread_by(docs.select(key_col, text_col), key_col).select(
-        F.col(key_col),
+    return spread_by(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(pattern), 1)
+            F.regexp_extract_all(F.col("text"), F.lit(pattern), 1)
         ).alias("span"),
     )
 
@@ -884,8 +847,6 @@ def span_posting(
 def duplicate_spans(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     span_len: int = 40,
     min_docs: int = 2,
     anchor_hex_prefix: str | None = None,
@@ -932,9 +893,7 @@ def duplicate_spans(
     and the explode emits only ``span_len``-byte spans: the document
     text never crosses an exchange; the only shuffle is the span-key
     aggregate."""
-    spans = span_posting(
-        docs, text_col=text_col, key_col=key_col, span_len=span_len
-    )
+    spans = span_posting(docs, span_len=span_len)
     if anchor_hex_prefix is not None:
         spans = spans.filter(
             F.substring(F.md5("span"), 1, len(anchor_hex_prefix))
@@ -943,7 +902,7 @@ def duplicate_spans(
     return (
         spans.groupBy("span")
         .agg(
-            F.countDistinct(F.col(key_col)).alias("n_docs"),
+            F.countDistinct(F.col("doc_id")).alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
         .filter(F.col("n_docs") >= min_docs)
@@ -953,8 +912,6 @@ def duplicate_spans(
 def duplicate_span_exposure(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     span_len: int = 40,
     min_docs: int = 2,
 ) -> DataFrame:
@@ -980,11 +937,11 @@ def duplicate_span_exposure(
     # once — recomputing it per consumer paid the whole span-extraction
     # scan twice (guide §1.2: don't compute things twice)
     posting = span_posting(
-        docs, text_col=text_col, key_col=key_col, span_len=span_len
+        docs, span_len=span_len
     ).localCheckpoint(eager=False)
     flagged = (
         posting.groupBy("span")
-        .agg(F.countDistinct(F.col(key_col)).alias("n_docs"))
+        .agg(F.countDistinct(F.col("doc_id")).alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select("span")
     )
@@ -994,13 +951,13 @@ def duplicate_span_exposure(
     marked = posting.join(
         F.broadcast(flagged.withColumn("__hit", F.lit(1))), "span", "left"
     )
-    per_doc = marked.groupBy(key_col).agg(
+    per_doc = marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.count(F.col("__hit")).alias("n_flagged"),
     )
-    base = docs.select(F.col(key_col))
-    out = base.join(per_doc, key_col, "left").select(
-        F.col(key_col),
+    base = docs.select(F.col("doc_id"))
+    out = base.join(per_doc, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
         F.coalesce(F.col("n_flagged"), F.lit(0)).alias("n_flagged"),
     )

@@ -258,7 +258,6 @@ def sample_negatives(
     key_col: str,
     label_col: str,
     k: int = 4,
-    salt: str = "neg:",
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
     each anchor row, up to ``k`` negatives with a DIFFERENT label, drawn
@@ -269,7 +268,7 @@ def sample_negatives(
     The ring makes it linear: no per-anchor corpus scan, no cross join —
     one two-phase global hash rank (a parallel range shuffle, not a
     single-partition sort), 2k equi-joins by ring offset, then the
-    label filter. Deterministic in (salt, keys), so resumed
+    label filter. Deterministic in the keys (md5 salted "neg:"), so resumed
     runs pair identically. With 2k candidates the only shortfall case is
     a run of ≥k same-label neighbors on the ring — vanishingly rare for
     mixed corpora and surfaced by the per-anchor ``n_negatives`` count
@@ -281,7 +280,7 @@ def sample_negatives(
     branch — a per-offset union would re-scan and re-sort the ranked
     relation once per offset (ReusedExchange does not collapse the
     union branches), turning 3 corpus scans into 2k+1."""
-    h = F.md5(F.concat(F.lit(salt), F.col("k_").cast("string")))
+    h = F.md5(F.concat(F.lit("neg:"), F.col("k_").cast("string")))
     # md5 is fixed-length lowercase hex: lexicographic ≡ numeric, so a
     # 13-hex-digit (52-bit, double-exact) prefix is a monotone bucket key
     ranked = global_row_number(

@@ -38,19 +38,19 @@ from rclabsapi_spark.layout import spread_by
 from rclabsapi_spark.operators.linkage import block_pairs
 
 
-def attach_binary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def attach_binary(docs: DataFrame) -> DataFrame:
     """Fixture adapter: deterministic fake payload (UTF-8 bytes of the
     text) standing in for image/audio bytes, plus typed metadata."""
-    return docs.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
+    return docs.withColumn("payload", F.encode(F.col("text"), "UTF-8")).withColumn(
         "media_type", F.lit("application/octet-stream")
     )
 
 
-def extract_binary_meta(df: DataFrame, *, key_col: str = "doc_id") -> DataFrame:
+def extract_binary_meta(df: DataFrame) -> DataFrame:
     """Metadata extraction without touching Python: byte length and a
     magic-prefix hex — the pattern for content-type sniffing at scale."""
     return df.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.octet_length("payload").cast("long").alias("byte_len"),
         F.lower(F.substring(F.hex(F.col("payload")), 1, 8)).alias("magic_hex"),
         "media_type",
@@ -86,9 +86,6 @@ def map_binary_batches(
     df: DataFrame,
     out_schema: StructType | str,
     decoder: Callable[[bytes], dict] = fake_decode,
-    *,
-    key_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """The real harness: Arrow-batched bytes→features. ``decoder`` runs
     per payload inside a pandas batch (vectorized transfer, amortized
@@ -97,12 +94,12 @@ def map_binary_batches(
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decoder(p) for p in pdf[payload_col]]
+            feats = [decoder(p) for p in pdf["payload"]]
             out = pd.DataFrame(feats)
-            out.insert(0, key_col, pdf[key_col].values)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    return df.select(key_col, payload_col).mapInPandas(process, schema=out_schema)
+    return df.select("doc_id", "payload").mapInPandas(process, schema=out_schema)
 
 
 def frame_sample(
@@ -110,8 +107,6 @@ def frame_sample(
     *,
     frame_bytes: int = 64,
     every_n: int = 2,
-    key_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Frame sampling over an opaque binary "video": chunk the payload
     into fixed-size frames, keep every ``every_n``-th (the keyframe-sample
@@ -126,7 +121,7 @@ def frame_sample(
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             keys, idxs, frames = [], [], []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
+            for key, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 for i in range(0, (len(b) + frame_bytes - 1) // frame_bytes, every_n):
                     keys.append(key)
@@ -135,7 +130,7 @@ def frame_sample(
                         b[i * frame_bytes : (i + 1) * frame_bytes].hex().upper()
                     )
             yield pd.DataFrame(
-                {key_col: keys, "frame_idx": idxs, "frame_hex": frames}
+                {"doc_id": keys, "frame_idx": idxs, "frame_hex": frames}
             )
 
     # NOT spread before the Python stage: unlike the phash/heatmap
@@ -145,8 +140,8 @@ def frame_sample(
     # mm_frame_dedup at sf0.1 (interleaved A/B). At real scale the scan
     # itself parallelizes (many files); a deployment swapping in an
     # expensive decoder should spread first (see attach_token_heatmap_frames).
-    return df.select(key_col, payload_col).mapInPandas(
-        process, schema=f"{key_col} long, frame_idx int, frame_hex string"
+    return df.select("doc_id", "payload").mapInPandas(
+        process, schema="doc_id long, frame_idx int, frame_hex string"
     )
 
 
@@ -155,7 +150,6 @@ def resize_meta(
     *,
     target_w: int = 32,
     target_h: int = 32,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Resize harness: computes the output geometry + a deterministic
     content digest of what a resizer would produce. The pixel resample
@@ -168,7 +162,7 @@ def resize_meta(
 
         for pdf in batches:
             rows = []
-            for key, payload in zip(pdf[key_col], pdf["payload"]):
+            for key, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 # deterministic fake: digest of the bytes a real resizer
                 # would consume (truncated "thumbnail"), hashed via its
@@ -183,12 +177,12 @@ def resize_meta(
                     )
                 )
             yield pd.DataFrame(
-                rows, columns=[key_col, "width", "height", "thumb_md5"]
+                rows, columns=["doc_id", "width", "height", "thumb_md5"]
             )
 
-    return df.select(key_col, "payload").mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         process,
-        schema=f"{key_col} long, width int, height int, thumb_md5 string",
+        schema="doc_id long, width int, height int, thumb_md5 string",
     )
 
 
@@ -261,8 +255,6 @@ def resize_ppm(payload: bytes, *, target_w: int, target_h: int) -> bytes:
 def attach_ppm_payload(
     docs: DataFrame,
     *,
-    key_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 8,
     height: int = 8,
 ) -> DataFrame:
@@ -276,18 +268,18 @@ def attach_ppm_payload(
 
         for pdf in batches:
             payloads = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 seed = hashlib.md5(t.encode()).digest()
                 reps = (n + len(seed) - 1) // len(seed)
                 payloads.append(
                     encode_ppm(width, height, (seed * reps)[:n])
                 )
             yield pd.DataFrame(
-                {key_col: pdf[key_col].values, "payload": payloads}
+                {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return docs.select(key_col, text_col).mapInPandas(
-        gen, schema=f"{key_col} long, payload binary"
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, schema="doc_id long, payload binary"
     ).withColumn("media_type", F.lit("image/x-portable-pixmap"))
 
 
@@ -357,8 +349,6 @@ def decode_wav(payload: bytes) -> dict:
 def attach_wav_payload(
     docs: DataFrame,
     *,
-    key_col: str = "doc_id",
-    text_col: str = "text",
     sample_rate: int = 8000,
     n_samples: int = 256,
 ) -> DataFrame:
@@ -372,29 +362,22 @@ def attach_wav_payload(
 
         for pdf in batches:
             payloads = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 seed = hashlib.md5(t.encode()).digest()
                 reps = (n_bytes + len(seed) - 1) // len(seed)
                 payloads.append(
                     encode_wav_pcm16(sample_rate, (seed * reps)[:n_bytes])
                 )
             yield pd.DataFrame(
-                {key_col: pdf[key_col].values, "payload": payloads}
+                {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return docs.select(key_col, text_col).mapInPandas(
-        gen, schema=f"{key_col} long, payload binary"
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, schema="doc_id long, payload binary"
     ).withColumn("media_type", F.lit("audio/wav"))
 
 
-def wav_frames(
-    df: DataFrame,
-    *,
-    frame: int = 64,
-    hop: int = 32,
-    key_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def wav_frames(df: DataFrame, *, frame: int = 64, hop: int = 32) -> DataFrame:
     """Spectrogram-prep framing over decoded PCM16 audio: slice each
     payload's samples into overlapping windows (``frame`` samples every
     ``hop``) and emit per-frame energy (RMS) and zero-crossing counts —
@@ -407,7 +390,7 @@ def wav_frames(
 
         for pdf in batches:
             keys, idxs, energy, zc = [], [], [], []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
+            for key, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 if not (b.startswith(b"RIFF") and b[8:12] == b"WAVE"):
                     continue
@@ -423,16 +406,16 @@ def wav_frames(
                     zc.append(int(((w[:-1] * w[1:]) < 0).sum()))
             yield pd.DataFrame(
                 {
-                    key_col: keys,
+                    "doc_id": keys,
                     "frame_idx": idxs,
                     "rms": energy,
                     "zero_crossings": zc,
                 }
             )
 
-    return df.select(key_col, payload_col).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         process,
-        schema=f"{key_col} long, frame_idx int, rms double, zero_crossings int",
+        schema="doc_id long, frame_idx int, rms double, zero_crossings int",
     )
 
 
@@ -457,9 +440,6 @@ def wav_frames(
 def attach_token_heatmap_frames(
     docs: DataFrame,
     *,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    grid: int = 8,
     n_frames: int = 2,
 ) -> DataFrame:
     """Fixture adapter rendering each doc as ``n_frames`` REAL P6
@@ -467,7 +447,7 @@ def attach_token_heatmap_frames(
     a token-histogram heatmap. Tokens (split on single spaces — the
     ``string_split(text, ' ')`` spec the oracle mirrors, empties
     included) are dealt round-robin to frames by position; each
-    frame's tokens hash into a ``grid×grid`` cell (first two md5 hex
+    frame's tokens hash into an 8×8 cell (first two md5 hex
     digits mod n_cells), and the cell's count — clipped at the pixel
     ceiling 255 — becomes its gray intensity (r=g=b).
 
@@ -486,7 +466,7 @@ def attach_token_heatmap_frames(
     single Python worker (guide §2.5 input skew; measured 0.82 → 0.31 s
     at sf0.1). The exchange carries (key, text) once; downstream Python
     stages inherit the spread."""
-    n_cells = grid * grid
+    n_cells = 8 * 8
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -509,7 +489,7 @@ def attach_token_heatmap_frames(
 
         for pdf in batches:
             keys, idxs, payloads = [], [], []
-            for key, t in zip(pdf[key_col], pdf[text_col]):
+            for key, t in zip(pdf["doc_id"], pdf["text"]):
                 counts = [[0] * n_cells for _ in range(n_frames)]
                 for pos, tok in enumerate(t.split(" ")):
                     counts[pos % n_frames][cell(tok)] += 1
@@ -521,16 +501,16 @@ def attach_token_heatmap_frames(
                     )
                     keys.append(key)
                     idxs.append(f)
-                    payloads.append(encode_ppm(grid, grid, rgb))
+                    payloads.append(encode_ppm(8, 8, rgb))
             yield pd.DataFrame(
-                {key_col: keys, "frame_idx": idxs, "payload": payloads}
+                {"doc_id": keys, "frame_idx": idxs, "payload": payloads}
             )
 
     return (
-        docs.select(key_col, text_col)
-        .transform(lambda d: spread_by(d, key_col))
+        docs.select("doc_id", "text")
+        .transform(lambda d: spread_by(d, "doc_id"))
         .mapInPandas(
-            gen, schema=f"{key_col} long, frame_idx int, payload binary"
+            gen, schema="doc_id long, frame_idx int, payload binary"
         )
     )
 
@@ -541,7 +521,6 @@ def average_hash_bands(
     grid: int = 8,
     n_bands: int = 4,
     key_cols: tuple[str, ...] = ("doc_id", "frame_idx"),
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Average-hash of each P6 payload, emitted as ``n_bands`` integer
     band columns (``b0..b{n-1}``) instead of one packed 64-bit word —
@@ -571,7 +550,7 @@ def average_hash_bands(
             out_keys: list[list] = [[] for _ in key_cols]
             bands: list[list[int]] = [[] for _ in range(n_bands)]
             for row in pdf.itertuples(index=False):
-                payload = bytes(getattr(row, payload_col))
+                payload = bytes(row.payload)
                 if payload.startswith(b"P6"):
                     parts = payload.split(b"\n", 3)
                     w, h = (int(x) for x in parts[1].split())
@@ -612,7 +591,7 @@ def average_hash_bands(
         )
     )
     band_schema = ", ".join(f"b{b} int" for b in range(n_bands))
-    return df.select(*key_cols, payload_col).mapInPandas(
+    return df.select(*key_cols, "payload").mapInPandas(
         process, schema=f"{key_schema}, {band_schema}"
     )
 
@@ -623,7 +602,6 @@ def phash_near_dup_pairs(
     max_hamming: int = 3,
     n_bands: int = 4,
     key_cols: tuple[str, ...] = ("doc_id", "frame_idx"),
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Perceptual near-dup pairs: units whose average-hashes are within
     ``max_hamming`` bits. Pigeonhole blocking on the band columns
@@ -631,9 +609,8 @@ def phash_near_dup_pairs(
     within k bit flips cannot differ in all k+1 bands), candidates from
     ``block_pairs`` over the band buckets, and exact Hamming over all
     bands verifying them inside the pair comprehension (its ``keep``).
-    ``max_bucket_size`` caps pathological buckets at scale (a cap is a
-    recall trade the caller opts into; the registered query leaves it
-    off so the oracle's O(n²) spec matches exactly)."""
+    Buckets are not capped: a cap would trade recall, and the oracle's
+    O(n²) spec matches the uncapped pairs exactly."""
     if n_bands <= max_hamming:
         raise ValueError("pigeonhole needs max_hamming < n_bands")
     # the packed probe below allocates 16 bits per band in one 64-bit
@@ -689,7 +666,7 @@ def phash_near_dup_pairs(
         banded,
         ["band_id", "band_key"],
         "m",
-        max_bucket_size,
+        None,
         lambda x, y: F.struct(x.alias("ua"), y.alias("ub")),
         keep=lambda x, y: F.bit_count(x["fp"].bitwiseXOR(y["fp"]))
         <= F.lit(max_hamming),
@@ -737,7 +714,6 @@ def wav_energy_hash_bands(
     n_seg: int = 64,
     n_bands: int = 4,
     key_cols: tuple[str, ...] = ("doc_id",),
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Energy-envelope hash of each PCM16 RIFF/WAVE payload as
     ``n_bands`` integer band columns (``b0..b{n-1}``) — the same output
@@ -765,7 +741,7 @@ def wav_energy_hash_bands(
             out_keys: list[list] = [[] for _ in key_cols]
             bands: list[list[int]] = [[] for _ in range(n_bands)]
             for row in pdf.itertuples(index=False):
-                b = bytes(getattr(row, payload_col))
+                b = bytes(row.payload)
                 if not (b.startswith(b"RIFF") and b[8:12] == b"WAVE"):
                     continue
                 n = int.from_bytes(b[40:44], "little")
@@ -797,26 +773,18 @@ def wav_energy_hash_bands(
         for k, t in zip(key_cols, [dict(df.dtypes)[k] for k in key_cols])
     )
     band_schema = ", ".join(f"b{k} int" for k in range(n_bands))
-    return df.select(*key_cols, payload_col).mapInPandas(
+    return df.select(*key_cols, "payload").mapInPandas(
         process, schema=f"{key_schema}, {band_schema}"
     )
 
 
-def attach_token_envelope_wav(
-    docs: DataFrame,
-    *,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    n_cells: int = 64,
-    samples_per_cell: int = 4,
-    sample_rate: int = 8000,
-) -> DataFrame:
+def attach_token_envelope_wav(docs: DataFrame) -> DataFrame:
     """Fixture adapter rendering each doc as a VALID PCM16 waveform
     whose energy envelope IS its token histogram: tokens hash into
-    ``n_cells`` envelope cells (the attach_token_heatmap_frames
-    dealing — first two md5 hex digits mod n_cells), and cell count
-    ``c`` (clipped at 255) becomes a constant-amplitude run of
-    ``samples_per_cell`` samples at ``min(c,255) * 128``.
+    64 envelope cells (the attach_token_heatmap_frames dealing — first
+    two md5 hex digits mod 64), and cell count ``c`` (clipped at 255)
+    becomes a constant-amplitude run of 4 samples at
+    ``min(c,255) * 128`` in an 8 kHz WAV.
 
     Why an envelope and not md5 noise: ``attach_wav_payload`` seeds
     samples from md5(text), so near-dup texts get maximally DISTANT
@@ -826,7 +794,7 @@ def attach_token_envelope_wav(
     every payload stays a real decodable WAV through the same RIFF
     path, and the segment abs-sums reduce to exact integer token
     arithmetic a SQL oracle can mirror:
-    ``bit_s = (n_cells * min(c_s,255) > sum_t min(c_t,255))``."""
+    ``bit_s = (64 * min(c_s,255) > sum_t min(c_t,255))``."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -839,29 +807,29 @@ def attach_token_envelope_wav(
             if c is None:
                 c = (
                     int(hashlib.md5(tok.encode()).hexdigest()[:2], 16)
-                    % n_cells
+                    % 64
                 )
                 cell_of[tok] = c
             return c
 
         for pdf in batches:
             payloads = []
-            for t in pdf[text_col]:
-                counts = [0] * n_cells
+            for t in pdf["text"]:
+                counts = [0] * 64
                 for tok in t.split(" "):
                     counts[cell(tok)] += 1
                 samples = b"".join(
                     struct.pack("<h", min(c, 255) * 128)
-                    * samples_per_cell
+                    * 4
                     for c in counts
                 )
-                payloads.append(encode_wav_pcm16(sample_rate, samples))
+                payloads.append(encode_wav_pcm16(8000, samples))
             yield pd.DataFrame(
-                {key_col: pdf[key_col].values, "payload": payloads}
+                {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return docs.select(key_col, text_col).mapInPandas(
-        gen, schema=f"{key_col} long, payload binary"
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, schema="doc_id long, payload binary"
     ).withColumn("media_type", F.lit("audio/wav"))
 
 
@@ -1079,7 +1047,7 @@ def resize_image(payload: bytes, *, target_w: int, target_h: int) -> bytes:
     return decode_image_stub(b)
 
 
-def phash_clusters(pairs: DataFrame, *, frame_mod: int = 16) -> DataFrame:
+def phash_clusters(pairs: DataFrame) -> DataFrame:
     """Perceptual frame clusters: connected components over the
     near-dup pair graph (``phash_near_dup_pairs`` output — image or
     any banded perceptual relation with the doc/frame pair columns),
@@ -1088,8 +1056,8 @@ def phash_clusters(pairs: DataFrame, *, frame_mod: int = 16) -> DataFrame:
     retouch are ONE picture family), so keep-one-per-family needs
     components, not pairs — the dedup_clusters step on image content.
 
-    Units pack into one BIGINT (doc_id · frame_mod + frame_idx;
-    ``frame_idx < frame_mod`` is the declared contract, matching the
+    Units pack into one BIGINT (doc_id · 16 + frame_idx;
+    ``frame_idx < 16`` is the declared contract, matching the
     fixture's n_frames) so the engine's one connected-components
     operator (llm.dedup.dedup_clusters — edge-relation shuffles only,
     O(log n) rounds, raises at its round cap) applies unchanged;
@@ -1100,17 +1068,17 @@ def phash_clusters(pairs: DataFrame, *, frame_mod: int = 16) -> DataFrame:
     from rclabsapi_spark.llm.dedup import dedup_clusters
 
     packed = pairs.select(
-        (F.col("doc_id_a") * frame_mod + F.col("frame_idx_a")).alias("ua"),
-        (F.col("doc_id_b") * frame_mod + F.col("frame_idx_b")).alias("ub"),
+        (F.col("doc_id_a") * 16 + F.col("frame_idx_a")).alias("ua"),
+        (F.col("doc_id_b") * 16 + F.col("frame_idx_b")).alias("ub"),
     )
     cc = dedup_clusters(packed, src_col="ua", dst_col="ub")
     return cc.select(
-        F.floor(F.col("doc_id") / frame_mod).cast("long").alias("doc_id"),
-        (F.col("doc_id") % frame_mod).cast("int").alias("frame_idx"),
-        F.floor(F.col("cluster_id") / frame_mod)
+        F.floor(F.col("doc_id") / 16).cast("long").alias("doc_id"),
+        (F.col("doc_id") % 16).cast("int").alias("frame_idx"),
+        F.floor(F.col("cluster_id") / 16)
         .cast("long")
         .alias("keeper_doc_id"),
-        (F.col("cluster_id") % frame_mod).cast("int").alias(
+        (F.col("cluster_id") % 16).cast("int").alias(
             "keeper_frame_idx"
         ),
     )

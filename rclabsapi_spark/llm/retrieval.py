@@ -47,13 +47,7 @@ from rclabsapi_spark.layout import spread_by
 from rclabsapi_spark.llm.training import corpus_words
 
 
-def term_postings(
-    docs: DataFrame,
-    terms: Sequence[str],
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def term_postings(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     """(key, word, tf) postings restricted to ``terms``.
 
     The filter sits between the explode and the aggregate, so the
@@ -67,13 +61,12 @@ def term_postings(
     clusters on a superset of the key so it reuses that partitioning
     instead of adding its own exchange."""
     words = corpus_words(
-        spread_by(docs.select(key_col, text_col), key_col),
-        text_col=text_col,
-        extra_cols=(key_col,),
+        spread_by(docs.select("doc_id", "text"), "doc_id"),
+        extra_cols=("doc_id",),
     )
     return (
         words.filter(F.col("word").isin(*terms))
-        .groupBy(key_col, "word")
+        .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .cache()  # df re-aggregates this; don't re-run the corpus explode
     )
@@ -96,32 +89,24 @@ def tfidf_topk(
     terms: Sequence[str],
     *,
     k: int = 15,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Top-k documents by TF-IDF: score(d) = Σ_t tf(t,d) · ln(N/df(t)).
 
     Returns (key, score, n_terms) ordered by (score desc, key). df and N
     broadcast; the only shuffle of consequence is the postings aggregate."""
     return (
-        tfidf_scores(docs, terms, text_col=text_col, key_col=key_col)
-        .orderBy(F.col("score").desc(), key_col)
+        tfidf_scores(docs, terms)
+        .orderBy(F.col("score").desc(), "doc_id")
         .limit(k)
     )
 
 
-def tfidf_scores(
-    docs: DataFrame,
-    terms: Sequence[str],
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     """Unranked TF-IDF score relation (key, score, n_terms) over every
     document containing ≥1 query term — the full posting-scored relation
     `tfidf_topk` heap-selects from, exposed for scorer-agreement audits
     that need the whole distribution, not the top of it."""
-    postings = term_postings(docs, terms, text_col=text_col, key_col=key_col)
+    postings = term_postings(docs, terms)
     scored = postings.join(F.broadcast(_doc_freq(postings)), "word").join(
         F.broadcast(_corpus_size(docs))
     )
@@ -130,7 +115,7 @@ def tfidf_scores(
     # a top-k ORDER, so a raw-sum accumulation ulp at a 6dp boundary
     # would flip rank membership, not just one cell
     w_nano = F.floor(weight * 1000000000.0 + F.lit(0.5)).cast("long")
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("doc_id").agg(
         round_half_up(
             F.sum(w_nano).cast("double") / 1000000000.0
         ).alias("score"),
@@ -155,12 +140,8 @@ def bm25_topk(
     terms: Sequence[str],
     *,
     k: int = 15,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k documents by Okapi BM25 (k1/b are the TREC defaults).
+    """Top-k documents by Okapi BM25 (k1 = 1.2, b = 0.75: the TREC defaults).
 
     Unlike TF-IDF, BM25 needs every document's token length dl and the
     corpus mean avgdl, so the full-vocabulary (doc, term, tf) index is
@@ -169,21 +150,13 @@ def bm25_topk(
     and the avgdl scalar. dl joins postings on the doc key
     (co-partitioned: both sides are outputs of aggregates keyed on doc)."""
     return (
-        bm25_scores(docs, terms, k1=k1, b=b, text_col=text_col, key_col=key_col)
-        .orderBy(F.col("score").desc(), key_col)
+        bm25_scores(docs, terms)
+        .orderBy(F.col("score").desc(), "doc_id")
         .limit(k)
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    terms: Sequence[str],
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     """Unranked BM25 score relation (key, score, n_terms) — see
     `bm25_topk` for the physical shape; this is the same relation
     without the TakeOrdered heap, for whole-distribution consumers."""
@@ -198,21 +171,20 @@ def bm25_scores(
     # four data exchanges (tf index, dl, dl-for-avgdl, the join) to one
     # plus the tiny per-term df aggregate.
     words = corpus_words(
-        spread_by(docs.select(key_col, text_col), key_col),
-        text_col=text_col,
-        extra_cols=(key_col,),
+        spread_by(docs.select("doc_id", "text"), "doc_id"),
+        extra_cols=("doc_id",),
     )
-    tf_all = words.groupBy(key_col, "word").agg(
+    tf_all = words.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("double").alias("tf")
     ).cache()
-    dl = tf_all.groupBy(key_col).agg(F.sum("tf").alias("dl"))
+    dl = tf_all.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     postings = tf_all.filter(F.col("word").isin(*terms))
     # avgdl re-aggregates the CACHED tf index (vocab-sized, map-side
     # partial, rides the key partitioning) — the old shape re-ran dl's
     # aggregate through its own exchange just to average it
     avgdl = dl.agg(F.avg("dl").alias("avgdl"))
     scored = (
-        postings.join(dl, key_col)
+        postings.join(dl, "doc_id")
         .join(F.broadcast(_doc_freq(postings)), "word")
         .join(F.broadcast(_corpus_size(docs)))
         .join(F.broadcast(avgdl))
@@ -221,9 +193,9 @@ def bm25_scores(
     # SHUFFLES a doc's posting rows, so the raw-sum order is not even
     # partition-local
     bw_nano = F.floor(
-        _bm25_weight(k1, b) * 1000000000.0 + F.lit(0.5)
+        _bm25_weight(1.2, 0.75) * 1000000000.0 + F.lit(0.5)
     ).cast("long")
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("doc_id").agg(
         round_half_up(
             F.sum(bw_nano).cast("double") / 1000000000.0
         ).alias("score"),

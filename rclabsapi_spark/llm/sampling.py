@@ -32,13 +32,9 @@ def pct_threshold(pct: float) -> str:
     return format(int(65536 * pct / 100), "04x")
 
 
-def hash_sample(
-    df: DataFrame, *, key_col: str, pct: float, salt: str = ""
-) -> DataFrame:
+def hash_sample(df: DataFrame, *, key_col: str, pct: float) -> DataFrame:
     """Keep ~pct% of rows, membership a pure function of the key."""
-    return df.filter(
-        hash_bucket(F.col(key_col), salt=salt) < F.lit(pct_threshold(pct))
-    )
+    return df.filter(hash_bucket(F.col(key_col)) < F.lit(pct_threshold(pct)))
 
 
 def stratified_hash_sample(
@@ -48,7 +44,6 @@ def stratified_hash_sample(
     strat_col: str,
     fractions: dict[str, float],
     default_pct: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Per-stratum sampling rates (the training-mix primitive: e.g.
     keep 50% of en, 25% of de, 5% of everything else). The per-stratum
@@ -59,7 +54,7 @@ def stratified_hash_sample(
         thr = F.when(
             F.col(strat_col) == value, F.lit(pct_threshold(pct))
         ).otherwise(thr)
-    return df.filter(hash_bucket(F.col(key_col), salt=salt) < thr)
+    return df.filter(hash_bucket(F.col(key_col)) < thr)
 
 
 def split_assign(
@@ -306,15 +301,7 @@ def temperature_sample(
     return joined.filter(keep).drop("_rate")
 
 
-def dsir_logweights(
-    docs: DataFrame,
-    *,
-    is_target: Column,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    dims: int = 1024,
-    alpha: float = 0.5,
-) -> DataFrame:
+def dsir_logweights(docs: DataFrame, *, is_target: Column) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023,
     public literature): score every document by how target-like its
     hashed-unigram distribution is — the standard way to tilt a raw
@@ -325,7 +312,7 @@ def dsir_logweights(
 
     Physical shape: one token posting (doc-key partitioned), ONE
     grouped count producing both sides' bucket histograms (conditional
-    sums — the corpus is scanned once, not once per side), a ``dims``-row
+    sums — the corpus is scanned once, not once per side), a 1024-row
     log-ratio table broadcast back, and a per-doc fold. The fold runs
     over the position-sorted token list (collect_list → array_sort →
     aggregate), not SUM, so the per-doc double is bit-identical across
@@ -345,16 +332,16 @@ def dsir_logweights(
     # posting, and ReuseExchange computes the spread once for both.
     # The per-doc fold's groupBy(key) also reuses the key partitioning.
     toks = spread_by(
-        docs.select(F.col(key_col), is_target.alias("t"), F.col(text_col)),
-        key_col,
+        docs.select(F.col("doc_id"), is_target.alias("t"), F.col("text")),
+        "doc_id",
     ).select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.col("t"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w"),
     ).filter(F.col("w") != "")
     bucket = (
         F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long")
-        % dims
+        % 1024
     )
     counts = toks.groupBy(bucket.alias("b")).agg(
         F.sum(F.when(F.col("t"), 1).otherwise(0)).alias("nt"),
@@ -363,16 +350,16 @@ def dsir_logweights(
     totals = counts.agg(
         F.sum("nt").alias("tot_t"), F.sum("nr").alias("tot_r")
     )
-    a = float(alpha)
+    a = 0.5
     lr = (
-        F.log((F.col("nt") + a) / (F.col("tot_t") + a * dims))
-        - F.log((F.col("nr") + a) / (F.col("tot_r") + a * dims))
+        F.log((F.col("nt") + a) / (F.col("tot_t") + a * 1024))
+        - F.log((F.col("nr") + a) / (F.col("tot_r") + a * 1024))
     )
     ratios = counts.crossJoin(F.broadcast(totals)).select(
         "b", lr.alias("lr")
     )
     scored = toks.withColumn("b", bucket).join(F.broadcast(ratios), "b")
-    folded = scored.groupBy(key_col).agg(
+    folded = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.aggregate(
             F.array_sort(
@@ -385,7 +372,7 @@ def dsir_logweights(
         ).alias("w_raw"),
     )
     return folded.select(
-        F.col(key_col),
+        F.col("doc_id"),
         "n_tokens",
         round_half_up(F.col("w_raw"), 6).alias("dsir_logweight"),
     )

@@ -52,28 +52,25 @@ def cosine_topk(
     embeddings: DataFrame,
     query_vec_id: int,
     k: int = 10,
-    *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
 ) -> DataFrame:
     """Brute-force exact top-k by cosine vs the row with ``query_vec_id``.
 
     The 1-row query side is broadcast; the scan is one projection + a
     distributed top-k (TakeOrderedAndProject), no shuffle of the corpus."""
-    q = embeddings.filter(F.col(key_col) == query_vec_id).select(
-        _as_double(F.col(vec_col)).alias("qvec")
+    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+        _as_double(F.col("embedding")).alias("qvec")
     )
     scored = (
-        embeddings.filter(F.col(key_col) != query_vec_id)
+        embeddings.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
         .select(
-            F.col(key_col),
+            F.col("vec_id"),
             F.round(
-                cosine(_as_double(F.col(vec_col)), F.col("qvec")), 6
+                cosine(_as_double(F.col("embedding")), F.col("qvec")), 6
             ).alias("cosine_sim"),
         )
     )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(key_col)).limit(k)
+    return scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(k)
 
 
 def sign_bucket(vec: Column, num_bits: int = 8) -> Column:
@@ -87,12 +84,10 @@ def sign_bucket(vec: Column, num_bits: int = 8) -> Column:
     return F.concat(*bits)
 
 
-def lsh_bucket_stats(
-    embeddings: DataFrame, *, vec_col: str = "embedding", num_bits: int = 8
-) -> DataFrame:
+def lsh_bucket_stats(embeddings: DataFrame, *, num_bits: int = 8) -> DataFrame:
     """Bucket histogram — the data layout a bucketed ANN index would
     shuffle into (bucket = partition key)."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     return (
         embeddings.select(sign_bucket(v, num_bits).alias("bucket"))
         .groupBy("bucket")
@@ -105,35 +100,31 @@ def lsh_bucketed_topk(
     query_vec_id: int,
     k: int = 10,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     num_bits: int = 4,
 ) -> DataFrame:
     """ANN: probe only the query's sign-bucket, exact cosine within it.
     At scale the corpus is written bucketed (bucketBy(bucket)) so the probe
     reads one bucket's files — the scan cost drops by ~2^num_bits."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     bucketed = embeddings.withColumn("bucket", sign_bucket(v, num_bits))
-    q = bucketed.filter(F.col(key_col) == query_vec_id).select(
+    q = bucketed.filter(F.col("vec_id") == query_vec_id).select(
         F.col("bucket").alias("qbucket"), v.alias("qvec")
     )
     scored = (
-        bucketed.filter(F.col(key_col) != query_vec_id)
+        bucketed.filter(F.col("vec_id") != query_vec_id)
         .join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
         .select(
-            F.col(key_col),
+            F.col("vec_id"),
             F.col("bucket"),
             F.round(cosine(v, F.col("qvec")), 6).alias("cosine_sim"),
         )
     )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(key_col)).limit(k)
+    return scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(k)
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     num_bits: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
@@ -146,9 +137,9 @@ def embedding_near_dup_pairs(
     needs no join back. ``num_bits`` trades recall vs bucket size;
     ``max_bucket_size`` guards the B² blowup of degenerate buckets at
     corpus scale."""
-    v = _as_double(F.col(vec_col))
-    bucketed = spread_by(embeddings, key_col).select(
-        F.col(key_col),
+    v = _as_double(F.col("embedding"))
+    bucketed = spread_by(embeddings, "vec_id").select(
+        F.col("vec_id"),
         v.alias("v"),
         # per-vector norm once, BEFORE pair fan-out: each of the
         # O(bucket²) pairs below then pays one interpreted fold (the
@@ -160,11 +151,11 @@ def embedding_near_dup_pairs(
     pairs = block_pairs(
         bucketed,
         ["bucket"],
-        F.struct(F.col(key_col), F.col("v"), F.col("nrm")),
+        F.struct(F.col("vec_id"), F.col("v"), F.col("nrm")),
         max_bucket_size,
         lambda x, y: F.struct(
-            x[key_col].alias("id_a"),
-            y[key_col].alias("id_b"),
+            x["vec_id"].alias("id_a"),
+            y["vec_id"].alias("id_b"),
             x["v"].alias("va"),
             y["v"].alias("vb"),
             x["nrm"].alias("na"),
@@ -211,7 +202,6 @@ def ivf_assign(
     embeddings: DataFrame,
     *,
     vec_col: str = "embedding",
-    key_col: str = "vec_id",
     n_centroids: int = 8,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -225,15 +215,15 @@ def ivf_assign(
     cosines and keeps the argmax — the classic IVF build pass,
     embarrassingly parallel."""
     v = _as_double(F.col(vec_col))
-    base = embeddings.select(F.col(key_col), v.alias("v"))
+    base = embeddings.select(F.col("vec_id"), v.alias("v"))
     cents = (
         centroids
         if centroids is not None
-        else embeddings.filter(F.col(key_col) < n_centroids).select(
-            F.col(key_col).alias("centroid_id"), v.alias("cvec")
+        else embeddings.filter(F.col("vec_id") < n_centroids).select(
+            F.col("vec_id").alias("centroid_id"), v.alias("cvec")
         )
     )
-    return _assign_base(base, cents, key_col)
+    return _assign_base(base, cents, "vec_id")
 
 
 _CENTROIDS_SCHEMA = "centroid_id int, cvec array<double>"
@@ -242,8 +232,6 @@ _CENTROIDS_SCHEMA = "centroid_id int, cvec array<double>"
 def kmeans_centroids(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     k: int = 8,
     iters: int = 3,
 ) -> DataFrame:
@@ -267,16 +255,16 @@ def kmeans_centroids(
     iterations.
 
     Empty clusters keep their previous centroid (classic k-means fallback)."""
-    v = _as_double(F.col(vec_col))
-    base = embeddings.select(F.col(key_col), v.alias("v")).cache()
+    v = _as_double(F.col("embedding"))
+    base = embeddings.select(F.col("vec_id"), v.alias("v")).cache()
     spark = embeddings.sparkSession
-    cents = base.filter(F.col(key_col) < k).select(
-        F.col(key_col).cast("int").alias("centroid_id"), F.col("v").alias("cvec")
+    cents = base.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").cast("int").alias("centroid_id"), F.col("v").alias("cvec")
     )
     cent_rows = {r["centroid_id"]: list(r["cvec"]) for r in cents.collect()}
     for _ in range(iters):
         cents_df = local_df(spark, sorted(cent_rows.items()), _CENTROIDS_SCHEMA)
-        assigned = _assign_base(base, cents_df, key_col)
+        assigned = _assign_base(base, cents_df, "vec_id")
         means = (
             assigned.select(
                 "centroid_id", F.posexplode("v").alias("pos", "x")
@@ -314,8 +302,6 @@ def ivf_topk(
     query_vec_id: int,
     k: int = 10,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     n_centroids: int = 8,
     nprobe: int = 2,
     centroids: DataFrame | None = None,
@@ -335,19 +321,19 @@ def ivf_topk(
     release so plan pins / plan audit see the real probe plan instead of
     ``Scan ExistingRDD``; the query path keeps the default."""
     base = embeddings.select(
-        F.col(key_col), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     ).cache()
-    q = base.filter(F.col(key_col) == query_vec_id).select(
+    q = base.filter(F.col("vec_id") == query_vec_id).select(
         F.col("v").alias("qvec")
     )
     cents = (
         centroids
         if centroids is not None
-        else base.filter(F.col(key_col) < n_centroids).select(
-            F.col(key_col).alias("centroid_id"), F.col("v").alias("cvec")
+        else base.filter(F.col("vec_id") < n_centroids).select(
+            F.col("vec_id").alias("centroid_id"), F.col("v").alias("cvec")
         )
     )
-    assigned = _assign_base(base, cents, key_col)
+    assigned = _assign_base(base, cents, "vec_id")
     probe = (
         cents.crossJoin(F.broadcast(q))
         .select(
@@ -359,14 +345,14 @@ def ivf_topk(
         .select("centroid_id")
     )
     candidates = assigned.join(F.broadcast(probe), "centroid_id").filter(
-        F.col(key_col) != query_vec_id
+        F.col("vec_id") != query_vec_id
     )
     scored = candidates.crossJoin(F.broadcast(q)).select(
-        F.col(key_col),
+        F.col("vec_id"),
         F.col("centroid_id"),
         F.round(cosine(F.col("v"), F.col("qvec")), 6).alias("cosine_sim"),
     )
-    out = scored.orderBy(F.col("cosine_sim").desc(), F.col(key_col)).limit(k)
+    out = scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(k)
     # k-row result: materialize eagerly, then release the corpus cache so
     # repeated EngineAPI calls don't accumulate storage.
     if materialize:
@@ -378,12 +364,9 @@ def ivf_topk(
 def semantic_dedup(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.95,
-    max_cluster_size: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     literature): k-means-cluster the embedding space, then within each
@@ -407,35 +390,30 @@ def semantic_dedup(
     scan; in-cluster pairs come from ``block_pairs`` blocked on
     centroid_id. Cluster sizes are corpus/k in
     expectation — grow ``k`` with the corpus to bound the B² in-cluster
-    work (the paper runs K≈10⁵ for web-scale corpora); degenerate
-    clusters are dropped via ``max_cluster_size`` (cap documented, same
-    policy as the LSH tiers)."""
-    cents = kmeans_centroids(
-        embeddings, vec_col=vec_col, key_col=key_col, k=k, iters=iters
-    )
-    assigned = ivf_assign(
-        embeddings, vec_col=vec_col, key_col=key_col, centroids=cents
-    )
+    work (the paper runs K≈10⁵ for web-scale corpora); clusters are
+    not size-capped, so every in-cluster pair is compared."""
+    cents = kmeans_centroids(embeddings, k=k, iters=iters)
+    assigned = ivf_assign(embeddings, centroids=cents)
     # pair (x, y) with x.key < y.key — y is the drop candidate
     dropped = (
         block_pairs(
             assigned,
             ["centroid_id"],
-            F.struct(F.col(key_col), F.col("v")),
-            max_cluster_size,
+            F.struct(F.col("vec_id"), F.col("v")),
+            None,
             lambda x, y: F.struct(
-                y[key_col].alias("dup_key"),
+                y["vec_id"].alias("dup_key"),
                 F.round(cosine(x["v"], y["v"]), 9).alias("sim"),
             ),
         )
         .filter(F.col("p.sim") >= threshold)
-        .select(F.col("p.dup_key").alias(key_col))
+        .select(F.col("p.dup_key").alias("vec_id"))
         .distinct()
     )
     return (
-        assigned.join(dropped.withColumn("__d", F.lit(1)), key_col, "left")
+        assigned.join(dropped.withColumn("__d", F.lit(1)), "vec_id", "left")
         .select(
-            key_col,
+            "vec_id",
             "centroid_id",
             F.when(F.col("__d").isNotNull(), "dropped")
             .otherwise("kept")
@@ -447,8 +425,6 @@ def semantic_dedup(
 def quantize_embeddings_error(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     bits: int = 8,
 ) -> DataFrame:
     """Per-dimension scalar quantization audit: quantize each embedding
@@ -463,8 +439,8 @@ def quantize_embeddings_error(
     materialize wider than the audit needs."""
     levels = float(2**bits - 1)
     flat = embeddings.select(
-        F.col(key_col).alias("k"),
-        F.posexplode(F.col(vec_col)).alias("dim0", "v_f"),
+        F.col("vec_id").alias("k"),
+        F.posexplode(F.col("embedding")).alias("dim0", "v_f"),
     ).select(
         "k", (F.col("dim0") + 1).alias("dim"), F.col("v_f").cast("double").alias("v")
     )
@@ -508,8 +484,6 @@ def save_ivf_index(
     embeddings: DataFrame,
     path: str,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     n_centroids: int = 8,
     kmeans_iters: int = 5,
 ) -> None:
@@ -521,15 +495,11 @@ def save_ivf_index(
     expensive pass; every later search is scan-pruned."""
     cents = kmeans_centroids(
         embeddings,
-        vec_col=vec_col,
-        key_col=key_col,
         k=n_centroids,
         iters=kmeans_iters,
     )
-    assigned = ivf_assign(
-        embeddings, vec_col=vec_col, key_col=key_col, centroids=cents
-    )
-    vecs = embeddings.join(assigned.select(key_col, "centroid_id"), key_col)
+    assigned = ivf_assign(embeddings, centroids=cents)
+    vecs = embeddings.join(assigned.select("vec_id", "centroid_id"), "vec_id")
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     vecs.write.mode("overwrite").partitionBy("centroid_id").parquet(
         f"{path}/vectors"
@@ -541,8 +511,6 @@ def search_ivf_index(
     path: str,
     query_vec: list[float],
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -571,14 +539,14 @@ def search_ivf_index(
         F.col("centroid_id").isin(probe)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     return (
         vecs.select(
-            F.col(key_col),
+            F.col("vec_id"),
             F.col("centroid_id"),
             cosine(v, q).alias("cos_sim"),
         )
-        .orderBy(F.col("cos_sim").desc(), key_col)
+        .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(k)
     )
 
@@ -591,8 +559,6 @@ def search_ivf_index(
 def pq_train(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     n_subspaces: int = 8,
     codebook_size: int = 16,
     iters: int = 3,
@@ -622,11 +588,11 @@ def pq_train(
     # ``dim`` saves the probing job when the caller already knows the
     # vector width (e.g. it fetched the query vector first)
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     sub = dim // n_subspaces
     if sub * n_subspaces != dim:
-        raise ValueError("dim must divide n_subspaces")
-    v = _as_double(F.col(vec_col))
+        raise ValueError("n_subspaces must divide dim")
+    v = _as_double(F.col("embedding"))
     slices = F.array(
         *[
             F.struct(
@@ -637,7 +603,7 @@ def pq_train(
         ]
     )
     base = (
-        embeddings.select(F.col(key_col).alias("k"), F.explode(slices).alias("s"))
+        embeddings.select(F.col("vec_id").alias("k"), F.explode(slices).alias("s"))
         .select("k", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
         .cache()
     )
@@ -724,7 +690,7 @@ def pq_train(
     # a silent shorter codebook would shift every code id after the gap
     if missing:
         raise ValueError(
-            f"pq_train seeds centroids from {key_col} in [0, {codebook_size});"
+            f"pq_train seeds centroids from vec_id in [0, {codebook_size});"
             f" no input rows for ids {missing}"
         )
     return [
@@ -736,9 +702,6 @@ def pq_train(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
-    *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
 ) -> DataFrame:
     """Encode every vector as n_subspaces small codes: per subspace,
     argmin L2 to the codebook entries — computed as a pure Column
@@ -747,7 +710,7 @@ def pq_encode(
     shuffle). Output: (key, code_0 … code_{m−1}) — dim·4 bytes of
     float32 become m bytes."""
     sub = len(codebooks[0][0])
-    cols = [F.col(key_col)]
+    cols = [F.col("vec_id")]
     # score_c = x_m · c − ‖c‖²/2 as a flat multiply-add chain
     # (element_at + literal floats: whole-stage codegen; the
     # array-lambda dot() here would fall back to interpreted eval,
@@ -763,7 +726,7 @@ def pq_encode(
     # analysis). The parsed tree is operator-identical: `a + b * c`
     # parses as a + (b·c), the chain stays left-associative, sql_double
     # writes exact double literals, and the CAST mirrors _as_double.
-    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    v = "CAST(`embedding` AS ARRAY<DOUBLE>)"
     for m, book in enumerate(codebooks):
         scores = []
         for cent in book:
@@ -786,7 +749,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
     *,
-    key_col: str = "vec_id",
     k: int = 10,
 ) -> DataFrame:
     """Asymmetric-distance top-k by inner product: the query stays
@@ -808,8 +770,8 @@ def pq_adc_topk(
         term = map_lit[F.col(f"code_{m}")]
         score = term if score is None else score + term
     return (
-        codes.select(F.col(key_col), score.alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), key_col)
+        codes.select(F.col("vec_id"), score.alias("adc_score"))
+        .orderBy(F.col("adc_score").desc(), "vec_id")
         .limit(k)
     )
 
@@ -871,25 +833,21 @@ def ann_recall_at_k(
     return per_query.unionByName(macro)
 
 
-def derive_num_bits(
-    n: int, *, target_bucket_size: int = 64, lo: int = 4, hi: int = 16
-) -> int:
+def derive_num_bits(n: int, *, target_bucket_size: int = 64) -> int:
     """Sign-LSH width as a function of corpus size: the smallest b with
     2^b buckets of ≈``target_bucket_size`` expected members, clamped to
-    [lo, hi]. Pure integer arithmetic (ceil-div + bit_length) so the
+    [4, 16]. Pure integer arithmetic (ceil-div + bit_length) so the
     DuckDB mirror (``length(bin(ceildiv - 1))``) is bit-identical —
     never float log2, whose ulp at exact powers of two is
     engine-dependent."""
     ceildiv = max((n + target_bucket_size - 1) // target_bucket_size, 1)
-    return max(lo, min(hi, (ceildiv - 1).bit_length()))
+    return max(4, min(16, (ceildiv - 1).bit_length()))
 
 
 def hard_negative_mining(
     embeddings: DataFrame,
     labels: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     label_key_col: str = "doc_id",
     label_col: str = "lang",
     num_bits: int | None = None,
@@ -934,12 +892,12 @@ def hard_negative_mining(
         num_bits = derive_num_bits(
             embeddings.count(), target_bucket_size=target_bucket_size
         )
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     lab = labels.select(
-        F.col(label_key_col).alias(key_col), F.col(label_col).alias("__lab")
+        F.col(label_key_col).alias("vec_id"), F.col(label_col).alias("__lab")
     )
-    base = embeddings.join(lab, key_col).select(
-        F.col(key_col),
+    base = embeddings.join(lab, "vec_id").select(
+        F.col("vec_id"),
         F.col("__lab"),
         v.alias("__v"),
         # per-ROW norm, computed once per vector before the bucket
@@ -952,7 +910,7 @@ def hard_negative_mining(
         sign_bucket(v, num_bits).alias("__bkt"),
     )
     a = base.select(
-        F.col(key_col).alias("anchor_id"),
+        F.col("vec_id").alias("anchor_id"),
         F.col("__lab").alias("anchor_label"),
         F.col("__v").alias("av"),
         F.col("__nrm").alias("anrm"),
@@ -971,7 +929,7 @@ def hard_negative_mining(
         ]
         a = a.withColumn("bkt", F.explode(F.array(*flips)))
     n = base.select(
-        F.col(key_col).alias("negative_id"),
+        F.col("vec_id").alias("negative_id"),
         F.col("__lab").alias("neg_label"),
         F.col("__v").alias("nv"),
         F.col("__nrm").alias("nnrm"),
@@ -1022,14 +980,11 @@ def hard_negative_coverage(
     embeddings: DataFrame,
     labels: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     label_key_col: str = "doc_id",
     label_col: str = "lang",
     num_bits: int | None = None,
     target_bucket_size: int = 64,
     max_bucket_candidates: int | None = 256,
-    probe_bits: int = 0,
 ) -> DataFrame:
     """Coverage audit for blocked hard-negative mining: per anchor
     label, how many anchors found a local (in-bucket, post-cap)
@@ -1043,20 +998,17 @@ def hard_negative_coverage(
     mined = hard_negative_mining(
         embeddings,
         labels,
-        vec_col=vec_col,
-        key_col=key_col,
         label_key_col=label_key_col,
         label_col=label_col,
         num_bits=num_bits,
         target_bucket_size=target_bucket_size,
         max_bucket_candidates=max_bucket_candidates,
-        probe_bits=probe_bits,
     )
     lab = labels.select(
-        F.col(label_key_col).alias(key_col), F.col(label_col).alias("__lab")
+        F.col(label_key_col).alias("vec_id"), F.col(label_col).alias("__lab")
     )
     anchors = (
-        embeddings.join(lab, key_col)
+        embeddings.join(lab, "vec_id")
         .groupBy(F.col("__lab").alias("anchor_label"))
         .agg(F.count(F.lit(1)).alias("n_anchors"))
     )
@@ -1082,8 +1034,6 @@ def semantic_decontaminate(
     train_emb: DataFrame,
     eval_emb: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     num_bits: int | None = None,
     target_bucket_size: int = 16,
     threshold: float = 0.9,
@@ -1121,9 +1071,9 @@ def semantic_decontaminate(
         num_bits = derive_num_bits(
             eval_emb.count(), target_bucket_size=target_bucket_size
         )
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     ev = eval_emb.select(
-        F.col(key_col).alias("eval_id"),
+        F.col("vec_id").alias("eval_id"),
         v.alias("ev"),
         norm(v).alias("enrm"),
         sign_bucket(v, num_bits).alias("bkt"),
@@ -1139,7 +1089,7 @@ def semantic_decontaminate(
             .drop("__c")
         )
     tr = train_emb.select(
-        F.col(key_col).alias("train_id"),
+        F.col("vec_id").alias("train_id"),
         v.alias("tv"),
         # norms once per side before the bucket join: the per-candidate
         # cosine below is then one fold (the dot), not three —
@@ -1181,8 +1131,6 @@ def semantic_decontaminate(
 def truncation_energy_audit(
     embeddings: DataFrame,
     *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
     dims: tuple[int, ...] = (8, 16, 32),
 ) -> DataFrame:
     """Matryoshka-style truncation audit (public literature: MRL,
@@ -1199,7 +1147,7 @@ def truncation_energy_audit(
     round half-up at 6dp."""
     from rclabsapi_spark.functions.scalars import round_half_up
 
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     full = dot(v, v)
     ratios = embeddings.select(
         *[

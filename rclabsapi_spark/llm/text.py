@@ -91,8 +91,6 @@ def mean_token_len(text: Column) -> Column:
 def quality_features(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     carry: tuple[Column, ...] = (),
 ) -> DataFrame:
     """Length / token / stopword / punctuation features + a composite
@@ -101,13 +99,13 @@ def quality_features(
     same single scan — so a caller composing quality with another
     per-doc derivation (e.g. the registrable domain for a per-domain
     quality prior) never self-joins the corpus on the doc key."""
-    text = F.col(text_col)
+    text = F.col("text")
     t = tokens(text)
     n_tok = F.size(t)
     char_len = F.length(text)
     punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
     out = docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         *carry,
         char_len.cast("long").alias("char_len"),
         n_tok.cast("long").alias("n_tokens"),
@@ -155,17 +153,17 @@ def lang_pred_expr(text: Column) -> Column:
     return best
 
 
-def lang_id(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-token language ID with a deterministic argmax (ties resolve
     in LANG_MARKERS declaration order)."""
-    scores = lang_scores(F.col(text_col))
+    scores = lang_scores(F.col("text"))
     langs = list(scores)
     # argmax via iterated CASE: lang L wins if its score >= all later langs
     # and > all earlier langs (strict ties keep the earliest).
-    out_cols = [F.col(key_col)]
+    out_cols = [F.col("doc_id")]
     for lang in langs:
         out_cols.append(scores[lang].alias(f"score_{lang}"))
-    out_cols.append(lang_pred_expr(F.col(text_col)).alias("predicted_lang"))
+    out_cols.append(lang_pred_expr(F.col("text")).alias("predicted_lang"))
     return docs.select(*out_cols)
 
 
@@ -174,8 +172,6 @@ def chunk_documents(
     *,
     chunk_tokens: int,
     stride: int,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window chunking: split each document's whitespace tokens
     into chunks of ``chunk_tokens`` starting every ``stride`` tokens
@@ -189,30 +185,30 @@ def chunk_documents(
     partitioning follows the input scan."""
     if stride <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride)
     )
     exploded = docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
         F.posexplode(starts).alias("chunk_idx", "_start"),
     )
     chunk = F.slice(F.col("_toks"), F.col("_start"), chunk_tokens)
     return exploded.select(
-        key_col,
+        "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         F.concat_ws(" ", chunk).alias("chunk_text"),
         F.size(chunk).cast("long").alias("chunk_len"),
     )
 
 
-def fingerprint(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Normalized-content fingerprint: md5 over lowercased,
     whitespace-collapsed text (the rolling-hash shape, engine-portable)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.md5(norm).alias("fingerprint"),
     )
 
@@ -220,8 +216,6 @@ def fingerprint(docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_
 def pmi_collocations(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     min_count: int = 5,
     k: int = 20,
 ) -> DataFrame:
@@ -252,10 +246,10 @@ def pmi_collocations(
     # removal, and note the entry lives until the session drops the
     # returned plan — the bench clears caches between runs.
     toks = (
-        spread_by(docs, key_col)
+        spread_by(docs, "doc_id")
         .select(
-            F.col(key_col).alias("doc"),
-            F.posexplode(tokens(F.col(text_col))).alias("pos", "w"),
+            F.col("doc_id").alias("doc"),
+            F.posexplode(tokens(F.col("text"))).alias("pos", "w"),
         )
         .cache()
     )
@@ -300,12 +294,7 @@ def pmi_collocations(
     )
 
 
-def zipf_fit(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    max_rank: int = 10000,
-) -> DataFrame:
+def zipf_fit(docs: DataFrame, *, max_rank: int = 10000) -> DataFrame:
     """Zipf-law fit of the corpus token distribution: least-squares
     slope of log(freq) on log(rank) over the top ``max_rank`` types —
     natural corpora fit α ≈ −1; a corpus of templated/generated text
@@ -321,7 +310,7 @@ def zipf_fit(
     from rclabsapi_spark.operators.rank import global_row_number
 
     toks = docs.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("w")
+        F.explode(F.split(F.col("text"), " ")).alias("w")
     ).filter(F.col("w") != "")
     vocab = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     ranked = (
@@ -356,13 +345,7 @@ def zipf_fit(
     )
 
 
-def lang_id_evaluation(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    truth_col: str = "lang",
-) -> DataFrame:
+def lang_id_evaluation(docs: DataFrame) -> DataFrame:
     """Evaluate the marker-token language identifier against labeled
     ground truth: the (true, predicted, n) confusion matrix with
     per-true-language recall — the audit that decides whether the
@@ -372,11 +355,11 @@ def lang_id_evaluation(
     One scan scores and predicts; the confusion matrix is a
     |langs|²-sized aggregate with the recall share divided from exact
     counts."""
-    pred = lang_id(docs, text_col=text_col, key_col=key_col).select(
-        key_col, "predicted_lang"
+    pred = lang_id(docs).select(
+        "doc_id", "predicted_lang"
     )
-    joined = docs.select(key_col, F.col(truth_col).alias("true_lang")).join(
-        pred, key_col
+    joined = docs.select("doc_id", F.col("lang").alias("true_lang")).join(
+        pred, "doc_id"
     )
     cm = joined.groupBy("true_lang", "predicted_lang").agg(
         F.count(F.lit(1)).alias("n")

@@ -27,13 +27,10 @@ def pack_bins(
     docs: DataFrame,
     *,
     budget: int,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    shard_col: str = "source",
     max_docs_per_task: int | None = None,
 ) -> DataFrame:
     """Greedy contiguous sequence packing: within each shard, documents in
-    deterministic ``key_col`` order fill fixed ``budget``-token bins; a
+    deterministic ``doc_id`` order fill fixed ``budget``-token bins; a
     document whose tokens straddle a boundary belongs to the bin where it
     started (first-fit along the shard order, the streaming-packer
     semantics).
@@ -41,7 +38,7 @@ def pack_bins(
     Returns (key, shard, n_tokens, bin_id).
 
     Scale: one window per shard partition — the shuffle is a single
-    hash-partition on ``shard_col``, and shards are processed
+    hash-partition on ``source``, and shards are processed
     independently, so 10⁵ shards spread over the cluster with no global
     sort. The running sum is the only state; no iteration, no driver.
 
@@ -54,15 +51,15 @@ def pack_bins(
     shard-global token prefix sum, and a prefix sum decomposes exactly as
     run-offset + within-run prefix, so the salted output is bit-identical
     to the serial pass — not an approximation."""
-    tok = token_count(F.col(text_col))
+    tok = token_count(F.col("text"))
     with_tok = docs.select(
-        F.col(key_col), F.col(shard_col), tok.alias("n_tokens")
+        F.col("doc_id"), F.col("source"), tok.alias("n_tokens")
     )
 
     if max_docs_per_task is None:
         w = (
-            Window.partitionBy(shard_col)
-            .orderBy(key_col)
+            Window.partitionBy("source")
+            .orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         cum = F.sum("n_tokens").over(w)
@@ -79,26 +76,26 @@ def pack_bins(
         32, math.ceil(with_tok.count() / max_docs_per_task)
     )
     ranged = with_tok.repartitionByRange(
-        n_runs, F.col(shard_col), F.col(key_col)
+        n_runs, F.col("source"), F.col("doc_id")
     ).withColumn("run_id", F.spark_partition_id())
 
     w_run = (
-        Window.partitionBy(shard_col, "run_id")
-        .orderBy(key_col)
+        Window.partitionBy("source", "run_id")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum_run = F.sum("n_tokens").over(w_run)
 
-    run_totals = ranged.groupBy(shard_col, "run_id").agg(
+    run_totals = ranged.groupBy("source", "run_id").agg(
         F.sum("n_tokens").alias("run_tokens")
     )
     w_off = (
-        Window.partitionBy(shard_col)
+        Window.partitionBy("source")
         .orderBy("run_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = run_totals.select(
-        shard_col,
+        "source",
         "run_id",
         F.coalesce(F.sum("run_tokens").over(w_off), F.lit(0)).alias(
             "run_offset"
@@ -108,10 +105,10 @@ def pack_bins(
     start = F.col("run_offset") + F.col("cum_run") - F.col("n_tokens")
     return (
         ranged.withColumn("cum_run", cum_run)
-        .join(F.broadcast(offsets), [shard_col, "run_id"])
+        .join(F.broadcast(offsets), ["source", "run_id"])
         .select(
-            key_col,
-            shard_col,
+            "doc_id",
+            "source",
             "n_tokens",
             F.floor(start / float(budget)).cast("long").alias("bin_id"),
         )
@@ -119,7 +116,7 @@ def pack_bins(
 
 
 def corpus_words(
-    docs: DataFrame, *, text_col: str = "text", extra_cols: tuple[str, ...] = ()
+    docs: DataFrame, *, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """Explode whitespace tokens, dropping empties — the word relation the
     unigram LM and vocab-coverage operators share. At scale this is the
@@ -127,13 +124,11 @@ def corpus_words(
     map-side partial combine before any join."""
     cols = [F.col(c) for c in extra_cols]
     return docs.select(
-        *cols, F.explode(F.split(F.col(text_col), " ")).alias("word")
+        *cols, F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.col("word") != "")
 
 
-def unigram_score(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def unigram_score(docs: DataFrame) -> DataFrame:
     """Per-document average unigram log-probability — the cheap
     perplexity-proxy quality score (docs of common words score high,
     gibberish scores low).
@@ -146,7 +141,7 @@ def unigram_score(
     word key, which partial-combined word counts already co-partition."""
     from rclabsapi_spark.functions.scalars import round_half_up
 
-    words = corpus_words(docs, text_col=text_col, extra_cols=(key_col,))
+    words = corpus_words(docs, extra_cols=("doc_id",))
     # cache the VOCAB-sized model relation, not a doc-level tf index:
     # without it the corpus totals and the scoring join each re-derived
     # the vocab aggregate (and its corpus explode) — but materializing a
@@ -169,7 +164,7 @@ def unigram_score(
     lp_nano = F.floor(
         F.log(F.col("cnt") / F.col("total")) * 1000000000.0 + F.lit(0.5)
     ).cast("long")
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         round_half_up(
             F.sum(lp_nano).cast("double")
@@ -179,9 +174,7 @@ def unigram_score(
     )
 
 
-def doc_bigrams(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def doc_bigrams(docs: DataFrame) -> DataFrame:
     """Per-document adjacent word pairs — (key, w1, w2), one row per
     bigram occurrence. Adjacency is over the empty-filtered token
     sequence (consecutive spaces collapse), so 'a  b' yields ('a','b').
@@ -196,7 +189,7 @@ def doc_bigrams(
     ~0.95 s with bit-identical output.)"""
     from rclabsapi_spark.functions.scalars import let
 
-    w0 = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    w0 = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     pairs = let(
         w0,
         lambda w: F.zip_with(
@@ -207,14 +200,12 @@ def doc_bigrams(
     )
     return (
         docs.filter(F.size(w0) >= 2)
-        .select(F.col(key_col), F.explode(pairs).alias("b"))
-        .select(key_col, "b.w1", "b.w2")
+        .select(F.col("doc_id"), F.explode(pairs).alias("b"))
+        .select("doc_id", "b.w1", "b.w2")
     )
 
 
-def bigram_score(
-    docs: DataFrame, *, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def bigram_score(docs: DataFrame) -> DataFrame:
     """Per-document average bigram conditional log-probability — the
     CCNet-style n-gram LM quality filter one order up from
     ``unigram_score``: fluent word-order scores high, shuffled bags of
@@ -231,7 +222,7 @@ def bigram_score(
     the already-reduced model relation (vocab-sized → broadcast back)."""
     from rclabsapi_spark.functions.scalars import round_half_up
 
-    bg = doc_bigrams(docs, text_col=text_col, key_col=key_col)
+    bg = doc_bigrams(docs)
     # deliberately UN-materialized: the bigram explode behind c12 runs
     # once per consumer (context totals + scoring join), and that
     # recompute measured CHEAPER at sf0.1 than materializing either a
@@ -251,7 +242,7 @@ def bigram_score(
     lp_nano = F.floor(
         F.log(F.col("cnt12") / F.col("cnt1")) * 1000000000.0 + F.lit(0.5)
     ).cast("long")
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         round_half_up(
             F.sum(lp_nano).cast("double")
@@ -272,23 +263,17 @@ def vocab_topk(words: DataFrame, *, k: int) -> DataFrame:
     )
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    *,
-    k: int,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, *, k: int) -> DataFrame:
     """Tokenizer-vocabulary coverage per group: what fraction of running
     words a top-k vocabulary covers (1 − OOV rate) — the audit run before
     freezing a tokenizer.
 
     Scale: the vocab is k rows → broadcast; the word relation aggregates
     per group with partial combine. One wide scan, one tiny broadcast."""
-    words = corpus_words(docs, text_col=text_col, extra_cols=(group_col,))
+    words = corpus_words(docs, extra_cols=("source",))
     vocab = vocab_topk(words, k=k).select("word", F.lit(1).alias("in_vocab"))
     tagged = words.join(F.broadcast(vocab), "word", "left")
-    return tagged.groupBy(group_col).agg(
+    return tagged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.coalesce(F.col("in_vocab"), F.lit(0))).alias("n_in_vocab"),
         F.round(
@@ -305,9 +290,7 @@ def _norm_fingerprint(text_col: str) -> Column:
     return F.md5(norm)
 
 
-def cross_source_leakage(
-    docs: DataFrame, *, text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
+def cross_source_leakage(docs: DataFrame) -> DataFrame:
     """Per-source leakage audit: how many of a source's documents have
     normalized content that also appears under ANOTHER source — the
     train/eval-split hazard exact dedup alone doesn't surface (it keeps
@@ -319,8 +302,8 @@ def cross_source_leakage(
     the fingerprint key — the per-fingerprint source count reuses the
     same hash partitioning as the join back (one exchange under AQE)."""
     fps = docs.select(
-        F.col(source_col).alias("source"),
-        _norm_fingerprint(text_col).alias("fp"),
+        F.col("source").alias("source"),
+        _norm_fingerprint("text").alias("fp"),
     )
     fp_src = fps.groupBy("fp").agg(
         F.count_distinct("source").alias("n_src")
@@ -337,8 +320,6 @@ def cross_source_leakage(
 def span_corruption(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     span_len: int = 3,
     start_rate: float = 0.05,
     sentinel: str = "<X>",
@@ -361,9 +342,9 @@ def span_corruption(
     Contract: a doc where no span start fires returns ``targets = []``
     (an empty array, not NULL) with the input text unchanged — pinned
     by tests/test_pack_bins.py::test_span_corruption_spanless_doc_contract."""
-    toks = spread_by(docs, key_col).select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+    toks = spread_by(docs, "doc_id").select(
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
     ).filter(F.col("tok") != "")
     thr = format(int(65536 * start_rate), "04x")
     is_start = (
@@ -482,7 +463,7 @@ def span_corruption(
             targets_col.alias("targets"),
         )
         .select(
-            F.col("doc").alias(key_col),
+            F.col("doc").alias("doc_id"),
             "masked_input",
             "n_spans",
             "n_masked_tokens",
@@ -491,16 +472,10 @@ def span_corruption(
     )
 
 
-def shuffle_shards(
-    df: DataFrame,
-    *,
-    key_col: str,
-    n_shards: int,
-    salt: str = "shuf:",
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, *, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic global corpus shuffle into exactly-even shards —
     the data-order randomization every training run needs, made
-    reproducible: rank keys by md5(salt‖key), assign round-robin
+    reproducible: rank keys by md5("shuf:"‖key), assign round-robin
     (shard = rank mod N → shard sizes differ by at most 1, unlike the
     ±√n jitter of md5-mod-N), position-in-shard = rank div N. A resumed
     or re-run pipeline re-derives the identical order.
@@ -511,7 +486,7 @@ def shuffle_shards(
     uniform by construction, so the threshold buckets are balanced."""
     from rclabsapi_spark.operators.rank import global_row_number
 
-    h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
+    h = F.md5(F.concat(F.lit("shuf:"), F.col(key_col).cast("string")))
     ranked = global_row_number(
         df.select(F.col(key_col)),
         [h, F.col(key_col)],

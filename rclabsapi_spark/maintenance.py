@@ -85,17 +85,12 @@ def compact_parquet(
     )
 
 
-def expire_partitions(
-    path: str,
-    *,
-    partition_col: str = "index_date",
-    keep_from: str,
-) -> list[str]:
+def expire_partitions(path: str, *, keep_from: str) -> list[str]:
     """Drop partition directories with values < ``keep_from``
     (lexicographic — yyyy.MM.dd order IS time order). Returns dropped
     partition values."""
     dropped = []
-    prefix = f"{partition_col}="
+    prefix = "index_date="
     for name in sorted(os.listdir(path)):
         if not name.startswith(prefix):
             continue
@@ -244,22 +239,18 @@ def merge_upsert(
     }
 
 
-def dataset_manifest(
-    df: DataFrame,
-    *,
-    cols: list[str] | None = None,
-) -> dict:
+def dataset_manifest(df: DataFrame) -> dict:
     """Content-addressed dataset manifest: row count, per-column
     null/distinct profile, and an ORDER-INSENSITIVE content digest —
     the reproducibility record a training run pins so "the same
     dataset" is a checkable claim, not a path name.
 
-    The digest sums per-row 64-bit hashes of the selected columns
+    The digest sums per-row 64-bit hashes of all the columns
     (xxhash64 over the concatenated canonical string) in a single
     aggregate: commutative, so any partitioning/ordering of identical
     rows yields the identical digest, and any changed/added/dropped row
     changes it. Computed in ONE pass alongside the profile aggregates."""
-    cols = cols or df.columns
+    cols = df.columns
     canon = F.concat_ws(
         "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]
     )
@@ -310,14 +301,7 @@ def missing_partitions(
     }
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    *,
-    key_col: str = "doc_id",
-    fp_col: str = "fp",
-    group_col: str = "source",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot-to-snapshot corpus diff — the day-over-day ingest audit
     run before promoting a new corpus snapshot: per group, old/new row
     counts and the added / removed / changed / unchanged breakdown with
@@ -344,16 +328,16 @@ def snapshot_diff(
     from rclabsapi_spark.functions.scalars import round_half_up
 
     o = old.select(
-        F.col(key_col),
-        F.col(group_col).alias("_g_old"),
-        F.col(fp_col).alias("_fp_old"),
+        F.col("doc_id"),
+        F.col("source").alias("_g_old"),
+        F.col("fp").alias("_fp_old"),
     )
     n = new.select(
-        F.col(key_col),
-        F.col(group_col).alias("_g_new"),
-        F.col(fp_col).alias("_fp_new"),
+        F.col("doc_id"),
+        F.col("source").alias("_g_new"),
+        F.col("fp").alias("_fp_new"),
     )
-    j = o.join(n, key_col, "full_outer")
+    j = o.join(n, "doc_id", "full_outer")
     status = (
         F.when(F.col("_fp_old").isNull(), F.lit("added"))
         .when(F.col("_fp_new").isNull(), F.lit("removed"))
@@ -361,12 +345,12 @@ def snapshot_diff(
         .otherwise(F.lit("unchanged"))
     )
     lab = j.select(
-        F.coalesce("_g_new", "_g_old").alias(group_col),
+        F.coalesce("_g_new", "_g_old").alias("source"),
         status.alias("status"),
         F.col("_fp_old").isNotNull().cast("int").alias("in_old"),
         F.col("_fp_new").isNotNull().cast("int").alias("in_new"),
     )
-    agg = lab.groupBy(group_col).agg(
+    agg = lab.groupBy("source").agg(
         F.sum("in_old").cast("long").alias("n_old"),
         F.sum("in_new").cast("long").alias("n_new"),
         F.sum((F.col("status") == "added").cast("int"))
@@ -383,7 +367,7 @@ def snapshot_diff(
         .alias("n_unchanged"),
     )
     return agg.select(
-        group_col,
+        "source",
         "n_old",
         "n_new",
         "n_added",

@@ -31,13 +31,7 @@ from rclabsapi_spark.operators.rank import (
 )
 
 
-def transition_matrix(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-) -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """First-order Markov transitions between consecutive events per key:
     (from_type, to_type, n, p) where p is the row-conditional probability
     n / Σ_to n.
@@ -46,10 +40,10 @@ def transition_matrix(
     a |types|² relation, so the probability-normalizing window over
     from_type is driver-trivial. p divides exact integer counts — bit-
     identical across engines, no rounding needed."""
-    w = Window.partitionBy(key_col).orderBy(*order_cols)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
-        F.col(type_col).alias("from_type"),
-        F.lead(type_col).over(w).alias("to_type"),
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
     ).filter(F.col("to_type").isNotNull())
     counts = seq.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -64,24 +58,17 @@ def transition_matrix(
     )
 
 
-def path_trigrams(
-    events: DataFrame,
-    *,
-    k: int = 10,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-) -> DataFrame:
+def path_trigrams(events: DataFrame, *, k: int = 10) -> DataFrame:
     """Top-k length-3 event paths (t1→t2→t3 within one key's timeline):
     the "common journeys" miner. Two stacked leads over ONE per-key
     window ordering (one shuffle, one sort), counts partial-combine, and
     the top-k is TakeOrdered with a full lexicographic tie-break so the
     boundary is deterministic."""
-    w = Window.partitionBy(key_col).orderBy(*order_cols)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
-        F.col(type_col).alias("t1"),
-        F.lead(type_col, 1).over(w).alias("t2"),
-        F.lead(type_col, 2).over(w).alias("t3"),
+        F.col("event_type").alias("t1"),
+        F.lead("event_type", 1).over(w).alias("t2"),
+        F.lead("event_type", 2).over(w).alias("t3"),
     ).filter(F.col("t2").isNotNull() & F.col("t3").isNotNull())
     return (
         seq.groupBy("t1", "t2", "t3")
@@ -95,10 +82,6 @@ def rfm_scores(
     orders: DataFrame,
     *,
     now: str,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    buckets: int = 4,
     materialize: bool = True,
 ) -> DataFrame:
     """Classic RFM scoring: per customer recency (days since last order,
@@ -121,15 +104,15 @@ def rfm_scores(
     triangle_count/pagerank hygiene pattern — while
     ``materialize=False`` leaves the plan inspectable for pins and the
     plan audit."""
-    per_cust = orders.groupBy(key_col).agg(
-        F.datediff(F.lit(now).cast("date"), F.max(date_col).cast("date"))
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.datediff(F.lit(now).cast("date"), F.max("o_orderdate").cast("date"))
         .cast("long")
         .alias("recency_days"),
         F.count(F.lit(1)).alias("frequency"),
         (
             F.sum(
                 F.floor(
-                    F.col(amount_col) * 1000000.0 + F.lit(0.5)
+                    F.col("o_totalprice") * 1000000.0 + F.lit(0.5)
                 ).cast("decimal(38,0)")
             ).cast("double")
             / 1000000.0
@@ -164,26 +147,26 @@ def rfm_scores(
     dims = [
         (
             "r_score",
-            [F.col("recency_days"), F.col(key_col)],
+            [F.col("recency_days"), F.col("o_custkey")],
             F.col("recency_days"),
             q_r,
         ),
         (
             "f_score",
-            [F.col("frequency").desc(), F.col(key_col)],
+            [F.col("frequency").desc(), F.col("o_custkey")],
             -F.col("frequency"),  # desc order → negated bucket key
             [-q for q in q_f],
         ),
         (
             "m_score",
-            [F.col("monetary").desc(), F.col(key_col)],
+            [F.col("monetary").desc(), F.col("o_custkey")],
             -F.col("monetary"),
             [-q for q in q_m],
         ),
     ]
-    out = global_ntile_multi(per_cust, dims, buckets, num_buckets=n_buckets)
+    out = global_ntile_multi(per_cust, dims, 4, num_buckets=n_buckets)
     out = out.select(
-        F.col(key_col),
+        F.col("o_custkey"),
         "recency_days",
         "frequency",
         "monetary",
@@ -204,9 +187,8 @@ def mad_anomalies(
     *,
     group_cols: tuple[str, ...],
     value_col: str,
-    threshold: float = 3.0,
 ) -> DataFrame:
-    """Robust outlier flagging: |x − median| > threshold·MAD per group,
+    """Robust outlier flagging: |x − median| > 3·MAD per group,
     the median/MAD analog of the reference's threshold alerts (ST6,
     system_metrics.hpp:43-54) that needs no hand-tuned absolute limit.
 
@@ -227,7 +209,7 @@ def mad_anomalies(
     mad = with_med.groupBy(*gcols).agg(F.median(dev).alias("mad"))
     return (
         with_med.join(F.broadcast(mad), gcols)
-        .withColumn("is_anomaly", dev > F.lit(threshold) * F.col("mad"))
+        .withColumn("is_anomaly", dev > F.lit(3.0) * F.col("mad"))
     )
 
 
@@ -362,7 +344,6 @@ def psi_drift(
     value_col: str,
     period_col: Column,
     n_bins: int = 10,
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Population Stability Index between a reference and a current
     period, per group: equal-width bins over the GLOBAL value range,
@@ -413,8 +394,8 @@ def psi_drift(
         (F.col("n_ref").cast("double") / F.sum("n_ref").over(w_g)).alias("p"),
         (F.col("n_cur").cast("double") / F.sum("n_cur").over(w_g)).alias("q"),
     )
-    q_f = F.greatest(F.col("q"), F.lit(eps))
-    p_f = F.greatest(F.col("p"), F.lit(eps))
+    q_f = F.greatest(F.col("q"), F.lit(1e-6))
+    p_f = F.greatest(F.col("p"), F.lit(1e-6))
     return shares.groupBy(*gcols).agg(
         F.sum("n_ref").alias("n_ref"),
         F.sum("n_cur").alias("n_cur"),
@@ -490,10 +471,6 @@ def last_touch_attribution(
     events: DataFrame,
     *,
     conversion_type: str,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
 ) -> DataFrame:
     """Last-touch conversion attribution: each conversion event is
     credited to the most recent PRECEDING non-conversion event type
@@ -510,20 +487,20 @@ def last_touch_attribution(
     9dp integer grid (order-independent)."""
 
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(*order_cols)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     touch = F.last(
-        F.when(F.col(type_col) != conversion_type, F.col(type_col)),
+        F.when(F.col("event_type") != conversion_type, F.col("event_type")),
         ignorenulls=True,
     ).over(w)
     conv = events.withColumn("channel", touch).filter(
-        F.col(type_col) == conversion_type
+        F.col("event_type") == conversion_type
     )
     counts = conv.groupBy("channel").agg(
         F.count(F.lit(1)).alias("n_conversions"),
-        grid_sum(F.col(value_col), 6).alias("attributed_value"),
+        grid_sum(F.col("value"), 6).alias("attributed_value"),
     )
     w_all = Window.partitionBy()
     return counts.select(

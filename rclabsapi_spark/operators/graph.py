@@ -34,8 +34,6 @@ from rclabsapi_spark.functions.scalars import round_half_up
 def triangle_count(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     materialize: bool = True,
     edges_canonical: bool = False,
 ) -> DataFrame:
@@ -63,11 +61,11 @@ def triangle_count(
     query path keeps the default: materialize, then free the caches."""
     if edges_canonical:
         e = edges.select(
-            F.col(src_col).alias("u"), F.col(dst_col).alias("v")
+            F.col("src").alias("u"), F.col("dst").alias("v")
         ).cache()  # consumed by degrees, orientation, and the count
     else:
-        u = F.least(F.col(src_col), F.col(dst_col)).alias("u")
-        v = F.greatest(F.col(src_col), F.col(dst_col)).alias("v")
+        u = F.least(F.col("src"), F.col("dst")).alias("u")
+        v = F.greatest(F.col("src"), F.col("dst")).alias("v")
         e = (
             edges.select(u, v)
             .filter(F.col("u") != F.col("v"))
@@ -126,15 +124,12 @@ def triangle_count(
 def pagerank(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
     iters: int = 3,
     damping: float = 0.85,
     materialize: bool = True,
 ) -> DataFrame:
     """Weighted PageRank, ``iters`` synchronous power iterations:
-    r(v) ← (1−d)/N + d·Σ_u r(u)·w(u,v), with ``weight_col`` already
+    r(v) ← (1−d)/N + d·Σ_u r(u)·w(u,v), with ``w`` already
     row-normalized per source (a transition matrix). Returns
     (node, pagerank). Dangling mass is not redistributed (documented
     simplification — aggregated input graphs have no sinks).
@@ -147,9 +142,9 @@ def pagerank(
     release so the real iterated-join plan is inspectable (plan pins,
     plan audit); see triangle_count."""
     e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
+        F.col("src").alias("src"),
+        F.col("dst").alias("dst"),
+        F.col("w").cast("double").alias("w"),
     ).cache()
     nodes = (
         e.select(F.col("src").alias("node"))

@@ -21,11 +21,11 @@ from pyspark.sql import functions as F
 
 
 def join_broadcast_dim(
-    fact: DataFrame, dim: DataFrame, on: str | Sequence[str], how: str = "inner"
+    fact: DataFrame, dim: DataFrame, on: str | Sequence[str]
 ) -> DataFrame:
     """Equi-join with an explicitly broadcast dimension side (J2/J3 shape:
     job_logs⋈etl_jobs with the jobs dim broadcast — init.sql:70-78)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def join_fact_fact(
@@ -51,7 +51,6 @@ def join_prepartitioned(
     right: DataFrame,
     on: str | Sequence[str],
     num_partitions: int | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """Co-partition both sides on the join key before joining. When several
     downstream ops group/join on the same key, the single exchange is
@@ -69,7 +68,7 @@ def join_prepartitioned(
 
         left = spread_by(left, *cols)
         right = spread_by(right, *cols)
-    return left.join(right, on=on, how=how)
+    return left.join(right, on=on, how="inner")
 
 
 def join_salted(
@@ -77,7 +76,6 @@ def join_salted(
     right: DataFrame,
     key: str,
     salt_buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-salted equi-join: explode the small/replicable right side over
     ``salt_buckets`` salts, salt the left side randomly-but-deterministically
@@ -90,7 +88,7 @@ def join_salted(
     rsalted = right.withColumn(
         "__salt", F.explode(F.array([F.lit(i) for i in range(salt_buckets)]))
     )
-    out = lsalted.join(rsalted, on=[key, "__salt"], how=how)
+    out = lsalted.join(rsalted, on=[key, "__salt"], how="inner")
     return out.drop("__salt")
 
 
@@ -201,7 +199,6 @@ def range_join_points_to_intervals(
     start_col: str,
     end_col: str,
     bucket_seconds: int,
-    how: str = "inner",
 ) -> DataFrame:
     """Point-in-interval join (``start <= point < end``), the range join
     Spark would otherwise plan as a broadcast-nested-loop.
@@ -232,7 +229,7 @@ def range_join_points_to_intervals(
         ),
     )
     joined = points.withColumn("__bucket", p_bucket).join(
-        F.broadcast(expanded), "__bucket", how
+        F.broadcast(expanded), "__bucket", "inner"
     )
     return joined.filter(
         (F.col(point_col) >= F.col(start_col))

@@ -181,7 +181,6 @@ def global_row_number(
     out_col: str,
     bucket_key: Column | None = None,
     num_buckets: int | None = None,
-    cuts: list[float] | None = None,
 ) -> DataFrame:
     """Exact global ROW_NUMBER over ``order_by`` (columns or Column
     expressions, ``.desc()`` supported in non-leading positions) via
@@ -192,7 +191,7 @@ def global_row_number(
     numeric, null-free, and monotone in the order (see module
     docstring). Appends ``out_col``; preserves all input columns."""
     return _ranked_with_total(
-        df, order_by, out_col, None, bucket_key, num_buckets, cuts
+        df, order_by, out_col, None, bucket_key, num_buckets
     )
 
 
@@ -202,9 +201,6 @@ def global_ntile(
     n_buckets: int,
     *,
     out_col: str,
-    bucket_key: Column | None = None,
-    num_buckets: int | None = None,
-    cuts: list[float] | None = None,
 ) -> DataFrame:
     """Exact global NTILE(``n_buckets``) over ``order_by``: SQL-standard
     bucket sizing (first ``N mod b`` buckets take ⌈N/b⌉ rows, the rest
@@ -214,9 +210,7 @@ def global_ntile(
     over the input for N."""
     rn_col = f"{out_col}__rn"
     n_col = f"{out_col}__n"
-    ranked = _ranked_with_total(
-        df, order_by, rn_col, n_col, bucket_key, num_buckets, cuts
-    )
+    ranked = _ranked_with_total(df, order_by, rn_col, n_col, None, None)
     return ranked.withColumn(
         out_col, _ntile_bucket(rn_col, n_col, n_buckets)
     ).drop(rn_col, n_col)
@@ -315,7 +309,6 @@ def global_percent_rank(
     order_by,
     *,
     out_col: str,
-    bucket_key: Column | None = None,
     num_buckets: int | None = None,
     cuts: list[float] | None = None,
 ) -> DataFrame:
@@ -327,7 +320,7 @@ def global_percent_rank(
     rn_col = f"{out_col}__rn"
     n_col = f"{out_col}__n"
     ranked = _ranked_with_total(
-        df, order_by, rn_col, n_col, bucket_key, num_buckets, cuts
+        df, order_by, rn_col, n_col, None, num_buckets, cuts
     )
     n = F.col(n_col)
     pr = F.when(n > 1, (F.col(rn_col) - 1).cast("double") / (n - 1)).otherwise(

@@ -46,7 +46,6 @@ def ewma_per_key(
     tiebreak: str,
     value: str,
     alpha: float = 0.1,
-    max_history: int = 1000,
 ) -> DataFrame:
     """W5/A15 — exponential moving average, α=0.1
     (performance_monitor.hpp:378-392): y_i = α·x_i + (1−α)·y_{i−1}, seeded
@@ -56,10 +55,10 @@ def ewma_per_key(
     key's ordered series and fold it with ``aggregate`` — still fully
     distributed across keys. The per-key series is the reference's own
     in-memory ring buffer, and the reference caps it (W4: 1000 rows per
-    job, job_monitor_service.hpp:156-166); ``max_history`` makes that cap
-    explicit here so the collect_list state is bounded by contract, not
-    by assumption — only the most recent ``max_history`` observations
-    enter the fold (seeding from the oldest retained one). For truly
+    job, job_monitor_service.hpp:156-166), and so does this fold, so the
+    collect_list state is bounded by contract, not by assumption — only
+    the most recent 1000 observations enter the fold (seeding from the
+    oldest retained one). For truly
     unbounded live streams use ``streaming.stateful.ewma_stream``, which
     keeps one scalar per key instead of a series. Returns one row per
     key with the final EWMA.
@@ -69,8 +68,8 @@ def ewma_per_key(
     )
     recent = F.slice(
         ordered,
-        F.greatest(F.size(ordered) - F.lit(max_history - 1), F.lit(1)),
-        max_history,
+        F.greatest(F.size(ordered) - F.lit(999), F.lit(1)),
+        1000,
     )
     vals = F.transform(recent, lambda s: s["v"])
     ew = F.aggregate(
@@ -97,7 +96,6 @@ def ew_stats_per_key(
     tiebreak: str,
     value: str,
     alpha: float = 0.1,
-    max_history: int = 1000,
 ) -> DataFrame:
     """EWMA + exponentially-weighted VARIANCE per key (West 1979 update:
     μ_i = μ_{i−1} + α·δ, σ²_i = (1−α)(σ²_{i−1} + α·δ²), δ = x_i −
@@ -107,7 +105,7 @@ def ew_stats_per_key(
     threshold (ST6's fixed limits).
 
     Same shape as ewma_per_key: ordered per-key series (bounded by the
-    reference's own ``max_history`` ring-buffer cap), one struct-state
+    reference's own 1000-row ring-buffer cap), one struct-state
     fold per key, fully distributed across keys. Returns one row per
     key with (ewma, ewvar, ewstd)."""
     ordered = F.array_sort(
@@ -121,8 +119,8 @@ def ew_stats_per_key(
     )
     recent = F.slice(
         ordered,
-        F.greatest(F.size(ordered) - F.lit(max_history - 1), F.lit(1)),
-        F.lit(max_history),
+        F.greatest(F.size(ordered) - F.lit(999), F.lit(1)),
+        F.lit(1000),
     )
     a = F.lit(float(alpha))
     init = F.struct(

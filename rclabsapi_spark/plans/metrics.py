@@ -60,10 +60,10 @@ def derived_indicators(
     )
 
 
-def benchmarks(df: DataFrame, *, group_cols: tuple[str, ...] = ()) -> DataFrame:
+def benchmarks(df: DataFrame) -> DataFrame:
     """A9 — per-column worst (min) and best (max) of rate (>0 only),
-    error rate (inverted: min is best), memory/cpu efficiency
-    (job_monitor_service.cpp:608-665)."""
+    error rate (inverted: min is best), memory/cpu efficiency over the
+    whole input, one row (job_monitor_service.cpp:608-665)."""
     rate_pos = F.when(F.col("processing_rate") > 0, F.col("processing_rate"))
     aggs = [
         F.min(rate_pos).alias("worst_rate"),
@@ -75,8 +75,7 @@ def benchmarks(df: DataFrame, *, group_cols: tuple[str, ...] = ()) -> DataFrame:
         F.min(F.col("cpu_efficiency")).alias("worst_cpu_efficiency"),
         F.max(F.col("cpu_efficiency")).alias("best_cpu_efficiency"),
     ]
-    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    return grouped.agg(*aggs)
+    return df.groupBy().agg(*aggs)
 
 
 def performing_well(

@@ -62,20 +62,19 @@ _DEFAULT_CONF = {
 def get_spark(
     app_name: str = "rclabsapi-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS (default 32). Shuffle
-    partitions default to the core count — at real cluster scale this is
+    partitions are the core count — at real cluster scale this is
     instead sized to keep post-shuffle partitions under executor memory,
     and AQE coalesces the tail.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     conf = dict(_DEFAULT_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    conf["spark.sql.shuffle.partitions"] = cpus
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -138,10 +138,6 @@ def deterministic_survivor(
 def token_savings_sink(
     fp_dir: str,
     delta_dir: str,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    source_col: str = "source",
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` handler. Per micro-batch: ONE shuffle
     on the 32-byte hash (in-batch keeper window + store anti-lookup
@@ -151,7 +147,7 @@ def token_savings_sink(
     (``token_savings_totals``), so no read-modify-write race and no
     state to corrupt on replay.
 
-    Contract: ``key_col`` must be unique within a micro-batch — the
+    Contract: ``doc_id`` must be unique within a micro-batch — the
     statuses⋈batch join below is on that key, so a duplicated key would
     fan out and inflate n_docs/token totals. Enforced defensively on
     entry (ADVICE r12) with a DETERMINISTIC survivor — min_by on a
@@ -175,21 +171,19 @@ def token_savings_sink(
         if not accept_batch(n, fp_dir, delta_dir):
             return  # replay of a compacted batch: already folded
         batch = deterministic_survivor(
-            batch, key_col=key_col, text_col=text_col, source_col=source_col
+            batch, key_col="doc_id", text_col="text", source_col="source"
         )
         store = _read_or_empty(
             spark, fp_dir, "text_hash string, batch_id long"
         ).filter(F.col("batch_id") < n)
-        statuses = incremental_dedup(
-            batch, store, text_col=text_col, key_col=key_col
-        )
+        statuses = incremental_dedup(batch, store)
         flagged = statuses.join(
             batch.select(
-                key_col,
-                F.col(source_col).alias("source"),
-                token_count(F.col(text_col)).alias("n_tok"),
+                "doc_id",
+                F.col("source").alias("source"),
+                token_count(F.col("text")).alias("n_tok"),
             ),
-            key_col,
+            "doc_id",
         )
         dup = F.col("status") != "kept"
         deltas = flagged.groupBy("source").agg(

@@ -17,12 +17,11 @@ from pyspark.sql import functions as F
 def threshold_alerts(
     metrics: DataFrame,
     *,
-    value_col: str = "value",
     warn_at: float = 180.0,
     critical_at: float = 195.0,
 ) -> DataFrame:
     """ST6 — stateless threshold filter; works on batch or stream."""
-    v = F.col(value_col)
+    v = F.col("value")
     return metrics.filter(v > warn_at).withColumn(
         "severity", F.when(v > critical_at, "critical").otherwise("warning")
     ).withColumn("alert_type", F.lit("RESOURCE_ALERT"))

@@ -35,9 +35,6 @@ from rclabsapi_spark.llm.similarity import ivf_assign
 def churn_delta_sink(
     delta_dir: str,
     centroids: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` handler: assign the micro-batch to the frozen
     ``centroids`` (columns ``centroid_id``, ``cvec``) and write its
@@ -50,9 +47,7 @@ def churn_delta_sink(
 
         if not accept_batch(int(batch_id), delta_dir):
             return  # replay of a compacted batch: already folded
-        assigned = ivf_assign(
-            batch, vec_col=vec_col, key_col=key_col, centroids=centroids
-        )
+        assigned = ivf_assign(batch, centroids=centroids)
         deltas = assigned.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n_new")
         )

@@ -78,7 +78,6 @@ def crawl_budget_report(
     *,
     tau: float = 0.5,
     budget_multiplier: float = 1.25,
-    default_priority: float = 0.0,
 ) -> DataFrame:
     """Fold the cumulative per-domain counts and re-derive the crawl
     allocation — the same columns as the registered
@@ -92,7 +91,7 @@ def crawl_budget_report(
     priority itself depends on cumulative content quality, which is
     NOT delta-additive; counts are, which is exactly the split this
     twin rides. A domain arriving live with no frozen prior gets
-    ``default_priority`` (0.0 ⇒ zero weight and a zero target until
+    priority 0.0 (zero weight and a zero target until
     the next prior run — the allocator's documented Z-degenerate
     handling makes that an explicit "needs a prior first" signal, not
     a NULL). The delta store is read with an EXPLICIT schema via the
@@ -120,7 +119,7 @@ def crawl_budget_report(
     ).select(
         "domain",
         "n_docs",
-        F.coalesce("_prior", F.lit(float(default_priority))).alias(
+        F.coalesce("_prior", F.lit(0.0)).alias(
             "priority"
         ),
     )

@@ -63,22 +63,18 @@ def snapshot_ingest_sink(
     frozen_old_fps: DataFrame,
     delta_dir: str,
     seen_dir: str,
-    *,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    source_col: str = "source",
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` handler ingesting the new snapshot. Per batch:
     one quality/token scan (the registered card's exact per-row terms:
     ``bpe_ish_count`` tokens, ``round(quality_score·1e6)`` micro ints),
     one doc_id-keyed left join against the frozen fingerprints to flag
     moved (fp changed or doc newly added), then a |sources|-sized delta
-    aggregate. Contract: ``key_col`` unique across the stream (it's a
+    aggregate. Contract: ``doc_id`` unique across the stream (it's a
     snapshot); within-batch duplicates are collapsed by the shared
     total-ordering survivor so replays stay byte-identical."""
 
     old = frozen_old_fps.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.col("fp").alias("_fp_old"),
     )
 
@@ -89,16 +85,14 @@ def snapshot_ingest_sink(
         if not accept_batch(n, delta_dir, seen_dir):
             return  # replay of a compacted batch: already folded
         batch = deterministic_survivor(
-            batch, key_col=key_col, text_col=text_col, source_col=source_col
+            batch, key_col="doc_id", text_col="text", source_col="source"
         )
         per_doc = quality_features(
             batch,
-            text_col=text_col,
-            key_col=key_col,
             carry=(
-                F.col(source_col).alias("source"),
-                bpe_ish_count(F.col(text_col)).alias("n_tok"),
-                F.md5(F.col(text_col)).alias("_fp"),
+                F.col("source").alias("source"),
+                bpe_ish_count(F.col("text")).alias("n_tok"),
+                F.md5(F.col("text")).alias("_fp"),
             ),
         )
         # moved mirrors the registered card's diffrow predicate exactly:
@@ -108,7 +102,7 @@ def snapshot_ingest_sink(
         # keeps a NULL-text arrival counted as moved — a bare `!=`
         # would yield NULL there and silently drop it from the SUM
         # (the grid_term NULL class, caught in self-review r15).
-        flagged = per_doc.join(old, key_col, "left").withColumn(
+        flagged = per_doc.join(old, "doc_id", "left").withColumn(
             "_moved",
             (
                 F.col("_fp_old").isNull()
@@ -126,7 +120,7 @@ def snapshot_ingest_sink(
         )
         for df, out in (
             (deltas, delta_dir),
-            (batch.select(key_col), seen_dir),
+            (batch.select("doc_id"), seen_dir),
         ):
             (
                 df.withColumn("batch_id", F.lit(n))

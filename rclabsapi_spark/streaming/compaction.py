@@ -175,8 +175,6 @@ def compact_store(
     *,
     group_cols: tuple[str, ...] = (),
     sum_cols: tuple[str, ...] = (),
-    n_files: int = 8,
-    fs=None,
 ) -> int:
     """Fold the store's reader-visible rows into one compacted file set
     and GC the folded partitions. Returns the new ``upto``.
@@ -193,7 +191,7 @@ def compact_store(
     fold cost is paid, never after (ADVICE r15)."""
     from rclabsapi_spark.streaming.accounting import _read_or_empty
 
-    fs = fs or resolve_fs(path, spark)
+    fs = resolve_fs(path, spark)
 
     # entry orphan cleanup: partitions at/below the CURRENT compaction
     # point are invisible to readers and their content is already in
@@ -236,7 +234,7 @@ def compact_store(
     )
 
     out = os.path.join(path, _CDIR, f"u{upto}-{uuid.uuid4().hex[:8]}")
-    folded.coalesce(n_files).write.mode("overwrite").parquet(out)
+    folded.coalesce(8).write.mode("overwrite").parquet(out)
 
     # atomic manifest swap: readers flip from old view to new view in
     # one atomic rename; GC below is invisible to both views
@@ -258,14 +256,14 @@ def compact_store(
 
 
 def read_store(
-    spark: SparkSession, live: DataFrame, path: str, schema: str, *, fs=None
+    spark: SparkSession, live: DataFrame, path: str, schema: str
 ) -> DataFrame:
     """Manifest-aware view: live partitions newer than the compaction
     point unioned with the compacted file set. Called by
     ``accounting._read_or_empty`` so every twin reader resolves
     compaction without knowing about it; the ``batch_id > upto`` filter
     is partition-pruned (one partition directory per batch)."""
-    upto, cfile = compaction_state(path, fs=fs or resolve_fs(path, spark))
+    upto, cfile = compaction_state(path, fs=resolve_fs(path, spark))
     if cfile is None:
         return live
     return live.filter(F.col("batch_id") > upto).unionByName(

@@ -75,8 +75,6 @@ def binned_window_counts(
 def psi_vs_reference(
     counts: DataFrame,
     ref_shares: dict[int, float],
-    *,
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Fold per-window bin counts into a PSI score against a frozen
     reference share table: PSI_w = Σ_bins (q−p)·ln(q/p) with ε floors.
@@ -94,8 +92,8 @@ def psi_vs_reference(
         (F.col("n").cast("double") / w_tot).alias("q"),
         F.coalesce(ref_col[F.col("bin")], F.lit(0.0)).alias("p"),
     )
-    q = F.greatest(F.col("q"), F.lit(eps))
-    p = F.greatest(F.col("p"), F.lit(eps))
+    q = F.greatest(F.col("q"), F.lit(1e-6))
+    p = F.greatest(F.col("p"), F.lit(1e-6))
     # same 9dp-grid sum as the batch operator (operators/analytics.py::
     # psi_drift), so the replay-parity twin stays bit-identical
     from rclabsapi_spark.functions.scalars import grid_sum
@@ -115,12 +113,7 @@ def psi_vs_reference(
 # ---------------------------------------------------------------------------
 
 
-def centroid_delta_sink(
-    delta_dir: str,
-    *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-):
+def centroid_delta_sink(delta_dir: str):
     """``foreachBatch`` handler maintaining per-label centroid state as
     the embedding stream ingests: each micro-batch writes its
     per-(label, pos) component sums on the 9dp integer grid
@@ -147,8 +140,8 @@ def centroid_delta_sink(
         if not accept_batch(int(batch_id), delta_dir):
             return  # replay of a compacted batch: already folded
         comp = batch.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(vec_col).alias("pos", "x"),
+            F.col("label").alias("label"),
+            F.posexplode("embedding").alias("pos", "x"),
         ).withColumn("x", F.col("x").cast("double"))
         x_nano = F.floor(F.col("x") * 1000000000.0 + F.lit(0.5)).cast(
             "decimal(38,0)"

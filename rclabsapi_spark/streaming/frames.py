@@ -150,8 +150,6 @@ def frame_phash_sink(
     hash_dir: str,
     pair_dir: str,
     *,
-    grid: int = 8,
-    n_bands: int = 4,
     max_hamming: int = 3,
     key_cols: tuple[str, ...] = _KEYS,
     hash_fn: Callable[..., DataFrame] | None = None,
@@ -170,8 +168,8 @@ def frame_phash_sink(
     audio column (the gain-invariant energy-envelope hash): the
     blocking, exactly-once, and compaction semantics are hash-
     agnostic."""
-    if n_bands <= max_hamming:
-        raise ValueError("pigeonhole needs max_hamming < n_bands")
+    if max_hamming >= 4:
+        raise ValueError("pigeonhole needs max_hamming < n_bands (4)")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         from rclabsapi_spark.llm.multimodal import (
@@ -185,9 +183,7 @@ def frame_phash_sink(
             return  # replay of a compacted batch: already folded
         spark = batch.sparkSession
         hasher = hash_fn or (
-            lambda df: average_hash_bands(
-                df, grid=grid, n_bands=n_bands, key_cols=key_cols
-            )
+            lambda df: average_hash_bands(df, key_cols=key_cols)
         )
         # one decode+hash pass, three consumers below
         hashed = hasher(batch).cache()
@@ -195,7 +191,7 @@ def frame_phash_sink(
             _read_or_empty(
                 spark,
                 hash_dir,
-                hash_store_schema(n_bands, key_cols=key_cols),
+                hash_store_schema(4, key_cols=key_cols),
             )
             .filter(F.col("batch_id") < int(batch_id))
             .drop("batch_id")
@@ -203,13 +199,12 @@ def frame_phash_sink(
         in_batch = phash_near_dup_pairs(
             hashed,
             max_hamming=max_hamming,
-            n_bands=n_bands,
             key_cols=key_cols,
         )
         cross = _cross_pairs(
             hashed,
             store,
-            n_bands=n_bands,
+            n_bands=4,
             max_hamming=max_hamming,
             key_cols=key_cols,
         )

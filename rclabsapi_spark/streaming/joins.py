@@ -25,9 +25,7 @@ def interval_join_clicks_to_purchases(
     clicks: DataFrame,
     purchases: DataFrame,
     *,
-    key_col: str = "user_id",
     max_lag: str = "30 minutes",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Join each purchase to the clicks that PRECEDED it by at most
     ``max_lag`` for the same key: the attribution-candidate join, as a
@@ -38,17 +36,17 @@ def interval_join_clicks_to_purchases(
     (click ≤ purchase ≤ click + lag) gives the engine the state-expiry
     guarantee."""
     c = (
-        clicks.withWatermark("ts", watermark)
+        clicks.withWatermark("ts", "1 hour")
         .select(
-            F.col(key_col).alias("user_id"),
+            F.col("user_id").alias("user_id"),
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
     )
     p = (
-        purchases.withWatermark("ts", watermark)
+        purchases.withWatermark("ts", "1 hour")
         .select(
-            F.col(key_col).alias("user_id"),
+            F.col("user_id").alias("user_id"),
             F.col("ts").alias("purchase_ts"),
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),

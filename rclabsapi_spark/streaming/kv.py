@@ -62,15 +62,7 @@ def _kv_group(
     )
 
 
-def kv_ttl_stream(
-    updates: DataFrame,
-    *,
-    ttl_s: int,
-    key_col: str = "key",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    watermark: str = "0 seconds",
-) -> DataFrame:
+def kv_ttl_stream(updates: DataFrame, *, ttl_s: int) -> DataFrame:
     """SETEX-with-expiry-events over a stream of upserts: emits one
     ``set`` row per refreshed key per micro-batch (latest value wins
     within a batch) and one ``expire`` tombstone when the watermark
@@ -82,11 +74,11 @@ def kv_ttl_stream(
 
     return (
         updates.select(
-            updates[key_col].cast("string").alias("key"),
-            updates[value_col].cast("string").alias("value"),
-            updates[ts_col].cast("timestamp").alias("ts"),
+            updates["key"].cast("string").alias("key"),
+            updates["value"].cast("string").alias("value"),
+            updates["ts"].cast("timestamp").alias("ts"),
         )
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "0 seconds")
         .groupBy("key")
         .applyInPandasWithState(
             fn,

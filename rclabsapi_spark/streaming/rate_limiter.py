@@ -74,18 +74,14 @@ def _verdict_cols(matched_prefix: Column, limit: Column) -> list[Column]:
 def rate_limit_check(
     events: DataFrame,
     rules: list[tuple[str, int]] | None = None,
-    *,
-    ts_col: str = "ts",
-    client_col: str = "user_id",
-    endpoint_col: str = "event_type",
 ) -> DataFrame:
     """Batch replay: per-(client, endpoint, minute) counts vs the
     longest-prefix rule (isAllowed semantics, rate_limiter.cpp:48-90).
     One shuffle (the count); the rule verdict is a projection."""
     counts = events.groupBy(
-        F.col(client_col).alias("user_id"),
-        F.col(endpoint_col).alias("event_type"),
-        F.date_trunc("minute", F.col(ts_col)).alias("window_start"),
+        F.col("user_id").alias("user_id"),
+        F.col("event_type").alias("event_type"),
+        F.date_trunc("minute", F.col("ts")).alias("window_start"),
     ).agg(F.count(F.lit(1)).alias("request_count"))
     prefix, limit = compile_rule_match(F.col("event_type"), rules or RATE_RULES)
     return counts.select(
@@ -97,17 +93,11 @@ def rate_limit_check(
     )
 
 
-def rate_limit_check_dual(
-    events: DataFrame,
-    rules: list[tuple[str, int, int]] | None = None,
-    *,
-    ts_col: str = "ts",
-    client_col: str = "user_id",
-    endpoint_col: str = "event_type",
-) -> DataFrame:
+def rate_limit_check_dual(events: DataFrame) -> DataFrame:
     """The reference's FULL isAllowed: a request must clear BOTH the
     per-minute and the per-hour limit (rate_limiter.cpp:48-90 checks both
-    epoch windows; 206-214 derives them).
+    epoch windows; 206-214 derives them), with ``RATE_RULES``' minute
+    limits and 20× those as the hour limits.
 
     Physical shape: one shuffle for the minute counts, then the hour
     counts RE-AGGREGATE the minute counts (sum of ≤60 rows per key) —
@@ -127,11 +117,11 @@ def rate_limit_check_dual(
     loop exactly needs per-event sequential state, not a rollup."""
     from pyspark.sql.window import Window
 
-    rules3 = rules or [(p, m, m * 20) for p, m in RATE_RULES]
+    rules3 = [(p, m, m * 20) for p, m in RATE_RULES]
     minute = events.groupBy(
-        F.col(client_col).alias("user_id"),
-        F.col(endpoint_col).alias("event_type"),
-        F.date_trunc("minute", F.col(ts_col)).alias("minute_start"),
+        F.col("user_id").alias("user_id"),
+        F.col("event_type").alias("event_type"),
+        F.date_trunc("minute", F.col("ts")).alias("minute_start"),
     ).agg(F.count(F.lit(1)).alias("minute_count"))
 
     ep = F.col("event_type")
@@ -161,23 +151,17 @@ def rate_limit_check_dual(
     )
 
 
-def rate_limit_stream(
-    events: DataFrame,
-    rules: list[tuple[str, int]] | None = None,
-    *,
-    ts_col: str = "ts",
-    client_col: str = "user_id",
-    endpoint_col: str = "event_type",
-) -> DataFrame:
-    """Streaming variant: tumbling window + watermark. The 1-minute
-    watermark reproduces the reference's current+previous window retention
-    (rate_limiter.cpp:132-187) — older state is dropped by the store."""
+def rate_limit_stream(events: DataFrame) -> DataFrame:
+    """Streaming variant over ``RATE_RULES``: tumbling window +
+    watermark. The 1-minute watermark reproduces the reference's
+    current+previous window retention (rate_limiter.cpp:132-187) — older
+    state is dropped by the store."""
     counts = (
-        events.withWatermark(ts_col, "1 minute")
+        events.withWatermark("ts", "1 minute")
         .groupBy(
-            F.window(F.col(ts_col), "1 minute").alias("win"),
-            F.col(client_col).alias("user_id"),
-            F.col(endpoint_col).alias("event_type"),
+            F.window(F.col("ts"), "1 minute").alias("win"),
+            F.col("user_id").alias("user_id"),
+            F.col("event_type").alias("event_type"),
         )
         .agg(F.count(F.lit(1)).alias("request_count"))
         .select(
@@ -187,7 +171,7 @@ def rate_limit_stream(
             "request_count",
         )
     )
-    prefix, limit = compile_rule_match(F.col("event_type"), rules or RATE_RULES)
+    prefix, limit = compile_rule_match(F.col("event_type"), RATE_RULES)
     return counts.select(
         "user_id",
         "event_type",

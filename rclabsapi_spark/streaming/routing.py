@@ -44,8 +44,8 @@ _SUBS_SCHEMA = StructType(
 )
 
 
-def subscriptions_df(spark: SparkSession, subs=None) -> DataFrame:
-    return local_df(spark, subs or DEFAULT_SUBSCRIPTIONS, _SUBS_SCHEMA)
+def subscriptions_df(spark: SparkSession) -> DataFrame:
+    return local_df(spark, DEFAULT_SUBSCRIPTIONS, _SUBS_SCHEMA)
 
 
 def _match(filter_col: str, value_col: str):
@@ -56,28 +56,21 @@ def _match(filter_col: str, value_col: str):
     )
 
 
-def route_events(
-    events: DataFrame,
-    subscriptions: DataFrame,
-    *,
-    type_col: str = "event_type",
-    job_col: str = "user_id",
-    level_col: str = "level",
-) -> DataFrame:
+def route_events(events: DataFrame, subscriptions: DataFrame) -> DataFrame:
     """shouldReceiveMessage as a broadcast theta-join: (connection_id,
     event) pairs for every passing subscriber."""
     pred = (
-        _match("types", type_col)
-        & _match("job_ids", job_col)
-        & _match("levels", level_col)
+        _match("types", "event_type")
+        & _match("job_ids", "user_id")
+        & _match("levels", "level")
     )
     return (
         events.join(F.broadcast(subscriptions), pred, "inner")
         .select(
             "connection_id",
             "event_id",
-            F.col(job_col),
-            F.col(type_col),
-            F.col(level_col),
+            F.col("user_id"),
+            F.col("event_type"),
+            F.col("level"),
         )
     )

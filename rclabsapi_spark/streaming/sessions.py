@@ -22,23 +22,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def session_agg(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-) -> DataFrame:
+def session_agg(events: DataFrame, *, gap: str = "30 minutes") -> DataFrame:
     """Per-(key, session) aggregates via native session windows. Works
     identically on batch and streaming DataFrames (the streaming side
     adds a watermark first — see ``sessionize_stream``)."""
     return (
         events.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col)
+            F.session_window(F.col("ts"), gap).alias("w"), F.col("user_id")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            key_col,
+            "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -46,20 +40,8 @@ def session_agg(
     )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming sessionization: watermarked session-window aggregation.
     State per open session only; sessions emit (append mode) when the
     watermark passes their end."""
-    return session_agg(
-        events.withWatermark(ts_col, watermark),
-        ts_col=ts_col,
-        key_col=key_col,
-        gap=gap,
-    )
+    return session_agg(events.withWatermark("ts", "1 hour"))

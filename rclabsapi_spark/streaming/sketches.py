@@ -14,14 +14,8 @@ from pyspark.sql import functions as F
 from rclabsapi_spark.operators.approx import cms_buckets
 
 
-def cms_sketch_stream(
-    events: DataFrame,
-    *,
-    item_col: str,
-    depth: int = 4,
-    hex_digits: int = 2,
-) -> DataFrame:
-    """Maintain the depth × 16^hex_digits Count-Min counter table over a
+def cms_sketch_stream(events: DataFrame, *, item_col: str) -> DataFrame:
+    """Maintain the 4 × 16² Count-Min counter table over a
     stream: per micro-batch the (seed, bucket) counts fold into the
     running aggregate (complete/update mode). State is the fixed-size
     counter table itself — independent of stream length."""
@@ -31,9 +25,7 @@ def cms_sketch_stream(
             F.array(
                 *[
                     F.struct(F.lit(j).alias("seed"), b.alias("bucket"))
-                    for j, b in enumerate(
-                        cms_buckets(item, depth=depth, hex_digits=hex_digits)
-                    )
+                    for j, b in enumerate(cms_buckets(item))
                 ]
             )
         ).alias("sb")

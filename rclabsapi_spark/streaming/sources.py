@@ -23,12 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def stream_events_dir(
-    spark: SparkSession, path: str, schema, fmt: str = "parquet"
-) -> DataFrame:
+def stream_events_dir(spark: SparkSession, path: str, schema) -> DataFrame:
     """S4 — micro-batch tail of a growing directory
     (log_file_manager.cpp:649-670)."""
-    return spark.readStream.format(fmt).schema(schema).load(path)
+    return spark.readStream.format("parquet").schema(schema).load(path)
 
 
 def with_index_partition(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -43,8 +41,6 @@ def write_partitioned_sink(
     path: str,
     checkpoint: str,
     *,
-    partition_col: str = "index_date",
-    trigger_seconds: int | None = None,
     available_now: bool = False,
 ):
     """S5/ST10 — buffered, partitioned parquet sink; rotation ≙ date
@@ -53,12 +49,10 @@ def write_partitioned_sink(
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .partitionBy(partition_col)
+        .partitionBy("index_date")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
 
 
@@ -70,14 +64,13 @@ def ship_foreach_batch(
     max_retries: int = 3,
     retry_delay_s: float = 0.1,
     allowed_levels: list[str] | None = None,
-    level_col: str = "level",
 ):
     """S6/ST4 — batched shipping with per-destination level filter and
     bounded retry (log_aggregator.hpp:54-57, 230-256)."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if allowed_levels:
-            batch = batch.filter(F.col(level_col).isin(allowed_levels))
+            batch = batch.filter(F.col("level").isin(allowed_levels))
         attempt = 0
         while True:
             try:
@@ -133,8 +126,6 @@ def ship_http_destination(
     dest: HttpDestination,
     *,
     ts_col: str = "ts",
-    level_col: str = "level",
-    component_col: str = "component",
 ):
     """S6 concrete destination: ES bulk-API shipping over HTTP behind the
     ``ship_foreach_batch`` retry/filter harness (log_aggregator.hpp:24-64,
@@ -152,11 +143,11 @@ def ship_http_destination(
     prepared = df
     if dest.allowed_components:
         prepared = prepared.filter(
-            F.col(component_col).isin(list(dest.allowed_components))
+            F.col("component").isin(list(dest.allowed_components))
         )
     doc_cols = [c for c in prepared.columns]
     prepared = prepared.select(
-        F.col(level_col),
+        F.col("level"),
         F.date_format(F.col(ts_col), dest.index_pattern).alias("_index"),
         F.to_json(F.struct(*doc_cols)).alias("_doc"),
     )
@@ -193,7 +184,6 @@ def ship_http_destination(
         allowed_levels=(
             list(dest.allowed_levels) if dest.allowed_levels else None
         ),
-        level_col=level_col,
     )
 
 

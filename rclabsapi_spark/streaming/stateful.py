@@ -65,9 +65,6 @@ def throttle_progress(
     events: DataFrame,
     *,
     threshold: float = 5.0,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """ST7 — per-key progress throttling. Works on a streaming DataFrame
     (state store) and, for batch replay/testing, on a static one (single
@@ -79,15 +76,15 @@ def throttle_progress(
             pdfs,
             state,
             threshold=threshold,
-            ts_col=ts_col,
-            value_col=value_col,
+            ts_col="ts",
+            value_col="value",
         )
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].alias("ts"),
-            events[value_col].cast("double").alias("value"),
+            events["user_id"].alias("user_id"),
+            events["ts"].alias("ts"),
+            events["value"].cast("double").alias("value"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -139,14 +136,7 @@ def _ewma_group(
         yield pd.DataFrame(out, columns=["user_id", "ts", "value", "ewma"])
 
 
-def ewma_stream(
-    events: DataFrame,
-    *,
-    alpha: float = 0.1,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def ewma_stream(events: DataFrame, *, alpha: float = 0.1) -> DataFrame:
     """Per-key streaming EWMA via applyInPandasWithState. The batch
     equivalent (registry query ``w5_ewma``) uses a window expression; the
     streaming form carries one double of state per key — O(keys) state,
@@ -154,14 +144,14 @@ def ewma_stream(
 
     def fn(key, pdfs, state):
         return _ewma_group(
-            key, pdfs, state, alpha=alpha, ts_col=ts_col, value_col=value_col
+            key, pdfs, state, alpha=alpha, ts_col="ts", value_col="value"
         )
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].alias("ts"),
-            events[value_col].cast("double").alias("value"),
+            events["user_id"].alias("user_id"),
+            events["ts"].alias("ts"),
+            events["value"].cast("double").alias("value"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -224,14 +214,7 @@ def _scd2_group(
         )
 
 
-def scd2_stream(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    attr_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def scd2_stream(events: DataFrame) -> DataFrame:
     """Streaming CDC → SCD2 change rows (ST11's live job-status history:
     etl_job_manager.cpp:671-699 appends transitions as they happen).
 
@@ -259,10 +242,10 @@ def scd2_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].alias("ts"),
-            events[attr_col].alias("event_type"),
-            events[tiebreak_col].alias("tiebreak"),
+            events["user_id"].alias("user_id"),
+            events["ts"].alias("ts"),
+            events["event_type"].alias("event_type"),
+            events["event_id"].alias("tiebreak"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -282,7 +265,6 @@ def stream_exact_dedup(
     *,
     key_cols: list[str] | None = None,
     ts_col: str = "ts",
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming exact dedup — the dedup tier for live ingestion.
 
@@ -294,7 +276,7 @@ def stream_exact_dedup(
     (``llm.text.fingerprint`` md5) as the key to dedup by content rather
     than by id; duplicates separated by more than the watermark are
     re-admitted by design (state cannot be unbounded)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark(ts_col, "10 minutes").dropDuplicatesWithinWatermark(
         key_cols or ["event_id"]
     )
 
@@ -373,13 +355,7 @@ def _funnel_group(
     )
 
 
-def funnel_stream(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_stream(events: DataFrame) -> DataFrame:
     """Streaming ordered funnel (view → click-after-view →
     purchase-after-click), the live twin of the batch `w_funnel_stages`
     query — the reference pushes exactly this progression live over its
@@ -398,9 +374,9 @@ def funnel_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].cast("timestamp").alias("ts"),
-            events[type_col].alias("event_type"),
+            events["user_id"].alias("user_id"),
+            events["ts"].cast("timestamp").alias("ts"),
+            events["event_type"].alias("event_type"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -452,14 +428,7 @@ def _transitions_group(
     )
 
 
-def transitions_stream(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def transitions_stream(events: DataFrame) -> DataFrame:
     """Streaming Markov transition counts — the live twin of the batch
     ``path_transitions`` query (operators/analytics.py): summing the
     emitted (from_type, to_type, n) increments over any prefix of the
@@ -473,10 +442,10 @@ def transitions_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].cast("timestamp").alias("ts"),
-            events[type_col].alias("event_type"),
-            events[id_col].alias("event_id"),
+            events["user_id"].alias("user_id"),
+            events["ts"].cast("timestamp").alias("ts"),
+            events["event_type"].alias("event_type"),
+            events["event_id"].alias("event_id"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -522,11 +491,6 @@ def attribution_stream(
     events: DataFrame,
     *,
     conversion_type: str = "purchase",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Streaming last-touch attribution — the live twin of the batch
     ``attr_last_touch`` query (operators/analytics.py::
@@ -540,11 +504,11 @@ def attribution_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].cast("timestamp").alias("ts"),
-            events[type_col].alias("event_type"),
-            events[id_col].alias("event_id"),
-            events[value_col].alias("value"),
+            events["user_id"].alias("user_id"),
+            events["ts"].cast("timestamp").alias("ts"),
+            events["event_type"].alias("event_type"),
+            events["event_id"].alias("event_id"),
+            events["value"].alias("value"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -598,9 +562,6 @@ def heartbeat_stream(
     events: DataFrame,
     *,
     threshold_s: int = 86400,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "0 seconds",
 ) -> DataFrame:
     """Streaming dead-man switch — the live twin of the batch
     ``dq_heartbeat_gaps`` trailing-silence audit and the reference's job
@@ -615,10 +576,10 @@ def heartbeat_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].cast("timestamp").alias("ts"),
+            events["user_id"].alias("user_id"),
+            events["ts"].cast("timestamp").alias("ts"),
         )
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "0 seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -661,15 +622,7 @@ def _ew_stats_group(
         )
 
 
-def ew_stats_stream(
-    events: DataFrame,
-    *,
-    alpha: float = 0.1,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def ew_stats_stream(events: DataFrame, *, alpha: float = 0.1) -> DataFrame:
     """Streaming twin of operators/windows.py::ew_stats_per_key: per-key
     EWMA and exponentially-weighted std as running state (two doubles per
     key), replay-deterministic under the in-order feed contract."""
@@ -679,10 +632,10 @@ def ew_stats_stream(
 
     return (
         events.select(
-            events[key_col].alias("user_id"),
-            events[ts_col].cast("timestamp").alias("ts"),
-            events[id_col].alias("event_id"),
-            events[value_col].cast("double").alias("value"),
+            events["user_id"].alias("user_id"),
+            events["ts"].cast("timestamp").alias("ts"),
+            events["event_id"].alias("event_id"),
+            events["value"].cast("double").alias("value"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(

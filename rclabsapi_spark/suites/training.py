@@ -271,15 +271,11 @@ def q_emb_norms(spark, sf_dir):
     exact selections, and every final round uses the half-up floor
     form."""
     from rclabsapi_spark.functions.scalars import round_half_up
+    from rclabsapi_spark.llm.similarity import norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
-    sq = F.aggregate(
-        F.zip_with(v, v, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norms = emb.select("label", F.sqrt(sq).alias("norm"))
+    norms = emb.select("label", norm(v).alias("norm"))
     norm_nano = F.floor(
         F.col("norm") * 1000000000.0 + F.lit(0.5)
     ).cast("decimal(38,0)")

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
-"""Dump the plans of named registered queries.
+"""Dump the plans of registered queries.
 
     python scripts/dump_plans.py <outdir> <suffix> [names...]
     python scripts/dump_plans.py --normalized <outdir> <suffix> [names...]
 
-Writes <outdir>/<name>_<suffix>.txt. Queries exposing a ``materialize``
+Writes <outdir>/<name>_<suffix>.txt for each named query, or for every
+registered query when no name is given. Queries exposing a ``materialize``
 kwarg are built with materialize=False so the real pre-checkpoint plan
 is dumped (the plan-pin convention).
 
@@ -64,7 +65,7 @@ def main() -> None:
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registered()
-    for name in names:
+    for name in names or sorted(reg):
         spec = reg[name]
         kw = {}
         if "materialize" in inspect.signature(spec.fn).parameters:

@@ -26,7 +26,7 @@ def _vectors(spark, ids):
 _CHECKS = {
     "pq_subspaces_do_not_divide_dim": (
         lambda spark: pq_train(None, n_subspaces=3, dim=4),
-        "dim must divide n_subspaces",
+        "n_subspaces must divide dim",
     ),
     "pq_missing_seed_ids": (
         lambda spark: pq_train(

@@ -153,3 +153,108 @@ def test_no_unreferenced_top_level_definitions():
             ):
                 dead.append(f"{p.relative_to(root)}:{node.name}")
     assert dead == []
+
+
+# Defaulted parameters no caller sets that stay parameters, each with
+# its reason. The grid helpers and their DuckDB mirrors are reached by
+# 110 queries; a constant in their bodies would change the source those
+# queries' verification digests cover without changing any plan or
+# oracle string.
+_GRID = "the 9dp integer grid the Spark helper and its oracle mirror share"
+_DECIMALS = "the 6dp output rounding the helper and its oracle mirror share"
+_UNSET_DEFAULT_ALLOW = {
+    "rclabsapi_spark/functions/scalars.py:fmt_no_trailing_zeros:decimals": (
+        "the 6dp fixed-point width of the reference's ostream trimming"
+    ),
+    "rclabsapi_spark/functions/scalars.py:grid_mean:decimals": _DECIMALS,
+    "rclabsapi_spark/functions/scalars.py:grid_mean:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:sql_grid_mean:decimals": _DECIMALS,
+    "rclabsapi_spark/functions/scalars.py:sql_grid_mean:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:grid_sum:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:sql_grid_sum:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:grid_ratio:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:sql_grid_ratio:grid": _GRID,
+    "rclabsapi_spark/functions/scalars.py:grid_term:grid": _GRID,
+}
+
+
+def _unset_defaults() -> list[str]:
+    """``path:function:parameter`` for each defaulted parameter of an
+    undecorated top-level package function that no call site in the
+    package, the tests, the scripts, ``perfbench/``, ``bench.py`` or
+    ``__spark_entry__.py`` passes. Calls are matched by name (an
+    ``import … as`` alias counts as its target); ``*args`` passes every
+    positional slot, and ``**name`` passes the keys of a ``name =
+    dict(…)`` in the same file, or every parameter when there is none."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    files = [
+        p
+        for d in ("rclabsapi_spark", "tests", "scripts", "perfbench")
+        for p in (root / d).rglob("*.py")
+    ] + [root / "bench.py", root / "__spark_entry__.py"]
+    calls = defaultdict(list)  # callee name -> [(n positional, keywords)]
+    for p in files:
+        tree = ast.parse(p.read_text())
+        alias, dicts = {}, defaultdict(set)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                alias.update(
+                    (a.asname, a.name) for a in node.names if a.asname
+                )
+            elif (
+                isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Name)
+                and node.value.func.id == "dict"
+            ):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        dicts[t.id].update(k.arg for k in node.value.keywords)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            npos = len(node.args)
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                npos = float("inf")
+            kws = set()
+            for k in node.keywords:
+                if k.arg is not None:
+                    kws.add(k.arg)
+                elif isinstance(k.value, ast.Name) and k.value.id in dicts:
+                    kws |= dicts[k.value.id]
+                else:
+                    kws.add("**")
+            calls[alias.get(name, name)].append((npos, kws))
+    unset = []
+    for p in sorted((root / "rclabsapi_spark").rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if not isinstance(node, ast.FunctionDef) or node.decorator_list:
+                continue
+            a = node.args
+            pos = [x.arg for x in a.posonlyargs + a.args]
+            kwonly = [x.arg for x in a.kwonlyargs]
+            defaulted = pos[len(pos) - len(a.defaults):] + [
+                x for x, d in zip(kwonly, a.kw_defaults) if d is not None
+            ]
+            for arg in defaulted:
+                i = pos.index(arg) if arg in pos else None
+                if not any(
+                    arg in kws
+                    or "**" in kws
+                    or (i is not None and npos > i)
+                    for npos, kws in calls[node.name]
+                ):
+                    unset.append(f"{p.relative_to(root)}:{node.name}:{arg}")
+    return unset
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    """A default that no caller varies belongs in the body as a
+    constant, so every defaulted parameter is passed somewhere."""
+    assert sorted(set(_unset_defaults()) - set(_UNSET_DEFAULT_ALLOW)) == []
